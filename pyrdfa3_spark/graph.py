@@ -529,7 +529,7 @@ class SparkGraph:
             # the serializer facade and the SPARQL matcher can never
             # diverge on what counts as a term
             df = df.withColumn("obj_is_iri",
-                               G._lexical_is_iri(F.col("obj")))
+                               G._lexical_is_iri("obj"))
         for c in ("obj_lang", "obj_datatype"):
             if c not in df.columns:
                 df = df.withColumn(c, F.lit(None).cast("string"))

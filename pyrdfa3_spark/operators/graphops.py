@@ -30,6 +30,17 @@ TRIPLE_KEY = ["subj", "pred", "obj", "obj_is_iri", "obj_lang",
 _VIRTUAL_PRED = "\x00path"
 
 
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal: backslash and quote
+    escaped, every other character (newline, NUL, non-ASCII) verbatim
+    — the SQL-text compilers quote every constant through here."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
 def dedup_triples(triples: DataFrame, per_document: bool = True) -> DataFrame:
     """RDF set semantics (E16; rdflib Graph is a set).  Per-document by
     default — matching the reference's one-graph-per-source scoping —
@@ -429,11 +440,18 @@ def shape_names(var: str) -> tuple[str, str, str]:
             f"{SHAPE_PREFIX}{var}_dt")
 
 
-def _lexical_is_iri(col):
-    """Best-effort shape for frames without shape columns: a term with
-    an IRI scheme or a bnode label is a term, anything else a plain
-    literal (same inference the serializer facade uses)."""
-    return col.rlike("^[A-Za-z][A-Za-z0-9+.-]*:") | col.startswith("_:")
+def _lexical_is_iri_sql(expr: str) -> str:
+    """Best-effort shape for frames without shape columns, as SQL text
+    over ``expr``: a term with an IRI scheme or a bnode label is a
+    term, anything else a plain literal (same inference the serializer
+    facade uses)."""
+    return (f"({expr} RLIKE '^[A-Za-z][A-Za-z0-9+.-]*:' "
+            f"OR startswith({expr}, '_:'))")
+
+
+def _lexical_is_iri(name: str):
+    """:func:`_lexical_is_iri_sql` as a Column over column ``name``."""
+    return F.expr(_lexical_is_iri_sql(_sql_ident(name)))
 
 
 def ensure_shape_companions(df: DataFrame, shape_vars) -> DataFrame:
@@ -443,7 +461,7 @@ def ensure_shape_companions(df: DataFrame, shape_vars) -> DataFrame:
     for v in shape_vars or ():
         iri, lang, dt = shape_names(v)
         if v in df.columns and iri not in df.columns:
-            df = (df.withColumn(iri, _lexical_is_iri(F.col(v)))
+            df = (df.withColumn(iri, _lexical_is_iri(v))
                   .withColumn(lang, F.lit(None).cast("string"))
                   .withColumn(dt, F.lit(None).cast("string")))
     return df
@@ -462,7 +480,7 @@ def repair_adopted_companions(df: DataFrame, shape_vars) -> DataFrame:
             df = df.withColumn(
                 iri,
                 F.when(F.col(iri).isNull() & F.col(v).isNotNull(),
-                       _lexical_is_iri(F.col(v)))
+                       _lexical_is_iri(v))
                 .otherwise(F.col(iri)))
     return df
 
@@ -634,7 +652,7 @@ def leftjoin_filter(sols: DataFrame, sub: DataFrame,
                          right_nullable=right_nullable, how="inner",
                          _left_ready=True)
     for e in filters or []:
-        merged = merged.filter(F.expr(e))
+        merged = merged.filter(e)
     unmatched = sols.join(
         merged.select("__ljid").dropDuplicates(), "__ljid",
         "left_anti")
@@ -713,7 +731,7 @@ def bgp_match(triples: DataFrame,
               patterns: list[tuple[str, str, str]],
               optional: list[tuple[str, str, str]] | None = None,
               filters: list[str] | None = None,
-              shape_vars=None) -> DataFrame:
+              shape_vars=None, path_edges: bool = True) -> DataFrame:
     """Basic-graph-pattern matching — the SPARQL SELECT core the
     reference's consumers run over its emitted graphs (pyrdfa3 hands an
     rdflib Graph to SPARQL; this is the lake-side equivalent over the
@@ -728,22 +746,28 @@ def bgp_match(triples: DataFrame,
     variables.
 
     ``filters`` are SPARQL FILTER expressions as SQL boolean strings
-    over the variable columns (e.g. ``"name > 'K'"``); they compile via
-    ``F.expr`` so Catalyst folds them into the join tree — a filter
-    touching one pattern's variables is pushed below the joins all the
-    way to the scan.
+    over the variable columns (e.g. ``"name > 'K'"``); they apply as
+    SQL text (``filter(str)``) so Catalyst folds them into the join
+    tree — a filter touching one pattern's variables is pushed below
+    the joins all the way to the scan.
 
-    Spark-first shape: each pattern compiles to a filtered projection of
-    the SAME triples frame (constant positions become scan predicates —
-    pushed down to parquet), and patterns join pairwise on their shared
-    variables.  Catalyst plans the join order/strategy; AQE broadcasts
-    selective patterns and splits skewed join keys at runtime.  Patterns
-    are greedily reordered so every join shares at least one variable
-    with the frame built so far — a disjoint pattern would be a
-    cartesian product and raises instead.
+    Spark-first shape: each pattern compiles to ONE filter and ONE
+    projection of the SAME triples frame, both as SQL text (constant
+    positions become scan predicates — pushed down to parquet), and
+    patterns join pairwise on their shared variables.  Catalyst plans
+    the join order/strategy; AQE broadcasts selective patterns and
+    splits skewed join keys at runtime.  Patterns are greedily
+    reordered so every join shares at least one variable with the
+    frame built so far — a disjoint pattern would be a cartesian
+    product and raises instead.
+
+    ``path_edges=False`` promises that the frame holds none of the
+    reserved NUL-prefixed virtual edges the SPARQL front end's
+    property-path expansion unions into its working frame, so a
+    variable predicate needs no filter excluding them.
     """
     return _match(triples, ("subj", "pred", "obj"), patterns,
-                  optional, filters, shape_vars)
+                  optional, filters, shape_vars, path_edges)
 
 
 def bgp_match_quads(quads: DataFrame,
@@ -768,33 +792,36 @@ def bgp_match_quads(quads: DataFrame,
 
 
 def _match(frame, positions, patterns, optional, filters,
-           shape_vars=None):
+           shape_vars=None, path_edges=True):
     shape = frozenset(shape_vars or ())
     shaped = "obj_is_iri" in frame.columns
 
-    def companions(pos: str, var: str) -> list:
+    def companions(pos: str, var: str) -> list[str]:
         """The three shape columns for a tracked variable, by binding
         position: the object carries the store's shape (or the lexical
         inference on a shapeless frame); subject / predicate / graph
         terms are IRIs-or-bnodes by the data model."""
-        iri, lang, dt = shape_names(var)
-        null = F.lit(None).cast("string")
+        iri, lang, dt = (_sql_ident(c) for c in shape_names(var))
+        null = "CAST(NULL AS STRING)"
         if pos == "obj":
             if shaped:
-                return [F.col("obj_is_iri").alias(iri),
-                        F.col("obj_lang").alias(lang),
-                        F.col("obj_datatype").alias(dt)]
-            return [_lexical_is_iri(F.col("obj")).alias(iri),
-                    null.alias(lang), null.alias(dt)]
-        return [F.lit(True).alias(iri), null.alias(lang),
-                null.alias(dt)]
+                return [f"obj_is_iri AS {iri}", f"obj_lang AS {lang}",
+                        f"obj_datatype AS {dt}"]
+            return [f"{_lexical_is_iri_sql('obj')} AS {iri}",
+                    f"{null} AS {lang}", f"{null} AS {dt}"]
+        return [f"true AS {iri}", f"{null} AS {lang}", f"{null} AS {dt}"]
 
     def compile_one(pat):
+        """One pattern -> ONE filter and ONE projection, both as SQL
+        text: building a Column costs a dozen driver->JVM round trips
+        per call and every intermediate DataFrame is analysed eagerly,
+        while ``filter(str)`` / ``selectExpr`` cost one call each.
+        Constants are quoted by :func:`sql_str`."""
         if len(pat) != len(positions):
             raise ValueError(
                 f"pattern {pat} has {len(pat)} terms; expected "
                 f"{len(positions)} {positions}")
-        df = frame
+        conds = []
         cols = []
         seen: dict[str, str] = {}
         for pos, term in zip(positions, pat):
@@ -804,18 +831,18 @@ def _match(frame, positions, patterns, optional, filters,
                 # predicates only — never the reserved \x00path*
                 # virtual edges a sibling property-path pattern
                 # materialized into the shared working frame
-                if pos == "pred":
-                    df = df.filter(
-                        ~F.col("pred").startswith(_VIRTUAL_PRED))
+                if pos == "pred" and path_edges:
+                    conds.append(
+                        f"NOT startswith(pred, {sql_str(_VIRTUAL_PRED)})")
                 if var in seen:      # repeated variable inside a pattern
-                    df = df.filter(F.col(pos) == F.col(seen[var]))
+                    conds.append(f"{pos} = {seen[var]}")
                 else:
                     seen[var] = pos
-                    cols.append(F.col(pos).alias(var))
+                    cols.append(f"{pos} AS {_sql_ident(var)}")
                     if var in shape:
                         cols.extend(companions(pos, var))
             else:
-                df = df.filter(F.col(pos) == str(term))
+                conds.append(f"{pos} = {sql_str(str(term))}")
                 # an EXPLICITLY tagged literal ("x"@en / "x"^^<dt>)
                 # constrains the term shape, not just the lexical form
                 # (implicit grammar shapes — bare 42 — stay lexical,
@@ -829,17 +856,17 @@ def _match(frame, positions, patterns, optional, filters,
                             f"shape-tagged literal pattern {pat} "
                             "needs a frame with literal-shape columns "
                             "(obj_is_iri/obj_lang/obj_datatype)")
-                    df = df.filter(~F.col("obj_is_iri"))
+                    conds.append("NOT obj_is_iri")
                     if lg:
-                        df = df.filter(
-                            F.lower(F.col("obj_lang")) == lg.lower())
+                        conds.append(
+                            f"lower(obj_lang) = {sql_str(lg.lower())}")
                     else:
-                        df = df.filter(
-                            F.col("obj_lang").isNull()
-                            & (F.col("obj_datatype") == d))
+                        conds.append("obj_lang IS NULL AND "
+                                     f"obj_datatype = {sql_str(d)}")
         if not cols:
             raise ValueError(f"pattern {pat} binds no variables")
-        return set(seen), df.select(*cols)
+        df = frame.filter(" AND ".join(conds)) if conds else frame
+        return set(seen), df.selectExpr(*cols)
 
     compiled = [compile_one(p) for p in patterns]
     bound, out = compiled[0]
@@ -885,7 +912,7 @@ def _match(frame, positions, patterns, optional, filters,
                 inner_f.append(e)
         try:
             sub = _match(frame, positions, grp["patterns"], None,
-                         inner_f or None, shape)
+                         inner_f or None, shape, path_edges)
         except AnalysisException as exc:
             # an unresolved column: the filter references a variable
             # bound in NEITHER the group nor the outer operands
@@ -912,7 +939,7 @@ def _match(frame, positions, patterns, optional, filters,
                               how="left")
         bound |= vs
     for expr in filters or []:
-        out = out.filter(F.expr(expr))
+        out = out.filter(expr)
     return out
 
 
@@ -1073,59 +1100,59 @@ def construct_solutions(sols: DataFrame,
         t = str(t)  # parser terms may be str subclasses
         # BIND/aggregate-bound variables are typed columns; the
         # lexical triple model stores the string form
-        return (F.col(t[1:]).cast("string") if t.startswith("?")
-                else F.lit(t))
+        return (f"CAST({_sql_ident(t[1:])} AS STRING)"
+                if t.startswith("?") else sql_str(t))
+
+    def opt_str(v):
+        return "CAST(NULL AS STRING)" if v is None else sql_str(v)
 
     if obj_shapes is not None and len(obj_shapes) != len(template):
         raise ValueError("obj_shapes must align with template")
     if graphs is not None and len(graphs) != len(template):
         raise ValueError("graphs must align with template")
 
+    # the instantiation is SQL text (one selectExpr), like the
+    # matcher's patterns: a Column per template field would cost a
+    # dozen driver->JVM round trips each
     def fields(i, s, p, o):
         subj = term(s)
         if graphs is not None and str(graphs[i]).startswith("?"):
             # unbound graph binding -> no instantiation for this row:
             # poison the subject so the incomplete-row filter drops it
-            subj = F.when(F.col(str(graphs[i])[1:]).isNotNull(), subj)
-        out = [subj.alias("subj"), term(p).alias("pred"),
-               term(o).alias("obj")]
+            subj = (f"CASE WHEN {_sql_ident(str(graphs[i])[1:])} "
+                    f"IS NOT NULL THEN {subj} END")
+        out = [("subj", subj), ("pred", term(p)), ("obj", term(o))]
         if graphs is not None:
             gt = graphs[i]
-            gcol = (F.col(str(gt)[1:]).cast("string")
-                    if str(gt).startswith("?")
-                    else F.lit(gt).cast("string"))
-            out.append(gcol.alias("graph"))
+            out.append(("graph", term(gt) if str(gt).startswith("?")
+                        else opt_str(gt)))
         if obj_shapes is not None:
             if obj_shapes[i] == "binding":
-                iri, lang, dt = shape_names(str(o)[1:])
+                iri, lang, dt = (_sql_ident(c)
+                                 for c in shape_names(str(o)[1:]))
                 # a NULL companion (BIND/subquery-bound value — shape
                 # unknown) falls back to the engine-wide lexical
                 # inference: NULL obj_is_iri would serialize as an
                 # IRI, silently corrupting derived literals
-                out += [F.coalesce(F.col(iri).cast("boolean"),
-                                   _lexical_is_iri(term(o)))
-                        .alias("obj_is_iri"),
-                        F.col(lang).cast("string").alias("obj_lang"),
-                        F.col(dt).cast("string")
-                        .alias("obj_datatype")]
+                out += [("obj_is_iri",
+                         f"coalesce(CAST({iri} AS BOOLEAN), "
+                         f"{_lexical_is_iri_sql(term(o))})"),
+                        ("obj_lang", f"CAST({lang} AS STRING)"),
+                        ("obj_datatype", f"CAST({dt} AS STRING)")]
             else:
                 is_iri, lang, dtype = obj_shapes[i]
-                out += [F.lit(bool(is_iri)).alias("obj_is_iri"),
-                        F.lit(lang).cast("string").alias("obj_lang"),
-                        F.lit(dtype).cast("string")
-                        .alias("obj_datatype")]
-        return out
+                out += [("obj_is_iri", "true" if is_iri else "false"),
+                        ("obj_lang", opt_str(lang)),
+                        ("obj_datatype", opt_str(dtype))]
+        return "named_struct(" + ", ".join(
+            f"'{name}', {e}" for name, e in out) + ")"
 
-    cols = (["subj", "pred", "obj"]
-            + (["graph"] if graphs is not None else [])
-            + (["obj_is_iri", "obj_lang", "obj_datatype"]
-               if obj_shapes is not None else []))
-    rows = F.array(*[F.struct(*fields(i, s, p, o))
-                     for i, (s, p, o) in enumerate(template)])
-    out = (sols.select(F.explode(rows).alias("t"))
-           .select(*[f"t.{c}" for c in cols])
-           .filter(F.col("subj").isNotNull() & F.col("pred").isNotNull()
-                   & F.col("obj").isNotNull()))
+    rows = ", ".join(fields(i, s, p, o)
+                     for i, (s, p, o) in enumerate(template))
+    out = (sols.selectExpr(f"explode(array({rows})) AS t")
+           .selectExpr("t.*")
+           .filter("subj IS NOT NULL AND pred IS NOT NULL "
+                   "AND obj IS NOT NULL"))
     return out.dropDuplicates()
 
 
@@ -1325,7 +1352,7 @@ def bgp_values(triples: DataFrame,
                rows: list[tuple],
                optional: list[tuple[str, str, str]] | None = None,
                filters: list[str] | None = None,
-               shape_vars=None) -> DataFrame:
+               shape_vars=None, path_edges: bool = True) -> DataFrame:
     """SPARQL VALUES: constrain (and extend) BGP solutions with an
     inline binding table.  ``var_names`` are the VALUES variables (no
     ``?``), ``rows`` their bindings; ``None`` is UNDEF — that variable
@@ -1344,7 +1371,8 @@ def bgp_values(triples: DataFrame,
         if len(r) != len(var_names):
             raise ValueError(f"VALUES row {r} arity != {var_names}")
     sols = bgp_match(triples, patterns, optional=optional,
-                     filters=filters, shape_vars=shape_vars)
+                     filters=filters, shape_vars=shape_vars,
+                     path_edges=path_edges)
     shared = [v for v in var_names if v in sols.columns]
     if not shared:
         raise ValueError(
@@ -1461,7 +1489,8 @@ def select_solutions(sols: DataFrame,
                 raise ValueError(
                     f"ORDER BY references non-projected columns {bad} "
                     "under DISTINCT — project them or drop DISTINCT")
-            out = out.select(*project)
+            if out.columns != project:
+                out = out.select(*project)
         out = out.dropDuplicates()
         if keys:
             out = out.orderBy(*keys)
@@ -1472,7 +1501,7 @@ def select_solutions(sols: DataFrame,
         # afterwards preserves the sort
         if keys:
             out = out.orderBy(*keys)
-        if project:
+        if project and out.columns != project:
             out = out.select(*project)
     if offset:
         if not order_by:
@@ -1537,7 +1566,7 @@ def solution_agg(sols: DataFrame, group_by: list[str],
         exprs.append(e.alias(name))
     out = sols.groupBy(*group_by).agg(*exprs)
     if having:
-        out = out.filter(F.expr(having))
+        out = out.filter(having)
     return out
 
 

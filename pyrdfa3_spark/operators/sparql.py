@@ -108,11 +108,13 @@ it is the XPath type error -> NULL).
 
 Scale note: parsing is driver-side string work on a query of bytes;
 every execution decision (join order, broadcast, path closure) is the
-underlying operator's — this module adds no plan shape of its own.
+underlying operator's — this module adds no plan shape of its own
+beyond ASK's limit-1 take.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 
 from pyspark.sql import DataFrame
@@ -639,7 +641,7 @@ class _Parser:
             body = (f"CASE WHEN __i RLIKE {self._ABS_IRI_RE} "
                     f"THEN __i "
                     f"WHEN __i RLIKE {self._REL_PATH_RE} "
-                    f"THEN concat({_sql_str(prefix)}, __i) "
+                    f"THEN concat({G.sql_str(prefix)}, __i) "
                     f"ELSE CAST(NULL AS STRING) END")
         else:
             body = (f"CASE WHEN __i RLIKE {self._ABS_IRI_RE} "
@@ -725,7 +727,7 @@ class _Parser:
             return v
         if k == "STRING":
             self.next()
-            return _sql_str(_unquote(v))
+            return G.sql_str(_unquote(v))
         if k == "KW" and v in ("TRUE", "FALSE"):
             self.next()
             return v.lower()
@@ -751,7 +753,7 @@ class _Parser:
                 raise SparqlUnsupported(
                     f"extension function call <{iri}> (only the "
                     "xsd:* constructor casts of §17.5 are built in)")
-            return _sql_str(iri)
+            return G.sql_str(iri)
         if k == "NAME" and v.upper() == "REGEX":
             self.next()
             self.eat("OP", "(")
@@ -764,7 +766,7 @@ class _Parser:
             self.eat("OP", ")")
             if "i" in flags:
                 pat = "(?i)" + pat
-            return f"({target} RLIKE {_sql_str(pat)})"
+            return f"({target} RLIKE {G.sql_str(pat)})"
         if k == "NAME" and v.upper() in self._NULLARY:
             fn = v.upper()
             self.next()
@@ -1450,10 +1452,6 @@ def _unquote(tok: str) -> str:
     return re.sub(r"\\(u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8}|.)", sub, body)
 
 
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 # ------------------------------------------------------------------ #
 # query forms
 # ------------------------------------------------------------------ #
@@ -1788,24 +1786,31 @@ def _expand_paths(triples: DataFrame, groups: list[dict],
                   keep_shape: bool = False) -> DataFrame:
     """Rewrite non-plain path predicates to virtual predicates and
     union their materialized edges into the working frame (the same
-    composition the path operators document).  Nested paths (e.g.
+    composition the path operators document).  Without a path to
+    materialize the working frame IS ``triples``.  Nested paths (e.g.
     ``(p1/p2)+`` or ``^(p*)``) materialize bottom-up: each inner
     operand becomes a virtual edge set in the working frame before
     the outer operator closes over it."""
     counter = [0]
-    # literal-shape columns ride along ONLY when a term-shape builtin
-    # will read them (keep_shape) — otherwise the classic 3-column
-    # pipeline, so path dedups never widen for nothing; virtual path
-    # edges union in with NULL shape — a multi-hop endpoint's shape is
-    # unknown by design
-    keep = ["subj", "pred", "obj"] + (
-        G.obj_shape_cols(triples) if keep_shape else [])
-    work = [triples.select(*keep)]
+    # the frame passes through untouched unless a path materializes:
+    # the matcher projects only the bound variables anyway
+    work = [triples]
 
     def materialize(path) -> str:
         kind = path[0]
         if kind == "pred":
             return path[1]
+        if not counter[0]:
+            # literal-shape columns ride along ONLY when a term-shape
+            # builtin will read them (keep_shape) — otherwise the
+            # classic 3-column pipeline, so path dedups never widen
+            # for nothing; virtual path edges union in with NULL
+            # shape — a multi-hop endpoint's shape is unknown by
+            # design
+            keep = ["subj", "pred", "obj"] + (
+                G.obj_shape_cols(triples) if keep_shape else [])
+            if triples.columns != keep:
+                work[0] = triples.select(*keep)
         counter[0] += 1
         # NUL-prefixed: no IRI, CURIE or literal can contain \x00, so
         # the reserved namespace can never shadow a real predicate
@@ -2104,7 +2109,9 @@ def _exists_inject(triples: DataFrame, sols: DataFrame, body: dict,
     column) gets NULL companions = unknown shape, so the builtin
     returns NULL and the row filters rather than misclassifies.  The
     bucket then semi/anti-joins against the distinct witness
-    projection of the injected solve.
+    projection of the injected solve: the substituted bindings plus
+    the seed's companions, matched null-safely, so outer terms that
+    differ only in shape ("x"@en / "x"@es) keep separate answers.
 
     Scale shape: the seed is a distinct-bindings dim (capped at
     ``_EXISTS_INJECT_CAP`` — past that the translation degenerates to
@@ -2156,9 +2163,18 @@ def _exists_inject(triples: DataFrame, sols: DataFrame, body: dict,
                              if v in shape_vars])
                 body2 = dict(body)
                 body2["_init"] = (seeded, set(bound))
+                # the witness keeps the seed's shape companions: outer
+                # terms sharing one lexical form but not one shape
+                # ("hello"@en / "hello"@es) are distinct bindings,
+                # and a NULL companion (no tag) matches null-safely
+                keys = bound + comp
                 wit = (_solve_group(triples, body2)
-                       .select(*bound).dropDuplicates())
-                part = bucket.join(wit, bound, how)
+                       .select(*[F.col(c).alias(f"__wit{i}")
+                                 for i, c in enumerate(keys)])
+                       .dropDuplicates())
+                part = bucket.join(
+                    wit, [F.col(c).eqNullSafe(F.col(f"__wit{i}"))
+                          for i, c in enumerate(keys)], how)
         else:
             # nothing substitutes in this bucket: free pattern
             # variables match freely (plain solve); filter-only
@@ -2196,6 +2212,10 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
             "literal-shape columns (obj_is_iri/obj_lang/"
             "obj_datatype); match the plain lexical form instead")
     t = _expand_paths(triples, [g], keep_shape=keep_shape)
+    # a variable predicate must skip virtual path edges only where
+    # some materialized
+    edges = t is not triples
+    match = functools.partial(G.bgp_match, t, path_edges=edges)
     init = g.get("_init")
     if (not g["patterns"] and not g["subqueries"] and not g["graphs"]
             and not g.get("graph_scoped") and not g["unions"]
@@ -2325,10 +2345,10 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
                                    for v in nullable_shared)]
                     kept = [e for e in (inline_filters or [])
                             if e not in held]
-                    sols = G.bgp_match(t, g["patterns"],
-                                       optional=inline_opt,
-                                       filters=kept or None,
-                                       shape_vars=sv)
+                    sols = match(g["patterns"],
+                                 optional=inline_opt,
+                                 filters=kept or None,
+                                 shape_vars=sv)
                     sols = _join_values(sols, names, rows)
                     # VALUES-introduced bindings carry lexically-
                     # inferred shapes (same posture as bgp_values);
@@ -2339,19 +2359,20 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
                         sols, [n for n in (sv or ())
                                if n in set(names)])
                     for e in held:
-                        sols = sols.filter(F.expr(e))
+                        sols = sols.filter(e)
                 else:
                     sols = G.bgp_values(t, g["patterns"], names, rows,
                                         optional=inline_opt,
                                         filters=inline_filters,
-                                        shape_vars=sv)
+                                        shape_vars=sv,
+                                        path_edges=edges)
                 acc_certain |= {n for i, n in enumerate(names)
                                 if all(r[i] is not None for r in rows)}
             else:
-                sols = G.bgp_match(t, g["patterns"],
-                                   optional=inline_opt,
-                                   filters=inline_filters,
-                                   shape_vars=sv)
+                sols = match(g["patterns"],
+                             optional=inline_opt,
+                             filters=inline_filters,
+                             shape_vars=sv)
         except ValueError as exc:
             if "capped" not in str(exc):
                 raise
@@ -2365,10 +2386,12 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
             # seed — both sides certain on the shared columns (the
             # seed carries only bound bindings, the block only
             # pattern-bound ones), so a plain equi-join; a block
-            # disconnected from the seed is the substitution product
+            # disconnected from the seed is the substitution product;
+            # the seed's companions win (the outer term's shape)
             shared_b = sorted(c for c in base.columns
                               if c in sols.columns
                               and not c.startswith(G.SHAPE_PREFIX))
+            sols = G.drop_dup_companions(sols, base.columns)
             sols = (base.join(sols, shared_b) if shared_b
                     else base.crossJoin(sols))
     if g["graphs"]:
@@ -2509,9 +2532,9 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
                         if not v.startswith(G.SHAPE_PREFIX)
                         and re.search(rf"\b{re.escape(v)}\b", e))
                     (outer_f if outside else inner_f).append(e)
-                opt = G.bgp_match(t, o["patterns"],
-                                  filters=inner_f or None,
-                                  shape_vars=sv)
+                opt = match(o["patterns"],
+                            filters=inner_f or None,
+                            shape_vars=sv)
             shared = sorted(c for c in
                             set(sols.columns) & set(opt.columns)
                             if not c.startswith(G.SHAPE_PREFIX))
@@ -2545,7 +2568,7 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
         # the shape builtins NULL-on-unknown instead of unresolved
         sols = G.fill_null_companions(sols, sv)
         for e in pre_bind:
-            sols = sols.filter(F.expr(e))
+            sols = sols.filter(e)
     # Extend (BIND) happens at its position INSIDE the group while
     # FILTER — including FILTER (NOT) EXISTS — applies over the
     # finished group (§18.2.2.2), so binds evaluate before the
@@ -2584,7 +2607,7 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
             grp = _solve_group(triples, body)
             grp_certain = bcertain
         else:
-            grp = G.bgp_match(t, body) if body else None
+            grp = match(body) if body else None
             grp_certain = pattern_vars(body) if body else set()
         if grp is None:
             # EXISTS {} matches via the unit solution: always true
@@ -2625,7 +2648,7 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
             neg = _solve_group(triples, body)
             neg_certain = _certain_vars(body)
         else:
-            neg = G.bgp_match(t, body)
+            neg = match(body)
             neg_certain = pattern_vars(body)
         shared = sorted(c for c in
                         set(sols.columns) & set(neg.columns)
@@ -2647,7 +2670,7 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
     # other BIND-defined and VALUES-extension bindings: unknown shape
     sols = G.fill_null_companions(sols, sv)
     for e in post_bind:
-        sols = sols.filter(F.expr(e))
+        sols = sols.filter(e)
     return sols
 
 
@@ -2729,8 +2752,13 @@ def sparql(triples: DataFrame, text: str, *,
 
     SELECT returns one column per projected variable; ASK returns a
     1-row boolean ``result`` frame; CONSTRUCT/DESCRIBE return triple
-    frames.  All laziness and plan shapes are the underlying
-    operators'.
+    frames.  Every triple pattern compiles to one ``filter`` and one
+    ``selectExpr`` over SQL text, with constants quoted by
+    ``graphops.sql_str``.  ASK is the one eager form: the call runs a
+    limit-1 take of the solutions (no shuffle; the scan stops at the
+    first solution) and returns the answer as a one-row local frame.
+    Every other form is lazy, with the underlying operators' plan
+    shapes.
 
     ``union_default`` picks the quad-frame posture when the query
     carries no dataset clause: True (default) matches plain patterns
@@ -2790,9 +2818,14 @@ def sparql(triples: DataFrame, text: str, *,
                            *G.obj_shape_cols(full)))
         _attach_quads(q.get("where"), full)
     if q["form"] == "ask":
-        sols = _solve_group(triples, q["where"])
-        return sols.limit(1).agg(
-            (F.count(F.lit(1)) > 0).alias("result"))
+        # eager limit-1 take (isEmpty): the scan stops at the first
+        # solution and runs no shuffle (a lazy limit(1).agg(count)
+        # plans a GlobalLimit whose single-partition exchange costs a
+        # second job); the answer returns as a one-row local
+        # relation, which collects without a job
+        hit = not _solve_group(triples, q["where"]).isEmpty()
+        return triples.sparkSession.sql(
+            f"VALUES ({str(hit).lower()}) AS t(result)")
     if q["form"] == "describe":
         # parser terms are str subclasses; createDataFrame's schema
         # inference dispatches on exact type, so ground them to str
@@ -3525,6 +3558,17 @@ def _term_key(df: DataFrame, delta: DataFrame) -> list[str]:
             if c in df.columns and c in delta.columns]
 
 
+def _null_safe_on(left: str, right: str, key: list[str]):
+    """Join condition: every ``key`` column equal null-safely between
+    the frames aliased ``left`` and ``right`` — one SQL expression
+    rather than a Column per key (each costs driver->JVM round
+    trips)."""
+    from pyspark.sql import functions as F
+
+    return F.expr(" AND ".join(f"{left}.{c} <=> {right}.{c}"
+                               for c in key))
+
+
 def _quad_minus(df: DataFrame, delta: DataFrame,
                 broadcast_delta: bool = False) -> DataFrame:
     """``df`` minus ``delta`` on the term key (lexical triple + graph
@@ -3540,9 +3584,8 @@ def _quad_minus(df: DataFrame, delta: DataFrame,
     right = delta.select(*key).alias("_upd_r")
     if broadcast_delta:
         right = F.broadcast(right)
-    cond = [F.col(f"_upd_l.{c}").eqNullSafe(F.col(f"_upd_r.{c}"))
-            for c in key]
-    return left.join(right, cond, "left_anti")
+    return left.join(right, _null_safe_on("_upd_l", "_upd_r", key),
+                     "left_anti")
 
 
 def _set_insert(df: DataFrame, delta: DataFrame) -> DataFrame:
@@ -3558,8 +3601,7 @@ def _set_insert(df: DataFrame, delta: DataFrame) -> DataFrame:
     key = _term_key(df, delta)
     matched = (df.alias("_ins_l")
                .join(F.broadcast(delta.select(*key).alias("_ins_r")),
-                     [F.col(f"_ins_l.{c}").eqNullSafe(
-                         F.col(f"_ins_r.{c}")) for c in key],
+                     _null_safe_on("_ins_l", "_ins_r", key),
                      "left_semi")
                # dedup BEFORE broadcasting: a store carrying
                # per-document provenance duplicates of one term key
@@ -3570,9 +3612,7 @@ def _set_insert(df: DataFrame, delta: DataFrame) -> DataFrame:
                .select(*key).dropDuplicates())
     fresh = delta.alias("_ins_d").join(
         F.broadcast(matched.alias("_ins_m")),
-        [F.col(f"_ins_d.{c}").eqNullSafe(F.col(f"_ins_m.{c}"))
-         for c in key],
-        "left_anti")
+        _null_safe_on("_ins_d", "_ins_m", key), "left_anti")
     return df.unionByName(fresh, allowMissingColumns=True)
 
 

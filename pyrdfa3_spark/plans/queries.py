@@ -4001,9 +4001,9 @@ FROM nation a JOIN nation b ON b.n_nationkey > a.n_nationkey
 
 def q_sparql_ask(spark, sf_dir):
     """ASK through the text surface: a boolean single-row result
-    (rdflib's ``Graph.query('ASK ...')`` surface).  Plans as
-    ``LIMIT 1`` + count — the scan short-circuits on the first
-    matching solution, no full materialization."""
+    (rdflib's ``Graph.query('ASK ...')`` surface).  Answered by a
+    limit-1 take — the scan short-circuits on the first matching
+    solution, no full materialization and no shuffle."""
     from pyrdfa3_spark.operators.sparql import sparql
 
     return sparql(_geo_triples(spark, sf_dir), f"""

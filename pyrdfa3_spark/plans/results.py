@@ -66,14 +66,14 @@ def _term_kind(sols: DataFrame, v: str):
     col = F.col(v)
     is_bnode = col.startswith("_:")
     if iri_c in sols.columns:
-        is_iri = F.coalesce(F.col(iri_c), G._lexical_is_iri(col)) \
+        is_iri = F.coalesce(F.col(iri_c), G._lexical_is_iri(v)) \
             & ~is_bnode
         lang = F.col(lang_c) if lang_c in sols.columns \
             else F.lit(None).cast("string")
         dt = F.col(dt_c) if dt_c in sols.columns \
             else F.lit(None).cast("string")
     else:
-        is_iri = G._lexical_is_iri(col) & ~is_bnode
+        is_iri = G._lexical_is_iri(v) & ~is_bnode
         lang = F.lit(None).cast("string")
         dt = F.lit(None).cast("string")
     return is_bnode, is_iri, lang, dt

@@ -151,6 +151,30 @@ _AUTOCLOSE = {
     "option": ({"option"}, {"select", "html"}),
 }
 
+
+def _autoclose_index(stack: list, tag: str):
+    """Index of the open element an ``li``/``dd``/``dt``/``tr``/...
+    start tag implicitly closes (it and everything above it end), or
+    None when a scope boundary comes first.  ``stack[0]`` is the
+    document node and is never closed."""
+    targets, boundary = _AUTOCLOSE[tag]
+    for i in range(len(stack) - 1, 0, -1):
+        t = stack[i].tag
+        if t in targets:
+            return i
+        if boundary is None:
+            if t in _SPECIAL and t not in ("address", "div", "p"):
+                return None
+        elif t in boundary:
+            return None
+    return None
+
+
+# the table's section elements: one of these start tags ends the open
+# section (with any row or cell inside it) back at the table
+_TABLE_SECTIONS = frozenset(
+    "caption colgroup tbody thead tfoot".split())
+
 _TABLE_CTX = {
     "table": {"caption", "colgroup", "col", "thead", "tbody", "tfoot",
               "tr", "td", "th", "style", "script", "template", "form"},
@@ -176,6 +200,9 @@ class _TreeBuilder(HTMLParser):
         # LAZILY the moment content actually follows (spec: no
         # content, no clone)
         self._pending: list[tuple[str, dict]] = []
+        # open <p> elements on the stack: a block start tag with none
+        # open skips the button-scope walk (O(depth) per tag otherwise)
+        self._open_p = 0
 
     def _warn_fmt_reopen(self, tag: str, closed) -> None:
         fmts = [tag] + [n.tag for n in closed if n.tag in _FMT]
@@ -207,30 +234,28 @@ class _TreeBuilder(HTMLParser):
             self._push(node)
         self._pending = []
 
+    def _pop_to(self, i: int) -> None:
+        """Close ``stack[i]`` and everything above it."""
+        self._open_p -= sum(1 for n in self.stack[i:] if n.tag == "p")
+        del self.stack[i:]
+
     def _close_p_in_button_scope(self) -> None:
+        if not self._open_p:
+            return
         for i in range(len(self.stack) - 1, 0, -1):
             t = self.stack[i].tag
             if t == "p":
                 self._collect_fmt(self.stack[i + 1:])
-                del self.stack[i:]
+                self._pop_to(i)
                 return
             if t in _BUTTON_SCOPE:
                 return
 
     def _autoclose(self, tag: str) -> None:
-        targets, boundary = _AUTOCLOSE[tag]
-        for i in range(len(self.stack) - 1, 0, -1):
-            t = self.stack[i].tag
-            if t in targets:
-                self._collect_fmt(self.stack[i + 1:])
-                del self.stack[i:]
-                return
-            if boundary is None:
-                if (t in _SPECIAL
-                        and t not in ("address", "div", "p")):
-                    return
-            elif t in boundary:
-                return
+        i = _autoclose_index(self.stack, tag)
+        if i is not None:
+            self._collect_fmt(self.stack[i + 1:])
+            self._pop_to(i)
 
     def _nearest_table(self):
         for i in range(len(self.stack) - 1, 0, -1):
@@ -243,6 +268,8 @@ class _TreeBuilder(HTMLParser):
             raise DocumentTooDeep(
                 f"element nesting exceeds MAX_DEPTH={MAX_DEPTH}")
         self.stack.append(node)
+        if node.tag == "p":
+            self._open_p += 1
 
     # html.parser lowercases tag and attribute names already.
     def handle_starttag(self, tag, attrs):
@@ -260,6 +287,14 @@ class _TreeBuilder(HTMLParser):
         # "in table" insertion modes: imply tbody/tr, foster-parent
         # anything the table content model does not allow
         cur = self.stack[-1].tag
+        if tag in _TABLE_SECTIONS:
+            # "in table body" / "in row" / "in cell": the new section
+            # is the table's child, not foster-parented out of it
+            ti = self._nearest_table()
+            if (ti is not None and ti + 1 < len(self.stack)
+                    and self.stack[ti + 1].tag in _TABLE_SECTIONS):
+                self._pop_to(ti + 1)
+                cur = "table"
         if cur in _TABLE_CTX:
             if tag == "tr" and cur == "table":
                 tb = Node("tbody")
@@ -302,7 +337,9 @@ class _TreeBuilder(HTMLParser):
             self.stack[-1].append(child)
             return
         table = self.stack[ti]
-        parent = self.stack[ti - 1]
+        # the table's own parent: a table that was itself fostered
+        # sits above an element on the stack that does not hold it
+        parent = table.parent
         if isinstance(child, Node):
             child.parent = parent
         idx = next(i for i, c in enumerate(parent.children)
@@ -341,7 +378,7 @@ class _TreeBuilder(HTMLParser):
                     # implied end tags; formatting descendants stay in
                     # the active list and re-open when content follows
                     self._collect_fmt(above)
-                del self.stack[i:]
+                self._pop_to(i)
                 return
         # not on the stack: an end tag for a pending (implicitly
         # closed) formatting element cancels its reconstruction —
@@ -383,8 +420,9 @@ class _TreeBuilder(HTMLParser):
 _TAG_CTRL_WS = re.compile(r"<[^>]*[\t\n\r]")
 
 # gate for the fast path's HTML5 fixup checks ("<p" over-matches
-# <pre>/<param> etc. — it is only a gate, never a semantic test)
-_FIXUP_SCAN = re.compile(r"<(?:table|p)", re.IGNORECASE)
+# <pre>/<param>, "<li" <link> etc. — it is only a gate, never a
+# semantic test)
+_FIXUP_SCAN = re.compile(r"<(?:table|p|li|d[dt])", re.IGNORECASE)
 
 
 def _parse_html_fast(text: str) -> Node:
@@ -393,15 +431,17 @@ def _parse_html_fast(text: str) -> Node:
     doc = Node("#document")
     stack = [doc]
     # one C-speed regex scan gates ALL per-element HTML5 fixup checks:
-    # a document with no <table and no <p... tag (the overwhelming
-    # majority of RDFa fragments) pays two boolean tests per element
+    # a document with no <table, <p..., <li, <dd or <dt tag (the
+    # overwhelming majority of RDFa fragments) pays three boolean
+    # tests per element
     # and keeps the plain O(1) end-tag pop — the fast path stays fast
     if _FIXUP_SCAN.search(text) is None:
-        has_table = has_p = False
+        has_table = has_p = has_list = False
     else:
         tl = text.lower()
         has_table = "<table" in tl
         has_p = "<p" in tl
+        has_list = "<li" in tl or "<dd" in tl or "<dt" in tl
 
     def start(tag, attrs):
         if len(stack) >= MAX_DEPTH + 1:  # +1: synthetic wrapper level
@@ -435,6 +475,13 @@ def _parse_html_fast(text: str) -> Node:
                 stack[-1].append(trn)
                 stack.append(trn)
         if has_p and cur == "p" and tag in _BLOCK_CLOSES_P:
+            raise ValueError(
+                "HTML5 insertion rules diverge from XML here: "
+                "use tolerant parser")
+        # an li/dd/dt nested in an open one of its kind (no special
+        # element between) is auto-closed to a sibling by HTML5
+        if (has_list and tag in ("li", "dd", "dt")
+                and _autoclose_index(stack, tag) is not None):
             raise ValueError(
                 "HTML5 insertion rules diverge from XML here: "
                 "use tolerant parser")

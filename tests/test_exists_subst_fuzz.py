@@ -315,3 +315,42 @@ def test_exists_substitution_shaped_fuzz(spark, seed, bi, neg):
         (mu["x"], mu["v"], mu["w"]) for mu in outer
         if _eval_body_shaped(store, body, mu) != neg)
     assert got == want, f"\nquery: {q}\nstore: {store}"
+
+
+# ---------------------------------------------------------------- #
+# fixed cases: outer terms that share a lexical form but not a shape
+# (the fuzz above makes the tag a function of the lexical, so it can
+# never produce them)
+# ---------------------------------------------------------------- #
+
+_TWO_TAGS = [("urn:a", "p:d", "hello", False, "en", None),
+             ("urn:a", "p:d", "hello", False, "es", None),
+             ("urn:a", "p:a", "m", False, None, None),
+             ("urn:a", "p:o", "w1", False, None, None)]
+_SHAPED_SCHEMA = ("subj string, pred string, obj string, "
+                  "obj_is_iri boolean, obj_lang string, obj_datatype string")
+
+
+@pytest.mark.parametrize("neg,want", [(False, {"en"}), (True, {"es"})])
+def test_exists_substitution_keeps_outer_shapes_apart(spark, neg, want):
+    # "hello"@en and "hello"@es are two outer bindings of ?v: only the
+    # @en row satisfies the body filter, so EXISTS keeps it alone and
+    # NOT EXISTS keeps the @es row alone
+    df = spark.createDataFrame(_TWO_TAGS, _SHAPED_SCHEMA)
+    q = f"""SELECT ?x ?v (LANG(?v) AS ?l) WHERE {{ ?x p:d ?v
+        FILTER {'NOT ' if neg else ''}EXISTS {{
+            ?x p:a ?m FILTER(LANG(?v) = "en") }} }}"""
+    got = [(r["x"], r["v"], r["l"]) for r in sparql(df, q).collect()]
+    assert sorted(got) == sorted(("urn:a", "hello", lg) for lg in want)
+
+
+def test_exists_substitution_with_pattern_bound_shaped_variable(spark):
+    # ?v is substituted AND matched by the body pattern: the seed's
+    # companions win the conjoin instead of colliding with the
+    # pattern's own
+    df = spark.createDataFrame(_TWO_TAGS, _SHAPED_SCHEMA)
+    q = """SELECT ?x ?v (LANG(?v) AS ?l) WHERE { ?x p:d ?v
+        OPTIONAL { ?x p:o ?w }
+        FILTER EXISTS { ?x p:d ?v FILTER(LANG(?v) = "en" && BOUND(?w)) } }"""
+    got = [(r["x"], r["v"], r["l"]) for r in sparql(df, q).collect()]
+    assert got == [("urn:a", "hello", "en")]

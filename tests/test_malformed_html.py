@@ -95,6 +95,28 @@ def test_implied_tbody_and_tr():
                              ("tr", [("td", ["c"])])])])
 
 
+def test_table_section_after_implied_tbody_stays_in_table():
+    # §13.2.6.4.13/14: a section start tag in "in table body" / "in
+    # row" closes back to the table and inserts there — html5lib's
+    # tree, not a foster-parented section before the table
+    assert _parse("<table><tr><td>a</td></tr><tfoot><tr><td>b</td></tr>"
+                  "</tfoot></table>") == (
+        "table", [("tbody", [("tr", [("td", ["a"])])]),
+                  ("tfoot", [("tr", [("td", ["b"])])])])
+    assert _parse("<table><tr><td>a</td></tr><caption>c</caption>"
+                  "</table>") == (
+        "table", [("tbody", [("tr", [("td", ["a"])])]),
+                  ("caption", ["c"])])
+    # an explicit tbody ends the same way, as does an open cell
+    assert _parse("<table><tbody><tr><td>a</td></tr><thead><tr><th>h"
+                  "</th></tr></thead></tbody></table>") == (
+        "table", [("tbody", [("tr", [("td", ["a"])])]),
+                  ("thead", [("tr", [("th", ["h"])])])])
+    assert _parse("<table><tr><td>a<tbody><tr><td>b</table>") == (
+        "table", [("tbody", [("tr", [("td", ["a"])])]),
+                  ("tbody", [("tr", [("td", ["b"])])])])
+
+
 def test_foster_parenting_element_and_text():
     # a div (with RDFa attributes!) misplaced in table context is
     # re-homed BEFORE the table — ancestor chains for context
@@ -254,3 +276,77 @@ def test_deep_nesting_still_guarded():
 
     with pytest.raises(DocumentTooDeep):
         parse_html("<div>" * 500)
+
+
+def test_deep_nesting_closes_p_like_shallow():
+    # the open-<p> count lets a block start tag skip the button-scope
+    # walk; the tree must match what the walk builds at any depth
+    deep = "<div>" * 350
+    inner = parse_html(deep + "<p>a<section>b")
+    for _ in range(349):
+        (inner,) = inner.element_children()
+    assert _shape(inner) == ("div", [("p", ["a"]), ("section", ["b"])])
+    # a <p> above the nest closes at the first div; a div inside a
+    # button leaves the p outside the button open
+    root = parse_html("<p>x" + deep + "<p>y<button><div>z")
+    p, inner = root.element_children()
+    assert _shape(p) == ("p", ["x"])
+    for _ in range(349):
+        (inner,) = inner.element_children()
+    assert _shape(inner) == (
+        "div", [("p", ["y", ("button", [("div", ["z"])])])])
+
+
+def test_open_p_count_matches_stack_on_tag_soup():
+    import random
+
+    from pyrdfa3_spark.sources.dom import _TreeBuilder
+
+    class Checked(_TreeBuilder):
+        def _check(self):
+            assert self._open_p == sum(n.tag == "p" for n in self.stack)
+
+        def handle_starttag(self, tag, attrs):
+            super().handle_starttag(tag, attrs)
+            self._check()
+
+        def handle_endtag(self, tag):
+            super().handle_endtag(tag)
+            self._check()
+
+    tags = ["p", "div", "b", "button", "li", "ul", "table", "tr", "td",
+            "tbody", "tfoot", "caption", "span", "dd", "dl"]
+    rng = random.Random(5)
+    for _ in range(200):
+        doc = "".join(
+            f"<{'/' if rng.random() < 0.35 else ''}{rng.choice(tags)}>t"
+            for _ in range(40))
+        b = Checked()
+        b.feed(doc)
+        b.close()
+
+
+@pytest.mark.parametrize("doc", [
+    "<ul><li>a<li>b</li></li></ul>",
+    "<dl><dt>a<dd>b</dd></dt></dl>",
+    "<ul><li>a<ul><li>b</li></ul></li></ul>",
+    "<ul><li>a<div><ul><li>b</li></ul></div></li></ul>",
+])
+def test_list_items_same_tree_on_both_builders(doc):
+    # well-formed XML with an li/dd/dt directly inside an open one
+    # leaves the fast path (HTML5 makes them siblings); a nested list
+    # is a scope boundary and stays on it
+    from pyrdfa3_spark.sources.dom import _parse_html_fast, _TreeBuilder
+
+    b = _TreeBuilder()
+    b.feed(doc)
+    b.close()
+    tolerant = _shape(b.root.element_children()[0])
+    assert _parse(doc) == tolerant
+    nested_list = "<ul><li>b" in doc
+    if nested_list:
+        fast = _parse_html_fast(doc).element_children()[0]
+        assert _shape(fast) == tolerant
+    else:
+        with pytest.raises(ValueError):
+            _parse_html_fast(doc)

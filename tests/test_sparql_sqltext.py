@@ -1,0 +1,180 @@
+"""Triple patterns compile to SQL text: quoting and planning cost.
+
+Every pattern becomes one ``filter`` and one ``selectExpr`` over SQL
+text whose constants ``graphops.sql_str`` quotes, so a constant holding a
+quote, a backslash, a newline or non-ASCII text must match exactly
+what DuckDB matches for the same value bound as a parameter, and a
+literal shaped like SQL injection must match nothing.  The planning
+budget pins the point of the SQL-text compile: planning a point lookup
+or an ASK takes a few driver->JVM round trips, not one or two hundred.
+"""
+
+from __future__ import annotations
+
+import threading
+
+import duckdb
+import pytest
+
+from pyrdfa3_spark.operators.sparql import sparql
+
+NAME = "http://ex.org/name"
+SCHEMA = ("subj string, pred string, obj string, obj_is_iri boolean, "
+          "obj_lang string, obj_datatype string")
+
+SUBJECTS = ["http://ex.org/o'brien", "http://ex.org/café",
+            "http://ex.org/日本", "http://ex.org/plain"]
+LITERALS = ["it's", "back\\slash", "two\nlines", "naïve ✓",
+            "a\\'b", "x", "1"]
+
+
+def _rows():
+    rows = []
+    for i, s in enumerate(SUBJECTS):
+        for j, lit in enumerate(LITERALS):
+            if (i + j) % 2 == 0:
+                rows.append((s, NAME, lit, False,
+                             "en" if j % 3 == 0 else None, None))
+        rows.append((s, "http://ex.org/knows", SUBJECTS[i - 1], True,
+                     None, None))
+    return rows
+
+
+@pytest.fixture(scope="module")
+def stores(spark):
+    rows = _rows()
+    df = spark.createDataFrame(rows, SCHEMA)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE kg (subj VARCHAR, pred VARCHAR, "
+                "obj VARCHAR, obj_is_iri BOOLEAN, obj_lang VARCHAR, "
+                "obj_datatype VARCHAR)")
+    con.executemany("INSERT INTO kg VALUES (?, ?, ?, ?, ?, ?)", rows)
+    return df, con
+
+
+def _sparql_literal(s: str) -> str:
+    return '"' + (s.replace("\\", "\\\\").replace('"', '\\"')
+                  .replace("\n", "\\n")) + '"'
+
+
+def _spark_rows(df, q):
+    return sorted(tuple(r) for r in sparql(df, q).collect())
+
+
+@pytest.mark.parametrize("subj", SUBJECTS)
+def test_iri_constant_matches_duckdb(stores, subj):
+    df, con = stores
+    want = sorted(con.execute("SELECT pred, obj FROM kg WHERE subj = ?",
+                              [subj]).fetchall())
+    assert want  # every subject has at least its knows edge
+    assert _spark_rows(df, f"SELECT ?p ?o WHERE {{ <{subj}> ?p ?o }}") \
+        == want
+    # the same constant in the object position
+    want = sorted(con.execute(
+        "SELECT subj FROM kg WHERE pred = ? AND obj = ?",
+        ["http://ex.org/knows", subj]).fetchall())
+    assert _spark_rows(
+        df, f"SELECT ?s WHERE {{ ?s <http://ex.org/knows> <{subj}> }}") \
+        == want
+
+
+@pytest.mark.parametrize("lit", LITERALS)
+def test_literal_constant_matches_duckdb(stores, lit):
+    df, con = stores
+    want = sorted(con.execute(
+        "SELECT subj FROM kg WHERE pred = ? AND obj = ?",
+        [NAME, lit]).fetchall())
+    assert want
+    q = f"SELECT ?s WHERE {{ ?s <{NAME}> {_sparql_literal(lit)} }}"
+    assert _spark_rows(df, q) == want
+    # a language-tagged constant adds the shape test to the filter
+    want = sorted(con.execute(
+        "SELECT subj FROM kg WHERE pred = ? AND obj = ? AND "
+        "NOT obj_is_iri AND obj_lang = 'en'", [NAME, lit]).fetchall())
+    q = f"SELECT ?s WHERE {{ ?s <{NAME}> {_sparql_literal(lit)}@en }}"
+    assert _spark_rows(df, q) == want
+
+
+def test_injection_shaped_literal_matches_nothing(stores):
+    df, con = stores
+    lit = "x' OR '1'='1"
+    assert con.execute("SELECT count(*) FROM kg WHERE obj = ?",
+                       [lit]).fetchone()[0] == 0
+    q = f"SELECT ?s ?p WHERE {{ ?s ?p {_sparql_literal(lit)} }}"
+    assert _spark_rows(df, q) == []
+    ask = sparql(df, f"ASK {{ ?s ?p {_sparql_literal(lit)} }}").collect()
+    assert ask[0]["result"] is False
+
+
+# ------------------------------------------------------------------ #
+# planning budget
+# ------------------------------------------------------------------ #
+
+class _CallCounter:
+    """Counts py4j commands the calling thread sends to the JVM (the
+    gateway client's ``send_command``); other threads' traffic, such as
+    py4j's garbage collection of JVM references, is left out."""
+
+    def __init__(self, spark):
+        self.client = spark.sparkContext._gateway._gateway_client
+        self.thread = threading.get_ident()
+        self.n = 0
+
+    def __enter__(self):
+        orig = self.client.send_command
+
+        def counting(*args, **kwargs):
+            if threading.get_ident() == self.thread:
+                self.n += 1
+            return orig(*args, **kwargs)
+
+        self.client.send_command = counting
+        return self
+
+    def __exit__(self, *exc):
+        del self.client.send_command  # back to the class method
+
+
+PLAN_BUDGET = 30
+
+
+def test_point_and_ask_planning_budget(spark, stores):
+    df, _con = stores
+    kg = df.coalesce(1).cache()
+    kg.count()
+    point = f"SELECT ?p ?o WHERE {{ <{SUBJECTS[1]}> ?p ?o }}"
+    hit = f"ASK {{ <{SUBJECTS[1]}> ?p ?o }}"
+    miss = "ASK { <http://absent.example/x> ?p ?o }"
+    for q in (point, hit, miss):  # first calls load lazy py4j state
+        sparql(kg, q).collect()
+    with _CallCounter(spark) as c:
+        sparql(kg, point)
+    assert c.n <= PLAN_BUDGET, f"point lookup planning took {c.n} calls"
+    # an ASK answers inside the call: the count includes its execution
+    with _CallCounter(spark) as c:
+        sparql(kg, hit)
+    assert c.n <= PLAN_BUDGET, f"ASK took {c.n} calls"
+
+
+def test_ask_runs_one_job_without_shuffle(spark, stores):
+    df, _con = stores
+    kg = df.coalesce(1).cache()
+    kg.count()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for i, (q, want) in enumerate([
+            (f"ASK {{ <{SUBJECTS[0]}> ?p ?o }}", True),
+            ("ASK { <http://absent.example/x> ?p ?o }", False)]):
+        group = f"ask-jobs-{i}"
+        sc.setJobGroup(group, "ASK job count")
+        try:
+            res = sparql(kg, q)
+            jobs = tracker.getJobIdsForGroup(group)
+            assert res.collect()[0]["result"] is want
+            # collecting the answer frame runs no further job
+            assert tracker.getJobIdsForGroup(group) == jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(jobs) == 1, f"{q}: {len(jobs)} jobs"
+        stages = tracker.getJobInfo(jobs[0]).stageIds
+        assert len(stages) == 1, f"{q}: a shuffle ({len(stages)} stages)"
