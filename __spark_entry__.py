@@ -8,6 +8,8 @@ with DuckDB-checkable ANSI-SQL oracles for all SQL-expressible ones.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import sys
 from collections.abc import Callable
@@ -29,42 +31,30 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's per-round correctness window records the FIRST 50
-# entries; rounds rotate this priority list so every registry entry
-# accumulates a driver-recorded row.  Round-5 window: first the three
-# r04 hash-reds (wl_fingerprint / conversation_stats /
-# compaction_plan), now normalization-proof — fp is a decimal-digit
-# string, has_gaps is 0/1 int, the oracle's window-sum HUGEINT /
-# SUM HUGEINT are cast to BIGINT (scripts/audit_cell_types.py sweeps
-# the whole registry for decimal/HUGEINT cells) — then the 24 entries
-# never driver-recorded in rounds 1-4 (closing cumulative coverage at
-# 178/178), then anything new this round; everything already
-# driver-green in CORRECTNESS_r01-r04 follows after the window.
-_ROUND5_WINDOW = [
-    # r04 hash-reds, normalization-proofed this round
-    "wl_fingerprint", "conversation_stats", "compaction_plan",
-    # never driver-recorded in r01-r04: SPARQL forms + result sinks
-    "sparql_ask", "sparql_agg_concat", "sparql_values_trailing",
-    "sparql_results_csv", "sparql_results_json", "sparql_results_tsv",
-    # serializers / graph surface
-    "skolemize", "trig_serialize", "jsonld_serialize",
-    "graph_diff", "apply_diff", "property_table",
-    "graph_metrics_fixture", "kg_describe", "kg_group_concat",
-    # text / curation ops
-    "normalize_text", "bm25", "pii_scan", "pii_redact",
-    "repetition_stats", "domain_mix", "entity_disambiguate",
-    # transcript ops + joins
-    "tool_usage", "role_transitions", "interval_join",
-    # new in round 5: HTML5-fixup extraction + real PNG decode
-    "malformed_html_fixture", "multimodal_png_real",
-]
+# entries of ``queries()``.  Registry entries with no green row
+# (``rows_match`` and ``hash_match`` both true) in any recorded round
+# (``CORRECTNESS_r*.json`` next to this file) come first, then the
+# rest; each group keeps registry order.
+def _window_order(names, rounds: list[dict]) -> list[str]:
+    green = {n for r in rounds for n, row in r.items()
+             if row.get("rows_match") and row.get("hash_match")}
+    return sorted(names, key=lambda n: n in green)
+
+
+def _recorded_rounds() -> list[dict]:
+    here = os.path.dirname(os.path.abspath(__file__))
+    rounds = []
+    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
+        with open(path) as fh:
+            rounds.append(json.load(fh))
+    return rounds
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from pyrdfa3_spark.plans.queries import QUERIES
 
-    out = {n: QUERIES[n] for n in _ROUND5_WINDOW}
-    out.update(QUERIES)
-    return out
+    return {n: QUERIES[n]
+            for n in _window_order(QUERIES, _recorded_rounds())}
 
 
 def oracle_sql() -> dict[str, str]:

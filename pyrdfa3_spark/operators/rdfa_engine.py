@@ -145,12 +145,6 @@ class EvalContext:
         "list_mapping", "new_list",
     )
 
-    def copy_shallow(self):
-        c = EvalContext()
-        for f in self.__slots__:
-            setattr(c, f, getattr(self, f))
-        return c
-
 
 def _remove_frag_id(uri: str) -> str:
     try:
@@ -174,14 +168,12 @@ class RDFaProcessor:
     ``diagnostics`` (list of (severity, code, message))."""
 
     def __init__(self, base: str = "", host: str = Host.HTML5,
-                 rdfa_version: str = "1.1", space_preserve: bool = True,
-                 check_lite: bool = False,
+                 rdfa_version: str = "1.1", check_lite: bool = False,
                  transformers: tuple = (),
                  hturtle_only: bool = False):
         self.base_arg = base
         self.host = host
         self.rdfa_version = rdfa_version
-        self.space_preserve = space_preserve
         self.check_lite = check_lite
         self.transformers = transformers  # of: meta_name, openid, dublin_core
         # embedded-RDF-only traversal, mirroring the reference's
@@ -513,11 +505,6 @@ class RDFaProcessor:
             ctx.default_ns = None
         return ctx
 
-    def _initial_vocabulary(self, host: str) -> Optional[str]:
-        if host in DEFAULT_VOCABULARY:
-            return DEFAULT_VOCABULARY[host]
-        return None
-
     def _update_mappings(self, node: Node, ctx: EvalContext,
                          inherited: Optional[EvalContext]):
         """Prefix / term / vocab maps (reference: pyRdfa/termorcurie.py:166-354).
@@ -530,10 +517,10 @@ class RDFaProcessor:
 
         # default vocabulary (@vocab, 1.1 only; termorcurie.py:199-221)
         if ctx.rdfa_version >= "1.1":
-            ctx.vocab = self._initial_vocabulary(ctx.host) if top else inherited.vocab
+            ctx.vocab = DEFAULT_VOCABULARY.get(ctx.host) if top else inherited.vocab
             if "vocab" in attrs:
                 if attrs["vocab"] == "":
-                    ctx.vocab = self._initial_vocabulary(ctx.host) if top else None
+                    ctx.vocab = DEFAULT_VOCABULARY.get(ctx.host) if top else None
                 else:
                     v = self.get_uri(node, ctx, "vocab")
                     if v:
@@ -834,7 +821,7 @@ class RDFaProcessor:
             return
         value = attrs.get("datetime")
         if value is None and node.tag == "time":
-            value = self._collect_text(node)
+            value = node.text_content()
         if value is None:
             return
         if "datatype" not in attrs:
@@ -1131,8 +1118,8 @@ class RDFaProcessor:
                 return Literal(self._xml_literal(node, ctx), None, RDF_XMLLITERAL)
             if datatype == RDF_HTMLLITERAL:
                 return Literal(self._html_literal(node, ctx), None, RDF_HTMLLITERAL)
-            return self._create_literal(self._collect_text(node), datatype, lang)
-        return self._create_literal(self._collect_text(node), "", lang)
+            return self._create_literal(node.text_content(), datatype, lang)
+        return self._create_literal(node.text_content(), "", lang)
 
     def _create_literal(self, val, datatype, lang) -> Literal:
         """Typed-literal creation with validation-as-diagnostics
@@ -1143,12 +1130,6 @@ class RDFaProcessor:
             self.warn("incompatible-literal",
                       f"value {val!r} does not match datatype {datatype}")
         return Literal(val, None, datatype)
-
-    def _collect_text(self, node: Node) -> str:
-        rc = node.text_content()
-        if self.space_preserve:
-            return rc
-        return re.sub(r"(\r| |\n|\t)+", " ", rc).strip()
 
     def _xml_literal(self, node: Node, ctx) -> str:
         """rdf:XMLLiteral serialization with xmlns/xml:base decoration
@@ -1273,11 +1254,11 @@ class RDFaProcessor:
             elif datatype == RDF_HTMLLITERAL:
                 obj = Literal(self._html_literal(node, ctx), None, RDF_HTMLLITERAL)
             else:
-                obj = self._create_literal(self._collect_text(node), datatype, lang)
+                obj = self._create_literal(node.text_content(), datatype, lang)
         elif node.element_children():
             obj = Literal(self._xml_literal(node, ctx), None, RDF_XMLLITERAL)
         else:
-            obj = self._create_literal(self._collect_text(node), "", lang)
+            obj = self._create_literal(node.text_content(), "", lang)
         for prop in self.get_uri(node, ctx, "property"):
             if is_bnode(prop):
                 self.warn("bnode-predicate",

@@ -26,6 +26,7 @@ one UDF call.  Cross-document global dedup, when wanted, is the separate
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import sys
@@ -231,14 +232,10 @@ def extract_tagged(transcripts: DataFrame,
         df = df.repartition(repartition_to,
                             F.pmod(F.hash("conv_id", "turn_idx"),
                                    F.lit(repartition_to)))
-    if hturtle_only or microdata or max_doc_bytes is not None:
-        def run(batches):
-            return _extract_batches(batches, hturtle_only=hturtle_only,
-                                    microdata=microdata,
-                                    max_doc_bytes=max_doc_bytes)
-
-        return df.mapInArrow(run, schema=TRIPLE_SCHEMA)
-    return df.mapInArrow(_extract_batches, schema=TRIPLE_SCHEMA)
+    return df.mapInArrow(
+        functools.partial(_extract_batches, hturtle_only=hturtle_only,
+                          microdata=microdata, max_doc_bytes=max_doc_bytes),
+        schema=TRIPLE_SCHEMA)
 
 
 def split_outputs(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -282,74 +279,6 @@ def write_triples(triples: DataFrame, path: str, buckets: int = 16) -> None:
      .parquet(path))
 
 
-def compact_triples(spark, path: str, max_files: int = 4,
-                    target_bytes: int = 128 * 1024 * 1024) -> dict:
-    """Small-file compaction for a :func:`write_triples` /
-    ``run_bucketed`` table: incremental per-bucket appends accumulate
-    many small parquet files, and at 100 TB the scan's task count (and
-    the namenode/manifest pressure) grows with FILE count, not data
-    size.  Each partition holding more than ``max_files`` data files is
-    rewritten into ``ceil(bytes / target_bytes)`` files, re-sorted by
-    ``(subj, pred)`` so the min/max-statistics pruning
-    :func:`write_triples` established survives compaction.
-
-    The rewrite is verify-then-swap per partition: the compacted copy
-    lands in a sibling temp directory, its row count must equal the
-    original's, and only then does a directory rename replace the old
-    partition — a failed compaction leaves the table untouched.  In
-    production this is exactly Iceberg's ``rewrite_data_files``
-    (snapshot-isolated); the directory swap emulates it in the
-    catalog-less sandbox.  Lineage manifests (``_lineage/``) describe
-    bucket INPUT fingerprints, which compaction does not change.
-    This whole-partition variant loops partition directories
-    driver-side — fine for a bounded bucket count, but the 100 TB
-    path is :func:`compact_triples_planned`, which routes the
-    grouping decision through the distributed binpack planner
-    (:func:`pyrdfa3_spark.plans.maintenance.compaction_plan`) and
-    rewrites one bin-group at a time with a journaled resumable swap.
-
-    Returns {partition: {files_before, files_after, rows}}.
-    """
-    import math
-    import shutil
-
-    report = {}
-    for d in sorted(os.listdir(path)):
-        full = os.path.join(path, d)
-        if not (d.startswith("conv_bucket=") and os.path.isdir(full)):
-            continue
-        files = [f for f in os.listdir(full)
-                 if f.endswith(".parquet") and not f.startswith(".")]
-        if len(files) <= max_files:
-            continue
-        total = sum(os.path.getsize(os.path.join(full, f))
-                    for f in files)
-        n_out = max(1, math.ceil(total / target_bytes))
-        df = spark.read.parquet(full)
-        n_before = df.count()
-        tmp = full + ".compacting"
-        if os.path.isdir(tmp):            # crashed prior attempt
-            shutil.rmtree(tmp)
-        (df.coalesce(n_out)
-         .sortWithinPartitions("subj", "pred")
-         .write.mode("overwrite")
-         .option("compression", "zstd")
-         .parquet(tmp))
-        n_after = spark.read.parquet(tmp).count()
-        if n_after != n_before:
-            shutil.rmtree(tmp)
-            raise RuntimeError(
-                f"compaction of {full} would change row count "
-                f"({n_before} -> {n_after}); partition left untouched")
-        shutil.rmtree(full)
-        os.rename(tmp, full)
-        report[d] = {"files_before": len(files),
-                     "files_after": len([f for f in os.listdir(full)
-                                         if f.endswith(".parquet")]),
-                     "rows": n_before}
-    return report
-
-
 def _finish_compaction_swap(staging: str) -> bool:
     """Complete (or discard) a staged group rewrite.  With a journal
     present the rewrite is VERIFIED — deleting the inputs and moving
@@ -379,15 +308,18 @@ def _finish_compaction_swap(staging: str) -> bool:
 def compact_triples_planned(spark, path: str,
                             target_bytes: int = 128 * 1024 * 1024,
                             min_group_files: int = 2) -> dict:
-    """Plan-driven small-file compaction: the grouping decision runs
-    through the DISTRIBUTED binpack planner
+    """Small-file compaction for a :func:`write_triples` /
+    ``run_bucketed`` table: incremental per-bucket appends accumulate
+    many small parquet files, and the scan's task count (and the
+    manifest pressure) grows with FILE count, not data size.
+
+    The grouping decision runs through the DISTRIBUTED binpack planner
     (:func:`pyrdfa3_spark.plans.maintenance.compaction_plan` — the
     two-phase prefix sum, no global window), and each resulting bin
-    rewrites as one group.  This is the 100 TB path
-    :func:`compact_triples` documents: a lake-scale listing is tens
-    of millions of files, so the who-joins-which-rewrite decision
-    must not be a driver-side loop over directories — only the final
-    rewrite WORKLIST (one row per bin, manifest-scale) is collected.
+    rewrites as one group.  A lake-scale listing is tens of millions
+    of files, so the who-joins-which-rewrite decision must not be a
+    driver-side loop over directories — only the final rewrite
+    WORKLIST (one row per bin, manifest-scale) is collected.
 
     Files stay inside their partition: path order groups a
     partition's files contiguously, and a bin straddling a partition

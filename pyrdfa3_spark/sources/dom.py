@@ -11,7 +11,6 @@ inside the Arrow batch UDF.
 
 from __future__ import annotations
 
-import html as _htmlmod
 import re
 from html.parser import HTMLParser
 from xml.dom import minidom
@@ -170,6 +169,18 @@ def _autoclose_index(stack: list, tag: str):
     return None
 
 
+def _p_in_button_scope(stack: list):
+    """Index of the open <p> a block start tag implicitly closes, or
+    None when a button-scope boundary comes first."""
+    for i in range(len(stack) - 1, 0, -1):
+        t = stack[i].tag
+        if t == "p":
+            return i
+        if t in _BUTTON_SCOPE:
+            return None
+    return None
+
+
 # the table's section elements: one of these start tags ends the open
 # section (with any row or cell inside it) back at the table
 _TABLE_SECTIONS = frozenset(
@@ -242,14 +253,10 @@ class _TreeBuilder(HTMLParser):
     def _close_p_in_button_scope(self) -> None:
         if not self._open_p:
             return
-        for i in range(len(self.stack) - 1, 0, -1):
-            t = self.stack[i].tag
-            if t == "p":
-                self._collect_fmt(self.stack[i + 1:])
-                self._pop_to(i)
-                return
-            if t in _BUTTON_SCOPE:
-                return
+        i = _p_in_button_scope(self.stack)
+        if i is not None:
+            self._collect_fmt(self.stack[i + 1:])
+            self._pop_to(i)
 
     def _autoclose(self, tag: str) -> None:
         i = _autoclose_index(self.stack, tag)
@@ -409,82 +416,69 @@ class _TreeBuilder(HTMLParser):
 
 
 # Fast path: most transcript fragments are well-formed XML, which expat
-# (C) parses ~2x faster than html.parser's pure-Python tokenizer.  The
-# fallback (html.parser) handles everything expat rejects: unclosed/void
-# elements, unquoted attributes, HTML-only entities, raw '<' in scripts,
-# doctypes, duplicate attributes.  Tags/attrs are lowercased so both
-# paths build identical trees.  One true divergence is gated out below:
-# expat normalizes tab/newline inside attribute values (XML spec) while
-# html.parser preserves them, so any document with a control char inside
-# a tag takes the slow path.
+# (C) parses faster than html.parser's pure-Python tokenizer.  It is a
+# plain XML reader: tags and attribute names are lowercased and every
+# node it creates is in its input.
+#
+# Invariant: expat builds only trees that no HTML5 fixup would change.
+# The fixups themselves (auto-close, implied tbody/tr, foster
+# parenting, formatting reconstruction, void elements, </br>) live in
+# _TreeBuilder alone.  Wherever one could apply, the fast path raises
+# and parse_html hands the document to _TreeBuilder:
+#
+# * table markup (_ROUTE_OUT), and </br>, before expat runs;
+# * a block start tag while a <p> is open in button scope;
+# * an li/dd/dt/option start tag that auto-closes an open one;
+# * content inside a void element;
+# * a CDATA section (HTML parses it as a bogus comment);
+# * in parse_html, a tab/newline inside a tag (_TAG_CTRL_WS): expat
+#   normalizes it in attribute values, html.parser keeps it.
+#
+# A new fixup goes into _TreeBuilder, plus one route-out here.
+# perfbench/measure.py::_takes_fast_path mirrors the gate (_TAG_CTRL_WS,
+# then a _parse_html_fast attempt).
 _TAG_CTRL_WS = re.compile(r"<[^>]*[\t\n\r]")
 
-# gate for the fast path's HTML5 fixup checks ("<p" over-matches
-# <pre>/<param>, "<li" <link> etc. — it is only a gate, never a
-# semantic test)
-_FIXUP_SCAN = re.compile(r"<(?:table|p|li|d[dt])", re.IGNORECASE)
+# one C-speed scan gates every route-out check below: a document with
+# none of these prefixes (most RDFa fragments) pays nothing more.  It
+# over-matches (<pre, <link, <track, ...): only a gate, never a test.
+_FIXUP_SCAN = re.compile(r"<(?:t[abdfhr]|p|li|d[dt]|option|/br)",
+                         re.IGNORECASE)
+
+# run on the lowercased text: a table, section, row or cell start tag
+# (the "in table" insertion modes) or a </br> end tag
+_ROUTE_OUT = re.compile(r"<(?:t(?:able|body|head|foot|[dhr])|/br)[\s/>]")
 
 
 def _parse_html_fast(text: str) -> Node:
     from xml.parsers import expat
 
-    doc = Node("#document")
-    stack = [doc]
-    # one C-speed regex scan gates ALL per-element HTML5 fixup checks:
-    # a document with no <table, <p..., <li, <dd or <dt tag (the
-    # overwhelming majority of RDFa fragments) pays three boolean
-    # tests per element
-    # and keeps the plain O(1) end-tag pop — the fast path stays fast
     if _FIXUP_SCAN.search(text) is None:
-        has_table = has_p = has_list = False
+        has_p = has_autoclose = False
     else:
         tl = text.lower()
-        has_table = "<table" in tl
+        if _ROUTE_OUT.search(tl):
+            raise ValueError("table markup or </br>")
         has_p = "<p" in tl
-        has_list = "<li" in tl or "<dd" in tl or "<dt" in tl
+        has_autoclose = ("<li" in tl or "<dd" in tl or "<dt" in tl
+                         or "<option" in tl)
+
+    doc = Node("#document")
+    stack = [doc]
 
     def start(tag, attrs):
-        if len(stack) >= MAX_DEPTH + 1:  # +1: synthetic wrapper level
+        if len(stack) >= MAX_DEPTH + 1:  # +1: the sgr-root wrapper
             raise DocumentTooDeep(
                 f"element nesting exceeds MAX_DEPTH={MAX_DEPTH}")
         tag = tag.lower()
-        cur = stack[-1].tag
-        # well-formed XML whose HTML5 tree would still differ from the
-        # XML tree: content the table insertion modes re-home (foster
-        # parenting) and block elements inside <p> (the spec closes
-        # the p first) route to the tolerant parser, which implements
-        # those fixups — both paths stay identical.  The deterministic
-        # implied-tbody/tr insertions are mirrored inline (synthetic
-        # frames; the end handler pops through them).
-        if has_table and cur in _TABLE_CTX:
-            if tag not in _TABLE_CTX[cur]:
-                raise ValueError(
-                    "HTML5 insertion rules diverge from XML here: "
-                    "use tolerant parser")
-            if tag == "tr" and cur == "table":
-                tb = Node("tbody")
-                stack[-1].append(tb)
-                stack.append(tb)
-            elif tag in ("td", "th") and cur in ("table", "tbody",
-                                                 "thead", "tfoot"):
-                if cur == "table":
-                    tb = Node("tbody")
-                    stack[-1].append(tb)
-                    stack.append(tb)
-                trn = Node("tr")
-                stack[-1].append(trn)
-                stack.append(trn)
-        if has_p and cur == "p" and tag in _BLOCK_CLOSES_P:
-            raise ValueError(
-                "HTML5 insertion rules diverge from XML here: "
-                "use tolerant parser")
-        # an li/dd/dt nested in an open one of its kind (no special
-        # element between) is auto-closed to a sibling by HTML5
-        if (has_list and tag in ("li", "dd", "dt")
+        if stack[-1].tag in _VOID_ELEMENTS:
+            raise ValueError("element inside a void element")
+        if (has_p and tag in _BLOCK_CLOSES_P
+                and _p_in_button_scope(stack) is not None):
+            raise ValueError(f"<{tag}> closes an open <p>")
+        if (has_autoclose and tag in _AUTOCLOSE
                 and _autoclose_index(stack, tag) is not None):
-            raise ValueError(
-                "HTML5 insertion rules diverge from XML here: "
-                "use tolerant parser")
+            raise ValueError(f"<{tag}> implicitly closes an open element")
         amap = {}
         for i in range(0, len(attrs), 2):
             k = attrs[i].lower()
@@ -495,37 +489,18 @@ def _parse_html_fast(text: str) -> Node:
         stack.append(n)
 
     def chardata(d):
-        if not d:
-            return
-        if has_table and stack[-1].tag in _TABLE_CTX and d.strip():
-            raise ValueError(
-                "text in table context is foster-parented in HTML5: "
-                "use tolerant parser")
+        if stack[-1].tag in _VOID_ELEMENTS:
+            raise ValueError("text inside a void element")
         stack[-1].append(d)
 
     def reject_cdata():
-        # expat would surface CDATA content as text, but HTML parsing
-        # (html5lib and our tolerant fallback) treats <![CDATA[...]]> as
-        # a bogus comment and drops it — force the fallback so both
-        # paths emit identical literals for the same fragment
-        raise ValueError("CDATA section: not HTML, use tolerant parser")
+        raise ValueError("CDATA section")
 
     p = expat.ParserCreate()
     p.ordered_attributes = True
     p.buffer_text = True
-    def end(tag):
-        t = tag.lower()
-        # pop through synthetic implied-tbody/tr frames (they have no
-        # end event of their own; well-formed XML guarantees the match)
-        while len(stack) > 1 and stack[-1].tag != t:
-            stack.pop()
-        stack.pop()
-
     p.StartElementHandler = start
-    # synthetic frames can only exist when a table does — table-free
-    # documents keep the plain O(1) pop
-    p.EndElementHandler = end if has_table else (
-        lambda tag: stack.pop())
+    p.EndElementHandler = lambda tag: stack.pop()
     p.CharacterDataHandler = chardata
     p.StartCdataSectionHandler = reject_cdata
     p.Parse("<sgr-root>" + text + "</sgr-root>", True)
@@ -650,7 +625,3 @@ def serialize_node(node: Node, extra_attrs: dict[str, str] | None = None) -> str
             parts.append(escape_text(c))
     parts.append(f"</{node.tag}>")
     return "".join(parts)
-
-
-def unescape_html(s: str) -> str:
-    return _htmlmod.unescape(s)

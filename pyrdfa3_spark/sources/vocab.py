@@ -18,25 +18,6 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pyrdfa3_spark.operators.rdfa_engine import Literal
-
-
-def vocab_triples_from_turtle(spark: SparkSession, turtle_text: str,
-                              base: str = "") -> DataFrame:
-    """Parse a vocabulary document (turtle) into a triple DataFrame with
-    the standard 6-column shape."""
-    from pyrdfa3_spark.functions.turtle import parse_turtle
-
-    rows = []
-    for s, p, o in parse_turtle(turtle_text, base=base):
-        if isinstance(o, Literal):
-            rows.append((s, p, o.value, False, o.lang, o.datatype))
-        else:
-            rows.append((s, p, o, True, None, None))
-    return spark.createDataFrame(
-        rows, "subj string, pred string, obj string, obj_is_iri boolean, "
-              "obj_lang string, obj_datatype string")
-
 
 def cached_vocab(spark: SparkSession, cache_dir: str, vocab_iri: str,
                  loader, ttl_seconds: float | None = None,

@@ -331,11 +331,15 @@ def test_open_p_count_matches_stack_on_tag_soup():
     "<dl><dt>a<dd>b</dd></dt></dl>",
     "<ul><li>a<ul><li>b</li></ul></li></ul>",
     "<ul><li>a<div><ul><li>b</li></ul></div></li></ul>",
+    "<table><tr><td>a</td></tr></table>",
+    "<table><tbody><tr><td>a</td></tr></tbody></table>",
+    "<div><TABLE><caption>c</caption></TABLE></div>",
 ])
 def test_list_items_same_tree_on_both_builders(doc):
     # well-formed XML with an li/dd/dt directly inside an open one
     # leaves the fast path (HTML5 makes them siblings); a nested list
-    # is a scope boundary and stays on it
+    # is a scope boundary and stays on it.  Table markup always leaves
+    # it, even when no fixup would change the tree.
     from pyrdfa3_spark.sources.dom import _parse_html_fast, _TreeBuilder
 
     b = _TreeBuilder()
@@ -347,6 +351,89 @@ def test_list_items_same_tree_on_both_builders(doc):
     if nested_list:
         fast = _parse_html_fast(doc).element_children()[0]
         assert _shape(fast) == tolerant
+    else:
+        with pytest.raises(ValueError):
+            _parse_html_fast(doc)
+
+
+def _full_shape(n):
+    """Like _shape, but every text node (whitespace too) is kept."""
+    if isinstance(n, str):
+        return n
+    return (n.tag, [_full_shape(c) for c in n.children])
+
+
+def _tolerant_children(doc):
+    from pyrdfa3_spark.sources.dom import _TreeBuilder
+
+    b = _TreeBuilder()
+    b.feed(doc)
+    b.close()
+    return [_full_shape(c) for c in b.root.children]
+
+
+def test_fast_path_builds_tolerant_tree_or_routes_out():
+    # differential: on well-formed XML the expat reader either builds
+    # exactly _TreeBuilder's tree, with one node per start tag, or
+    # raises; table markup always raises
+    import random
+
+    from pyrdfa3_spark.sources.dom import _parse_html_fast
+
+    tags = "table tbody tr td p div ul li dl dt dd span b".split()
+    rng = random.Random(11)
+
+    def element(depth):
+        tag = rng.choice(tags)
+        kids = "".join(
+            element(depth + 1) if depth < 4 and rng.random() < 0.5
+            else rng.choice(("t", " "))
+            for _ in range(rng.randint(0, 3)))
+        return f"<{tag}>{kids}</{tag}>"
+
+    seen = {"fast": 0, "table": 0, "other": 0}
+    for _ in range(1500):
+        doc = "".join(element(0) for _ in range(rng.randint(1, 2)))
+        try:
+            fast = _parse_html_fast(doc)
+        except ValueError:
+            fast = None
+        if "<table" in doc:
+            assert fast is None, doc
+            seen["table"] += 1
+        elif fast is None:
+            seen["other"] += 1
+        else:
+            seen["fast"] += 1
+            assert ([_full_shape(c) for c in fast.children]
+                    == _tolerant_children(doc)), doc
+            n_elements = sum(1 for _ in fast.iter_elements()) - 1
+            assert n_elements == doc.count("</"), doc
+    assert min(seen.values()) >= 50, seen
+
+
+@pytest.mark.parametrize("doc, fast", [
+    # a block start tag closes a <p> open in button scope ...
+    ("<p><span><div>x</div></span></p>", False),
+    # ... but not across a button
+    ("<p><button><div>x</div></button></p>", True),
+    ("<select><option>a<option>b</option></option></select>", False),
+    ("<select><option>a</option><option>b</option></select>", True),
+    # section/row/cell markup outside a table
+    ("<tbody><td>x</td></tbody>", False),
+    ("<div><tr><td>a<td>b</td></td></tr></div>", False),
+    # void elements hold nothing, and </br> is a <br>
+    ("<div><img>x</img></div>", False),
+    ("<div><br></br></div>", False),
+    ('<div><br/>x<img src="a"></img><track/></div>', True),
+])
+def test_route_outs_keep_trees_identical(doc, fast):
+    from pyrdfa3_spark.sources.dom import _parse_html_fast
+
+    tolerant = _tolerant_children(doc)
+    if fast:
+        got = _parse_html_fast(doc)
+        assert [_full_shape(c) for c in got.children] == tolerant
     else:
         with pytest.raises(ValueError):
             _parse_html_fast(doc)

@@ -351,43 +351,6 @@ def test_checkpoint_resume(spark, tmp_path):
     assert m2["processed_buckets"] == [] and m2["skipped_buckets"] == [0, 1]
 
 
-def test_compact_triples(spark, tmp_path):
-    """Small-file compaction: fragmented partitions rewrite into few
-    files with identical content, partitions under the threshold are
-    untouched, and a leftover temp dir from a crashed attempt is
-    cleaned up rather than tripping the rewrite."""
-    import os
-
-    from pyrdfa3_spark.plans.extract import compact_triples
-
-    out = str(tmp_path / "graph")
-    df = spark.range(0, 400).selectExpr(
-        "CAST(id AS STRING) AS conv_id", "'s' || id AS subj",
-        "'p' AS pred", "'o' || id AS obj")
-    # fragment: many tasks per bucket -> many small files
-    (df.repartition(16)
-     .withColumn("conv_bucket", F.pmod(F.hash("conv_id"), F.lit(2)))
-     .write.partitionBy("conv_bucket").parquet(out))
-    part = next(d for d in os.listdir(out)
-                if d.startswith("conv_bucket="))
-    n_files = len([f for f in os.listdir(os.path.join(out, part))
-                   if f.endswith(".parquet")])
-    assert n_files > 4
-    before = sorted(map(tuple, spark.read.parquet(out)
-                        .select("subj", "pred", "obj").collect()))
-    # a crashed prior attempt left a temp dir behind
-    os.makedirs(os.path.join(out, part + ".compacting"), exist_ok=True)
-
-    report = compact_triples(spark, out, max_files=4)
-    assert part in report
-    assert report[part]["files_after"] <= 4 < report[part]["files_before"]
-    after = sorted(map(tuple, spark.read.parquet(out)
-                       .select("subj", "pred", "obj").collect()))
-    assert after == before
-    # second pass: nothing left to compact
-    assert compact_triples(spark, out, max_files=4) == {}
-
-
 def test_checkpoint_stale_detection(spark, tmp_path):
     from pyrdfa3_spark.sources.transcripts import synth_transcripts
     from pyrdfa3_spark.streaming.checkpoint import run_bucketed, stale_buckets
@@ -3124,9 +3087,9 @@ def test_shacl_value_facets(spark):
 def test_compact_triples_planned(spark, tmp_path):
     """Plan-driven group compaction: grouping runs through the
     distributed binpack planner, groups never mix partitions, content
-    is identical after the rewrite, and a crashed mid-swap staging
-    dir (journal written, inputs partially deleted) is repaired on
-    the next run."""
+    is identical after the rewrite, a crashed mid-swap staging dir
+    (journal written, inputs partially deleted) is repaired on the
+    next run, and a run after that is a no-op."""
     import json
     import os
 
@@ -3215,6 +3178,9 @@ def test_compact_triples_planned(spark, tmp_path):
     repaired = sorted(map(tuple, spark.read.parquet(out)
                           .select("subj", "pred", "obj").collect()))
     assert repaired == before
+    # a further run: nothing left to compact or repair
+    assert compact_triples_planned(spark, out, target_bytes=10**9) == {
+        "groups": {}, "repaired": 0}
 
 
 def test_pii_scan_and_redact(spark):

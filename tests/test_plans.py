@@ -655,3 +655,19 @@ def test_pii_and_repetition_plans_are_single_scan(spark):
         assert "Exchange" not in simple, (fn.__name__, simple)
         assert "Python" not in simple and "InPandas" not in simple \
             and "MapInArrow" not in simple, (fn.__name__, simple)
+
+
+def test_correctness_window_puts_never_green_entries_first():
+    import __spark_entry__ as entrymod
+    from pyrdfa3_spark.plans.queries import QUERIES
+
+    assert set(entrymod.queries()) == set(QUERIES)
+    names = list(QUERIES)
+    green = {"rows_match": True, "hash_match": True}
+    # names[1] is missing from every round; names[2] was only ever red
+    rounds = [{n: green for n in names if n not in names[1:3]},
+              {names[2]: {"rows_match": True, "hash_match": False}},
+              {names[2]: {"rows_match": None, "hash_match": None}}]
+    order = entrymod._window_order(names, rounds)
+    assert order[:2] == [names[1], names[2]]
+    assert order[2:] == [n for n in names if n not in names[1:3]]
