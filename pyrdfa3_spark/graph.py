@@ -473,7 +473,9 @@ class SparkGraph:
         return SparkGraph(_update(self.df, text), self._ns)
 
     def ask(self, patterns, filters=None) -> bool:
-        return G.ask(self._set_frame(), patterns,
+        # existence reads the same over the bag as over the set, so
+        # ASK skips _set_frame's dedup shuffle
+        return G.ask(self.df, patterns,
                      filters=filters).collect()[0]["result"]
 
     def construct(self, patterns, template, **kw) -> "SparkGraph":
@@ -503,8 +505,8 @@ class SparkGraph:
             # rdflib's serialize returns a full document, @prefix
             # directives included — without them the pname-compressed
             # blocks are not parseable turtle, so prepend the header
-            # block (same union write_turtle uses: the 1-row local
-            # header partition collects ahead of the body partitions).
+            # block (the 1-row local header partition collects ahead
+            # of the body partitions).
             body = S.to_turtle(df, prefixes=self._ns or None)
             header = df.sparkSession.createDataFrame(
                 [(S.turtle_header(self._ns or None),)], ["block"])

@@ -1359,73 +1359,112 @@ def bgp_values(triples: DataFrame,
     is unconstrained for that row, per the spec's compatible-mapping
     rule.
 
-    Scale shape: the binding table is literal driver data, so Spark
-    broadcasts it and the join never shuffles the solution side.  UNDEF
-    support without a non-equi join: rows group by their defined-column
-    mask, each group equi-joins on exactly its defined variables, and
-    the groups union — every join stays a hash join.
+    :func:`bgp_match` plus :func:`join_values`, with the required
+    patterns' variables as the known-bound set: a VALUES variable they
+    bind is a broadcast hash-join key, while one only an OPTIONAL binds
+    joins on ``IS NULL OR =`` and an unbound cell adopts the row's
+    value (§18.5).  A filter that reads a VALUES variable the required
+    patterns don't bind (OPTIONAL-only or extension) applies after the
+    join (§18.2.2: filters apply at group end).
     """
     if not var_names:
         raise ValueError("bgp_values needs at least one variable")
-    for r in rows:
-        if len(r) != len(var_names):
-            raise ValueError(f"VALUES row {r} arity != {var_names}")
+    bound = {t[1:] for pat in patterns for t in pat
+             if isinstance(t, str) and t.startswith("?")}
+    unbound = [v for v in var_names if v not in bound]
+    held = [e for e in filters or ()
+            if any(re.search(rf"\b{re.escape(v)}\b", e) for v in unbound)]
     sols = bgp_match(triples, patterns, optional=optional,
-                     filters=filters, shape_vars=shape_vars,
-                     path_edges=path_edges)
-    shared = [v for v in var_names if v in sols.columns]
-    if not shared:
+                     filters=[e for e in filters or () if e not in held]
+                     or None,
+                     shape_vars=shape_vars, path_edges=path_edges)
+    if not any(v in sols.columns for v in var_names):
         raise ValueError(
             "VALUES shares no variable with the pattern group — the "
             "binding table would cross-join every solution")
+    out = join_values(sols, var_names, rows, bound=bound,
+                      shape_vars=shape_vars)
+    for e in held:
+        out = out.filter(e)
+    return out
 
-    spark = triples.sparkSession
-    extra = [v for v in var_names if v not in sols.columns]
-    if not rows:  # empty binding table: joins away every solution
-        out = sols.limit(0)
-        for v in extra:
-            out = out.withColumn(v, F.lit(None).cast("string"))
-        return ensure_shape_companions(out, shape_vars)
-    by_mask: dict[tuple[str, ...], list[tuple]] = {}
+
+def join_values(sols: DataFrame, names: list[str], rows: list[tuple],
+                bound=(), shape_vars=None) -> DataFrame:
+    """Join a SPARQL VALUES table onto a solution frame — the one
+    VALUES join, serving :func:`bgp_values` and every VALUES form of
+    the SPARQL front end (group, pattern-less and trailing).
+
+    ``names`` are the VALUES variables and ``rows`` their bindings;
+    ``None`` is UNDEF and constrains nothing.  ``bound`` names the
+    columns of ``sols`` the caller knows are never NULL.  Rows group by
+    their defined-cell mask and each group joins its own broadcast
+    binding table:
+
+    * a defined shared column in ``bound`` is an equi-join key, so the
+      plan is a broadcast hash join that never shuffles ``sols``;
+    * any other defined shared column matches on ``IS NULL OR =`` and
+      an unbound (NULL) cell adopts the row's value (§18.5
+      compatibility); with no key column this is a broadcast nested
+      loop, bounded by the inline table's size;
+    * a name absent from ``sols`` is an extension variable: it binds
+      the row's value (NULL where the row says UNDEF).
+
+    VALUES joins as a bag: a solution compatible with several rows
+    multiplies, and a row with no defined cell keeps every solution
+    once per row.  Bindings the table introduces or adopts for a
+    variable in ``shape_vars`` carry lexically-inferred shape
+    companions."""
     for r in rows:
-        mask = tuple(v for v, cell in zip(var_names, r)
-                     if cell is not None and v in shared)
-        by_mask.setdefault(mask, []).append(r)
+        if len(r) != len(names):
+            raise ValueError(f"VALUES row {r} arity != {names}")
+    new = [n for n in names if n not in sols.columns]
+    null = "CAST(NULL AS STRING)"
 
+    def s(c):
+        return f"__vj_s.{_sql_ident(c)}"
+
+    def v(c):
+        return f"__vj_v.{_sql_ident(c)}"
+
+    groups: dict[tuple[int, ...], list[tuple]] = {}
+    for r in rows:
+        groups.setdefault(tuple(i for i, c in enumerate(r)
+                                if c is not None), []).append(r)
     out = None
-    for mask, grp in by_mask.items():
-        if not mask and not extra:
-            # rows binding nothing at all keep every solution — one
-            # union branch PER ROW (bag semantics: VALUES joins as a
-            # multiset, so k all-UNDEF rows multiply solutions by k)
-            joined = sols
-            for _ in grp[1:]:
-                joined = joined.unionByName(sols)
+    for mask, rs in groups.items():
+        cols = [names[i] for i in mask]
+        if not cols:
+            one = sols.selectExpr(
+                "*", *[f"{null} AS {_sql_ident(c)}" for c in new])
+            part = one
+            for _ in rs[1:]:
+                part = part.unionByName(one)
         else:
-            vals = spark.createDataFrame(
-                [tuple(str(c) if c is not None else None for c in r)
-                 for r in grp],
-                ", ".join(f"`{v}` string" for v in var_names))
-            if mask:
-                # no dropDuplicates: VALUES joins as a MULTISET
-                # (§18.5) — duplicate bound rows multiply solutions,
-                # same bag posture as the branches below
-                joined = sols.join(
-                    F.broadcast(vals.select(*mask, *extra)),
-                    list(mask), "inner")
-            else:
-                # rows whose defined cells are all UNDEF or all on
-                # extension variables constrain nothing: each is a
-                # union branch keeping every solution, extended with
-                # that row's extra bindings (NULL when those are UNDEF
-                # too) — no dropDuplicates: duplicate rows keep their
-                # bag multiplicity, like the all-UNDEF branch above
-                joined = sols.crossJoin(
-                    F.broadcast(vals.select(*extra)))
-        out = joined if out is None else out.unionByName(
-            joined, allowMissingColumns=True)
-    # VALUES-introduced bindings carry no store shape: infer lexically
-    return ensure_shape_companions(out, shape_vars)
+            lit = sols.sparkSession.createDataFrame(
+                [tuple(str(r[i]) for i in mask) for r in rs],
+                ", ".join(f"{_sql_ident(c)} string" for c in cols))
+            left = sols.alias("__vj_s")
+            right = F.broadcast(lit.alias("__vj_v"))
+            conds = [(f"{s(c)} = {v(c)}" if c in bound
+                      else f"({s(c)} IS NULL OR {s(c)} = {v(c)})")
+                     for c in cols if c in sols.columns]
+            joined = (left.join(right, F.expr(" AND ".join(conds)))
+                      if conds else left.crossJoin(right))
+            part = joined.selectExpr(
+                *[(f"coalesce({s(c)}, {v(c)}) AS {_sql_ident(c)}"
+                   if c in cols and c not in bound else s(c))
+                  for c in sols.columns],
+                *[(v(c) if c in cols else f"{null} AS {_sql_ident(c)}")
+                  for c in new])
+        out = part if out is None else out.unionByName(part)
+    if out is None:  # empty binding table: joins away every solution
+        out = sols.limit(0).selectExpr(
+            "*", *[f"{null} AS {_sql_ident(c)}" for c in new])
+    tracked = [v for v in shape_vars or () if v in names]
+    out = ensure_shape_companions(out, tracked)
+    return repair_adopted_companions(
+        out, [v for v in tracked if v in sols.columns and v not in bound])
 
 
 _SQL_KEYWORDS = frozenset(
@@ -1624,12 +1663,19 @@ def ask(triples: DataFrame,
         patterns: list[tuple[str, str, str]],
         filters: list[str] | None = None) -> DataFrame:
     """SPARQL ASK: one row, one boolean ``result`` column — does the
-    pattern group have any solution.  ``limit(1)`` before the aggregate
-    short-circuits the scan (GlobalLimit stops tasks after the first
-    solution); the aggregate turns present/absent into true/false."""
-    sols = bgp_match(triples, patterns, filters=filters)
-    return sols.limit(1).agg(
-        (F.count(F.lit(1)) > 0).alias("result"))
+    pattern group have any solution (see :func:`ask_solutions`)."""
+    return ask_solutions(bgp_match(triples, patterns, filters=filters))
+
+
+def ask_solutions(sols: DataFrame) -> DataFrame:
+    """Answer ASK over a solution frame with one eager limit-1 take
+    (``isEmpty``): the scan stops at the first solution and runs no
+    shuffle, where a lazy ``limit(1).agg(count)`` plans a
+    single-partition exchange that costs a second job.  The answer is
+    a one-row local relation, which collects without a job."""
+    hit = not sols.isEmpty()
+    return sols.sparkSession.sql(
+        f"VALUES ({str(hit).lower()}) AS t(result)")
 
 
 def describe(triples: DataFrame, nodes: list[str],

@@ -277,57 +277,6 @@ def ivf_assign(embeddings: DataFrame,
                    centroids).alias("cell"))
 
 
-def write_ivf_table(embeddings: DataFrame, centroids: list[list[float]],
-                    path: str) -> None:
-    """Materialize the corpus partitioned by IVF cell — the physical
-    layout that turns every probe into a partition-pruned scan: a query
-    with ``nprobe`` cells reads ``nprobe/n_cells`` of the table's bytes
-    and Catalyst proves it in the plan's PartitionFilters.  (Iceberg in
-    production: ``partitionedBy(ivf_cell)``; parquet emulates here.)"""
-    emb = embeddings.select(
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        F.col("embedding").cast("array<double>").alias("embedding"))
-    (emb.withColumn("cell", _best_cell(F.col("embedding"), centroids))
-     .write.mode("overwrite").partitionBy("cell").parquet(path))
-
-
-def ivf_probe_table(spark, path: str, query_vec: list[float],
-                    centroids: list[list[float]], nprobe: int = 2,
-                    top_k: int = 5) -> DataFrame:
-    """Top-k search against a cell-partitioned IVF table: the probe's
-    cell list is computed driver-side from the (tiny) centroid table and
-    pushed as a partition filter — the scan never touches non-probed
-    cells."""
-    import math
-
-    sims = []
-    qn = math.sqrt(sum(x * x for x in query_vec)) or 1.0
-    for i, c in enumerate(centroids):
-        cn = math.sqrt(sum(x * x for x in c)) or 1.0
-        dot = sum(a * b for a, b in zip(query_vec, c))
-        sims.append((round(dot / (qn * cn), 9), i))
-    # mirror ivf_topk's probe ordering: sim desc, idx desc on ties
-    cells = [i for _, i in sorted(sims, key=lambda t: (-t[0], -t[1]))][:nprobe]
-
-    corpus = spark.read.parquet(path).filter(F.col("cell").isin(cells))
-    q = F.array(*[F.lit(v) for v in query_vec])
-    scored = corpus.select(
-        "vec_id",
-        F.round(_cos(q, F.col("embedding")), 4).alias("cos_sim"))
-    # TakeOrderedAndProject (parallel per-partition top-k), then rank
-    # the <= top_k survivors in-row — a probed cell is corpus/n_cells
-    # rows, far too big for a partition-less ranking window
-    top = scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(top_k)
-    packed = top.agg(F.array_sort(F.collect_list(F.struct(
-        (-F.col("cos_sim")).alias("neg"),
-        F.col("vec_id").alias("vec_id")))).alias("ranked"))
-    return (packed
-            .select(F.posexplode("ranked").alias("pos", "r"))
-            .select(F.col("r.vec_id").alias("vec_id"),
-                    (-F.col("r.neg")).alias("cos_sim"),
-                    (F.col("pos") + 1).cast("bigint").alias("rank")))
-
-
 def semantic_dedup(embeddings: DataFrame, centroids: list[list[float]],
                    threshold: float = 0.85,
                    max_bucket: int = 512) -> DataFrame:

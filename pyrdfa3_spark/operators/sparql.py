@@ -2235,18 +2235,6 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
     # match where Catalyst pushes them to the scan (conjunction —
     # same solutions either way)
     bind_targets = [b[0] for b in g["binds"]]
-    if g["values"] is not None:
-        # VALUES EXTENSION variables (bound by the row table, not the
-        # patterns) only exist after the VALUES join inside bgp_values
-        pat_vars = set()
-        for grp_pats in ([g["patterns"]]
-                         + [o["patterns"] for o in g["optionals"]]):
-            for s, p, o in grp_pats:
-                for term in (s, p if isinstance(p, str) else "", o):
-                    if term.startswith("?"):
-                        pat_vars.add(term[1:])
-        bind_targets += [n for n in g["values"][0]
-                         if n not in pat_vars]
     pre_bind, post_bind = [], []
     for e in g["filters"]:
         if any(re.search(rf"\b{re.escape(v)}\b", e)
@@ -2327,45 +2315,10 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
         try:
             if g["values"] is not None:
                 names, rows = g["values"]
-                opt_vars = set()
-                for o in (inline_opt or []):
-                    opt_vars |= pattern_vars(o["patterns"])
-                nullable_shared = (set(names) & opt_vars
-                                   - pattern_vars(g["patterns"]))
-                if nullable_shared:
-                    # a VALUES variable an OPTIONAL may leave unbound
-                    # needs the §18.5 compatibility join (unbound
-                    # adopts the row's binding) — bgp_values'
-                    # defined-mask equi-join would drop the solution;
-                    # filters reading it must wait until after the
-                    # adoption (§18.2.2: filters at group end)
-                    held = [e for e in (inline_filters or [])
-                            if any(re.search(rf"\b{re.escape(v)}\b",
-                                             e)
-                                   for v in nullable_shared)]
-                    kept = [e for e in (inline_filters or [])
-                            if e not in held]
-                    sols = match(g["patterns"],
-                                 optional=inline_opt,
-                                 filters=kept or None,
-                                 shape_vars=sv)
-                    sols = _join_values(sols, names, rows)
-                    # VALUES-introduced bindings carry lexically-
-                    # inferred shapes (same posture as bgp_values);
-                    # cells the compatibility join ADOPTED from a row
-                    # re-infer their stale NULL companions too
-                    sols = G.ensure_shape_companions(sols, sv)
-                    sols = G.repair_adopted_companions(
-                        sols, [n for n in (sv or ())
-                               if n in set(names)])
-                    for e in held:
-                        sols = sols.filter(e)
-                else:
-                    sols = G.bgp_values(t, g["patterns"], names, rows,
-                                        optional=inline_opt,
-                                        filters=inline_filters,
-                                        shape_vars=sv,
-                                        path_edges=edges)
+                sols = G.bgp_values(t, g["patterns"], names, rows,
+                                    optional=inline_opt,
+                                    filters=inline_filters,
+                                    shape_vars=sv, path_edges=edges)
                 acc_certain |= {n for i, n in enumerate(names)
                                 if all(r[i] is not None for r in rows)}
             else:
@@ -2450,29 +2403,20 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
             sols = conjoin(sols, sub, "subquery", sq_certain)
         acc_certain |= sq_certain
     if g["values"] is not None and not g["patterns"]:
-        # with no sibling patterns the VALUES rows join as a literal
-        # frame of their own (bgp_values inlines them otherwise);
-        # _join_values implements the full §18.5 compatibility join
-        # (UNDEF constrains nothing, an unbound solution cell adopts
-        # the row's binding), so NULLs on either side are legal here.
-        # VALUES is a bag: duplicate rows multiply solutions — no dedup
+        # with no sibling patterns the VALUES rows join onto the other
+        # operands' solutions (bgp_values joins them otherwise), or
+        # are the group's solutions when it has no other operand
         names, rows = g["values"]
         if sols is None:
-            sols = triples.sparkSession.createDataFrame(
-                [tuple(None if c is None else str(c) for c in r)
-                 for r in rows],
-                schema=", ".join(f"`{n}` string" for n in names))
+            sols = G.ensure_shape_companions(
+                triples.sparkSession.createDataFrame(
+                    [tuple(None if c is None else str(c) for c in r)
+                     for r in rows],
+                    schema=", ".join(f"`{n}` string" for n in names)),
+                [n for n in sv or () if n in names])
         else:
-            sols = _join_values(sols, names, rows)
-        # VALUES-introduced bindings carry lexically-inferred shapes —
-        # the same posture bgp_values stamps, so the term-shape
-        # builtins answer identically wherever the table appears
-        # (restricted to the VALUES names: other operands' unknown-
-        # shape bindings keep their NULL companions); adopted cells
-        # re-infer stale NULL companions
-        tracked = [n for n in (sv or ()) if n in set(names)]
-        sols = G.ensure_shape_companions(sols, tracked)
-        sols = G.repair_adopted_companions(sols, tracked)
+            sols = G.join_values(sols, names, rows, bound=acc_certain,
+                                 shape_vars=sv)
         acc_certain |= {n for i, n in enumerate(names)
                         if rows and all(r[i] is not None for r in rows)}
     if g["unions"]:
@@ -2758,7 +2702,12 @@ def sparql(triples: DataFrame, text: str, *,
     limit-1 take of the solutions (no shuffle; the scan stops at the
     first solution) and returns the answer as a one-row local frame.
     Every other form is lazy, with the underlying operators' plan
-    shapes.
+    shapes.  Every VALUES form (in a group, in a group with no
+    patterns, trailing the query) joins through
+    ``graphops.join_values``, the same §18.5 compatibility join
+    ``graphops.bgp_values`` uses: variables the group certainly binds
+    are broadcast hash-join keys, and an unbound cell adopts the row's
+    value.
 
     ``union_default`` picks the quad-frame posture when the query
     carries no dataset clause: True (default) matches plain patterns
@@ -2818,14 +2767,7 @@ def sparql(triples: DataFrame, text: str, *,
                            *G.obj_shape_cols(full)))
         _attach_quads(q.get("where"), full)
     if q["form"] == "ask":
-        # eager limit-1 take (isEmpty): the scan stops at the first
-        # solution and runs no shuffle (a lazy limit(1).agg(count)
-        # plans a GlobalLimit whose single-partition exchange costs a
-        # second job); the answer returns as a one-row local
-        # relation, which collects without a job
-        hit = not _solve_group(triples, q["where"]).isEmpty()
-        return triples.sparkSession.sql(
-            f"VALUES ({str(hit).lower()}) AS t(result)")
+        return G.ask_solutions(_solve_group(triples, q["where"]))
     if q["form"] == "describe":
         # parser terms are str subclasses; createDataFrame's schema
         # inference dispatches on exact type, so ground them to str
@@ -2883,18 +2825,12 @@ def sparql(triples: DataFrame, text: str, *,
         _attach_shape(g, frozenset(svars))
         sols = _solve_group(triples, g)
         if q.get("values") is not None:
-            sols = _join_values(sols, *q["values"])
             # a trailing-VALUES EXTENSION variable used as a template
-            # object arrives after the solver's companion fill —
-            # stamp lexically-inferred companions (the documented
-            # VALUES-binding posture) so instantiation never
+            # object arrives after the solver's companion fill — the
+            # join stamps its companions so instantiation never
             # references a missing __shape_* column
-            if shaped:
-                sols = G.ensure_shape_companions(sols,
-                                                 frozenset(svars))
-                sols = G.repair_adopted_companions(
-                    sols, [n for n in svars
-                           if n in set(q["values"][0])])
+            sols = G.join_values(sols, *q["values"],
+                                 shape_vars=svars if shaped else None)
         # template blank nodes (explicit _:b / [..]) mint fresh per
         # solution (§16.2.1)
         sols, template, minted = _mint_template_bnodes(sols, template)
@@ -2945,73 +2881,6 @@ def _compat_join_tiny(sols: DataFrame, other: DataFrame) -> DataFrame:
           for c in sols.columns],
         *[F.col(f"__cj_v.{c}").alias(c) for c in other.columns
           if c not in sols.columns])
-
-
-def _join_values(sols: DataFrame, names: list[str],
-                 rows: list[tuple]) -> DataFrame:
-    """Trailing ``VALUES`` (SPARQL §10.2): join the inline bindings
-    onto the finished solution sequence with full §18.5 compatibility
-    semantics — an UNBOUND (NULL) solution cell agrees with any row
-    value and the merge ADOPTS the row's binding; UNDEF row cells
-    constrain nothing; a solution compatible with several rows
-    multiplies (bag join — both VALUES forms route here, so duplicate
-    VALUES rows multiply in both).  Rows group by their defined-mask;
-    each group joins the broadcast binding table on ``IS NULL OR =``
-    per defined SHARED column (tiny build side, so the nested-loop
-    fallback is bounded).  Names absent from ``sols`` are EXTENSION
-    variables: they constrain nothing and bind their row's value (NULL
-    where the row says UNDEF) — a row defining only extension columns
-    joins as the SPARQL disjoint-domain product, bounded by the inline
-    table's size."""
-    from collections import defaultdict
-
-    from pyspark.sql import functions as F
-
-    new = [n for n in names if n not in sols.columns]
-    groups: dict = defaultdict(list)
-    for row in rows:
-        groups[tuple(i for i, v in enumerate(row)
-                     if v is not None)].append(row)
-    out = None
-    for mask, rs in groups.items():
-        if not mask:
-            # all-UNDEF rows match every solution — once PER ROW;
-            # extension variables stay unbound
-            base = sols.select(
-                *sols.columns,
-                *[F.lit(None).cast("string").alias(c) for c in new])
-            part = base
-            for _ in rs[1:]:
-                part = part.unionByName(base)
-        else:
-            cols = [names[i] for i in mask]
-            lit = sols.sparkSession.createDataFrame(
-                [tuple(str(r[i]) for i in mask) for r in rs],
-                schema=", ".join(f"`{c}` string" for c in cols))
-            s, v = sols.alias("__tv_s"), F.broadcast(lit.alias("__tv_v"))
-            cond = None
-            for c in cols:
-                if c in new:
-                    continue
-                eq = (F.col(f"__tv_s.{c}").isNull()
-                      | (F.col(f"__tv_s.{c}") == F.col(f"__tv_v.{c}")))
-                cond = eq if cond is None else cond & eq
-            joined = (s.join(v, cond, "inner") if cond is not None
-                      else s.crossJoin(v))
-            part = joined.select(
-                *[(F.coalesce(F.col(f"__tv_s.{c}"),
-                              F.col(f"__tv_v.{c}"))
-                   if c in cols else F.col(f"__tv_s.{c}")).alias(c)
-                  for c in sols.columns],
-                *[(F.col(f"__tv_v.{c}") if c in cols
-                   else F.lit(None).cast("string")).alias(c)
-                  for c in new])
-        out = part if out is None else out.unionByName(part)
-    if out is not None:
-        return out
-    return sols.limit(0).select(
-        *sols.columns,
-        *[F.lit(None).cast("string").alias(c) for c in new])
 
 
 def _solve_select(triples: DataFrame, q: dict) -> DataFrame:
@@ -3088,7 +2957,7 @@ def _solve_select(triples: DataFrame, q: dict) -> DataFrame:
             # §18.2.4.3 Values insertion precedes §18.2.4.4 Select
             # expressions, so a projection expression may read a
             # trailing-VALUES extension variable
-            sols = _join_values(sols, *q["values"])
+            sols = G.join_values(sols, *q["values"])
         for _, e, alias in exprs:
             try:
                 sols = G.bind(sols, alias, e)
@@ -3112,12 +2981,8 @@ def _solve_select(triples: DataFrame, q: dict) -> DataFrame:
             # §18.2.4.3 before §18.2.4.4 (see the aggregated branch);
             # extension bindings carry lexically-inferred shapes like
             # every VALUES-introduced binding
-            sols = _join_values(sols, *q["values"])
-            sols = G.ensure_shape_companions(
-                sols, q["where"].get("_shape"))
-            sols = G.repair_adopted_companions(
-                sols, [n for n in (q["where"].get("_shape") or ())
-                       if n in set(q["values"][0])])
+            sols = G.join_values(sols, *q["values"],
+                                 shape_vars=q["where"].get("_shape"))
         for _, e, alias in exprs:
             sols = G.bind(sols, alias, e)
         if q["star"]:

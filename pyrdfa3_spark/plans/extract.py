@@ -197,7 +197,6 @@ def _extract_batches(batches: Iterator[pa.RecordBatch],
 
 def extract_tagged(transcripts: DataFrame,
                    repartition_to: Optional[int] = None,
-                   prefilter: bool = True,
                    hturtle_only: bool = False,
                    microdata: bool = False,
                    max_doc_bytes: Optional[int] = None) -> DataFrame:
@@ -218,16 +217,16 @@ def extract_tagged(transcripts: DataFrame,
     conversation): the (conv_id, turn_idx) hash then spreads the hot
     conversation across tasks instead of pinning it to one.
     """
-    df = transcripts.select("conv_id", "turn_idx", "text")
-    if prefilter:
-        # in HTurtle mode only embedded-RDF islands carry triples, so
-        # the relevance predicate is the island marker, not RDFa attrs;
-        # microdata carriers are matched by their itemscope attribute
-        pattern = ("(?i)text/turtle|<[^>]*:RDF" if hturtle_only
-                   else RDFA_PREFILTER)
-        if microdata:
-            pattern += "|(?i)<[^>]{0,1000}itemscope"
-        df = df.filter(F.col("text").rlike(pattern))
+    # in HTurtle mode only embedded-RDF islands carry triples, so the
+    # relevance predicate is the island marker, not RDFa attrs;
+    # microdata carriers are matched by their itemscope attribute.  The
+    # prefilter also keeps NULL texts out of the UDF.
+    pattern = ("(?i)text/turtle|<[^>]*:RDF" if hturtle_only
+               else RDFA_PREFILTER)
+    if microdata:
+        pattern += "|(?i)<[^>]{0,1000}itemscope"
+    df = (transcripts.select("conv_id", "turn_idx", "text")
+          .filter(F.col("text").rlike(pattern)))
     if repartition_to is not None:
         df = df.repartition(repartition_to,
                             F.pmod(F.hash("conv_id", "turn_idx"),

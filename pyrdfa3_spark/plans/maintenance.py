@@ -59,15 +59,3 @@ def compaction_plan(files: DataFrame, target_bytes: int = 134217728,
                     start.cast("bigint").alias("start_byte"),
                     F.floor(start / target_bytes).cast("bigint")
                     .alias("bin")))
-
-
-def compaction_summary(plan: DataFrame,
-                       small_threshold: int = 33554432) -> DataFrame:
-    """Per-bin rollup of a :func:`compaction_plan`: file count, total
-    bytes, and how many member files sit under ``small_threshold`` —
-    the triage view that decides which bins are worth rewriting."""
-    return (plan.groupBy("bin")
-            .agg(F.count("*").cast("bigint").alias("n_files"),
-                 F.sum("bytes").cast("bigint").alias("total_bytes"),
-                 F.sum((F.col("bytes") < small_threshold).cast("int"))
-                 .cast("bigint").alias("n_small")))

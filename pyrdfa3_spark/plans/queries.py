@@ -4736,7 +4736,8 @@ SQL_K_CORE = _sql_k_core()
 def q_kg_ask(spark, sf_dir):
     """SPARQL ASK, one row per question: the geo KG does hold a
     supplier in region 0 (true) and holds no nation mottos (false).
-    Each ASK short-circuits at its first solution via limit(1)."""
+    Each ASK is one eager limit-1 take that stops at its first
+    solution."""
     from pyrdfa3_spark.operators.graphops import ask
 
     t = _geo_triples(spark, sf_dir)

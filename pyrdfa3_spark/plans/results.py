@@ -32,8 +32,8 @@ posture as the serializer facade and VALUES-introduced bindings.
 
 Scale shape: every ``to_*`` is one narrow projection — no shuffle, no
 UDF; the header is a 1-row union.  Line order inside the frame is not
-meaningful (CSV/TSV rows are independent); the ``write_results_*``
-helpers order header-first when producing a single text file.
+meaningful (CSV/TSV rows are independent); order by ``ord`` for a
+header-first text file.
 """
 
 from __future__ import annotations
@@ -230,22 +230,3 @@ def results_xml_doc(sols: DataFrame, columns=None,
             '<sparql xmlns="http://www.w3.org/2005/sparql-results#">'
             f"<head>{head}</head><results>" + "".join(body)
             + "</results></sparql>")
-
-
-def results_ask_json(result: bool) -> str:
-    """The boolean-form JSON results document for ASK."""
-    return ('{"head": {}, "boolean": '
-            + ("true" if result else "false") + "}")
-
-
-def write_results_csv(sols: DataFrame, path: str, columns=None) -> None:
-    """Single-file CSV results export, header first (the 1-file
-    coalesce is the point of a text export; lake-scale results stay
-    DataFrames)."""
-    (to_results_csv(sols, columns).orderBy("ord").coalesce(1)
-     .select("line").write.mode("overwrite").text(path))
-
-
-def write_results_tsv(sols: DataFrame, path: str, columns=None) -> None:
-    (to_results_tsv(sols, columns).orderBy("ord").coalesce(1)
-     .select("line").write.mode("overwrite").text(path))

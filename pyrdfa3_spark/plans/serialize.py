@@ -57,10 +57,6 @@ def to_ntriples(triples: DataFrame) -> DataFrame:
         F.concat_ws(" ", subj, pred, obj, F.lit(".")).alias("line"))
 
 
-def write_ntriples(triples: DataFrame, path: str) -> None:
-    to_ntriples(triples).write.mode("overwrite").text(path)
-
-
 def to_nquads(quads: DataFrame, graph_col: str = "graph") -> DataFrame:
     """Named-graph quad lines: the N-Triples terms plus a graph label
     (IRI or bnode) — the provenance-preserving interchange format for a
@@ -71,11 +67,6 @@ def to_nquads(quads: DataFrame, graph_col: str = "graph") -> DataFrame:
         .otherwise(F.concat(F.lit("<"), F.col(graph_col), F.lit(">")))
     return quads.select(
         F.concat_ws(" ", subj, pred, obj, g, F.lit(".")).alias("line"))
-
-
-def write_nquads(quads: DataFrame, path: str,
-                 graph_col: str = "graph") -> None:
-    to_nquads(quads, graph_col).write.mode("overwrite").text(path)
 
 
 def to_trig(quads: DataFrame, graph_col: str = "graph") -> DataFrame:
@@ -103,12 +94,6 @@ def to_trig(quads: DataFrame, graph_col: str = "graph") -> DataFrame:
                .select(stmt.alias("block")))
     return (named.select(block.alias("block"))
             .unionByName(default).orderBy("block"))
-
-
-def write_trig(quads: DataFrame, path: str,
-               graph_col: str = "graph") -> None:
-    to_trig(quads, graph_col).coalesce(1) \
-        .write.mode("overwrite").text(path)
 
 
 # --------------------------------------------------------------------------
@@ -174,15 +159,6 @@ def turtle_header(prefixes: dict[str, str] | None = None) -> str:
     prefixes = TURTLE_DEFAULT_PREFIXES if prefixes is None else prefixes
     return "".join(f"@prefix {p}: <{ns}> .\n" for p, ns in
                    sorted(prefixes.items()))
-
-
-def write_turtle(triples: DataFrame, path: str,
-                 prefixes: dict[str, str] | None = None) -> None:
-    spark = triples.sparkSession
-    header = spark.createDataFrame(
-        [(turtle_header(prefixes),)], ["block"])
-    header.unionByName(to_turtle(triples, prefixes)) \
-        .coalesce(1).write.mode("overwrite").text(path)
 
 
 # --------------------------------------------------------------------------
@@ -399,16 +375,6 @@ def to_jsonld(triples: DataFrame,
     return node.select(jsonld.alias("jsonld")).orderBy("jsonld")
 
 
-def write_jsonld(triples: DataFrame, path: str,
-                 context: dict[str, str] | None = None) -> None:
-    out = to_jsonld(triples, context).withColumnRenamed("jsonld", "value")
-    if context is not None:
-        header = triples.sparkSession.createDataFrame(
-            [(jsonld_context_line(context),)], ["value"])
-        out = header.unionByName(out).coalesce(1)
-    out.write.mode("overwrite").text(path)
-
-
 # --------------------------------------------------------------------------
 # RDF/XML export (reference output formats 'xml'/'pretty-xml').  One
 # rdf:Description block per subject; each property element carries its
@@ -517,11 +483,3 @@ def to_rdfxml(triples: DataFrame) -> DataFrame:
 RDFXML_HEADER = ('<?xml version="1.0" encoding="utf-8"?>\n<rdf:RDF '
                  'xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#">')
 RDFXML_FOOTER = "</rdf:RDF>"
-
-
-def write_rdfxml(triples: DataFrame, path: str) -> None:
-    spark = triples.sparkSession
-    head = spark.createDataFrame([(RDFXML_HEADER,)], ["block"])
-    foot = spark.createDataFrame([(RDFXML_FOOTER,)], ["block"])
-    head.unionByName(to_rdfxml(triples)).unionByName(foot) \
-        .coalesce(1).write.mode("overwrite").text(path)

@@ -426,7 +426,9 @@ class _TreeBuilder(HTMLParser):
 # _TreeBuilder alone.  Wherever one could apply, the fast path raises
 # and parse_html hands the document to _TreeBuilder:
 #
-# * table markup (_ROUTE_OUT), and </br>, before expat runs;
+# * table markup, a <script>/<style> element (html.parser keeps its
+#   text raw, expat decodes entities and parses tags in it) and </br>,
+#   all by _ROUTE_OUT before expat runs;
 # * a block start tag while a <p> is open in button scope;
 # * an li/dd/dt/option start tag that auto-closes an open one;
 # * content inside a void element;
@@ -442,12 +444,14 @@ _TAG_CTRL_WS = re.compile(r"<[^>]*[\t\n\r]")
 # one C-speed scan gates every route-out check below: a document with
 # none of these prefixes (most RDFa fragments) pays nothing more.  It
 # over-matches (<pre, <link, <track, ...): only a gate, never a test.
-_FIXUP_SCAN = re.compile(r"<(?:t[abdfhr]|p|li|d[dt]|option|/br)",
-                         re.IGNORECASE)
+_FIXUP_SCAN = re.compile(
+    r"<(?:t[abdfhr]|p|li|d[dt]|option|/br|script|style)", re.IGNORECASE)
 
 # run on the lowercased text: a table, section, row or cell start tag
-# (the "in table" insertion modes) or a </br> end tag
-_ROUTE_OUT = re.compile(r"<(?:t(?:able|body|head|foot|[dhr])|/br)[\s/>]")
+# (the "in table" insertion modes), a raw-text element or a </br> end
+# tag
+_ROUTE_OUT = re.compile(
+    r"<(?:t(?:able|body|head|foot|[dhr])|/br|script|style)[\s/>]")
 
 
 def _parse_html_fast(text: str) -> Node:
@@ -458,7 +462,7 @@ def _parse_html_fast(text: str) -> Node:
     else:
         tl = text.lower()
         if _ROUTE_OUT.search(tl):
-            raise ValueError("table markup or </br>")
+            raise ValueError("table markup, raw text or </br>")
         has_p = "<p" in tl
         has_autoclose = ("<li" in tl or "<dd" in tl or "<dt" in tl
                          or "<option" in tl)

@@ -7,7 +7,7 @@ module covers the genuinely streaming shape for transcript feeds that
 arrive as files: the same Arrow UDF runs unchanged under
 ``readStream`` because the pipeline is stateless per turn, and late
 data is handled with an event-time watermark on ``ts`` for the
-windowed telemetry aggregation.
+watermarked dedup.
 """
 
 from __future__ import annotations
@@ -46,24 +46,6 @@ def extract_stream(transcripts: DataFrame) -> DataFrame:
 
     triples, _ = split_outputs(extract_tagged(transcripts))
     return triples
-
-
-def windowed_turn_metrics(transcripts: DataFrame,
-                          window: str = "10 minutes",
-                          watermark: str = "30 minutes") -> DataFrame:
-    """Per-conversation turn/carrier counts in event-time windows with a
-    watermark for late arrivals — the streaming telemetry the north rule's
-    metrics requirement maps to."""
-    from pyrdfa3_spark.plans.extract import RDFA_PREFILTER
-
-    return (transcripts
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window).alias("w"), F.col("conv_id"))
-            .agg(F.count("*").alias("n_turns"),
-                 F.sum(F.when(F.col("text").rlike(RDFA_PREFILTER), 1)
-                       .otherwise(0)).alias("n_carrier_turns"))
-            .select(F.col("w.start").alias("window_start"),
-                    "conv_id", "n_turns", "n_carrier_turns"))
 
 
 def dedup_stream(transcripts: DataFrame,

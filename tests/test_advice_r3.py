@@ -224,34 +224,6 @@ def test_values_all_undef_bag_multiplicity(spark):
     assert _rows(out) == [("a",), ("a",)]  # one branch per UNDEF row
 
 
-def test_cached_vocab_missing_manifest_with_ttl_refreshes(spark, tmp_path):
-    import os
-
-    from pyrdfa3_spark.sources.vocab import cached_vocab
-
-    calls = []
-
-    def loader(iri):
-        calls.append(iri)
-        return spark.createDataFrame(
-            [(iri, "p", str(len(calls)))], ["subj", "pred", "obj"])
-
-    d = str(tmp_path)
-    v = "http://example.org/v#"
-    cached_vocab(spark, d, v, loader, ttl_seconds=100, now=1000.0)
-    # simulate a pre-TTL snapshot / crash between write and manifest
-    meta = [p for p in os.listdir(d) if p.endswith(".meta.json")]
-    assert len(meta) == 1
-    os.remove(os.path.join(d, meta[0]))
-    # unknown age + TTL requested -> treated as expired, loader re-runs
-    df = cached_vocab(spark, d, v, loader, ttl_seconds=100, now=1001.0)
-    assert len(calls) == 2 and df.collect()[0]["obj"] == "2"
-    # but with no TTL a legacy manifest-less snapshot serves forever
-    os.remove(os.path.join(d, meta[0]))
-    cached_vocab(spark, d, v, loader, now=10**9)
-    assert len(calls) == 2
-
-
 def test_shaped_update_matches_model_differential(spark):
     """Differential property test for UPDATE over a SHAPED frame
     (literal-shape + provenance columns): random ';'-sequences of

@@ -482,39 +482,66 @@ def test_hturtle_only_mode():
     assert len(proc2.process(parse_html(doc))) > 1
 
 
+# The html5 time-format sniffing grid with the XSD datatype the
+# reference (pyRdfa/host/html5.py:66-155) assigns, None for a plain
+# literal.  It includes single-digit %m/%d/%H/%M/%S values CPython
+# strptime accepts ('2014-5-7', '9:5'): the shape gates must not drop
+# them.
+_TIME_FORMATS = [
+    ("2014-05-07", "date"), ("2014-5-7", "date"), ("2014-5-07", "date"),
+    ("2014-05-7", "date"), ("2014-05-07Z", "date"),
+    ("2014-05", "gYearMonth"), ("2014-5", "gYearMonth"),
+    ("2014", "gYear"), ("0001", "gYear"), ("14-05-07", None),
+    ("123", None), ("05-07", "gMonthDay"), ("5-7", "gMonthDay"),
+    ("1-5", "gMonthDay"), ("12-31", "gMonthDay"), ("13-01", None),
+    ("00-00", None), ("09:05", "time"), ("9:5", "time"),
+    ("9:05", "time"), ("10:30:5", "time"), ("10:30:05", "time"),
+    ("10:30:05Z", "time"), ("10:30:05.5", "time"),
+    ("10:30:05.123456", "time"), ("24:00", None), ("23:60", None),
+    ("2014-05-07T09:05", "dateTime"), ("2014-5-7T9:5", "dateTime"),
+    ("2014-05-07T09:05:06", "dateTime"),
+    ("2014-05-07T09:05:06.5Z", "dateTime"),
+    ("2014-05-07T09:05Z", "dateTime"),
+    ("2014-05-07T09:05:06+02:00", "dateTime"),
+    ("2014-5-7T9:5:6-05:00", "dateTime"),
+    ("P3D", "duration"), ("P1Y2M3D", None), ("P1Y", None),
+    ("P3M", "duration"), ("PT5H", None), ("P1DT2H30M", "duration"),
+    ("-P3D", None), ("-P1DT2H", None), ("P", None), ("PX", None),
+    ("plain text", None), ("", None), ("2014-05-07 09:05", None),
+]
+
+
 def test_time_format_parity_with_reference():
-    """_format_test must agree with the reference's own html5 sniffing
-    (pyRdfa/host/html5.py:66-155) across the full lexical grid,
-    including single-digit %m/%d/%H/%M/%S values CPython strptime
-    accepts ('2014-5-7', '9:5') — the shape gates must not drop them."""
+    """_format_test gives the reference's answer on every value of the
+    grid (the table was checked against the reference itself)."""
+    from pyrdfa3_spark.operators.rdfa_engine import _format_test
+
+    for v, kind in _TIME_FORMATS:
+        assert _format_test(v) == (kind and XSD + kind), v
+
+
+def test_time_format_table_matches_live_reference():
+    """Opt-in: re-check the table against the reference's own sniffing
+    when its source tree is present."""
     import os
     import sys
 
+    saved = list(sys.path)
     sys.path.insert(0, os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "scripts", "refshim"))
     sys.path.insert(0, "/root/reference")
-    from pyRdfa.host.html5 import _format_test as ref_format_test
+    try:
+        from pyRdfa.host.html5 import _format_test as ref_format_test
+    except ImportError:
+        # leave the rdflib shim off the path for the tests that follow
+        sys.path[:] = saved
+        pytest.skip("the reference pyRdfa source tree is absent")
 
-    from pyrdfa3_spark.operators.rdfa_engine import _format_test
-
-    values = [
-        "2014-05-07", "2014-5-7", "2014-5-07", "2014-05-7", "2014-05-07Z",
-        "2014-05", "2014-5", "2014", "0001", "14-05-07", "123",
-        "05-07", "5-7", "1-5", "12-31", "13-01", "00-00",
-        "09:05", "9:5", "9:05", "10:30:5", "10:30:05", "10:30:05Z",
-        "10:30:05.5", "10:30:05.123456", "24:00", "23:60",
-        "2014-05-07T09:05", "2014-5-7T9:5", "2014-05-07T09:05:06",
-        "2014-05-07T09:05:06.5Z", "2014-05-07T09:05Z",
-        "2014-05-07T09:05:06+02:00", "2014-5-7T9:5:6-05:00",
-        "P3D", "P1Y2M3D", "P1Y", "P3M", "PT5H", "P1DT2H30M",
-        "-P3D", "-P1DT2H", "P", "PX", "plain text", "", "2014-05-07 09:05",
-    ]
-    for v in values:
+    for v, kind in _TIME_FORMATS:
         ref = ref_format_test(v)
-        got = _format_test(v)
-        ref_norm = None if ref == "plain" else str(ref)
-        assert got == ref_norm, (v, got, ref)
+        assert (None if ref == "plain" else str(ref)) == (
+            kind and XSD + kind), v
 
 
 def test_cdata_agrees_across_parse_paths():

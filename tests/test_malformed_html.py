@@ -426,6 +426,11 @@ def test_fast_path_builds_tolerant_tree_or_routes_out():
     ("<div><img>x</img></div>", False),
     ("<div><br></br></div>", False),
     ('<div><br/>x<img src="a"></img><track/></div>', True),
+    # script/style text is raw in HTML: no entity decoding, no tags
+    ('<div about="http://e/x" property="http://e/p">'
+     '<script>a &amp; b</script></div>', False),
+    ("<div><style>p > a { color: red }</style></div>", False),
+    ('<div><script type="text/javascript">x</script></div>', False),
 ])
 def test_route_outs_keep_trees_identical(doc, fast):
     from pyrdfa3_spark.sources.dom import _parse_html_fast

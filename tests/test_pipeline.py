@@ -178,44 +178,3 @@ def test_max_doc_bytes_guard(spark):
     assert {r["turn_idx"] for r in all_triples.collect()} == {0, 1}
 
 
-def test_cached_vocab_ttl_refresh(spark, tmp_path):
-    """Snapshot cache with Expires semantics (reference
-    pyRdfa/rdfs/cache.py:226-300): a fresh snapshot serves reads
-    without re-running the loader; past its expiry the loader re-runs
-    and the snapshot is overwritten; ttl=None never expires."""
-    from pyrdfa3_spark.sources.vocab import cached_vocab
-
-    calls = []
-
-    def loader(iri):
-        calls.append(iri)
-        return spark.createDataFrame(
-            [(iri, "p:ver", str(len(calls)))], ["subj", "pred", "obj"])
-
-    d = str(tmp_path)
-    v = "http://example.org/vocab#"
-    # miss -> load; hit inside ttl -> no load
-    df1 = cached_vocab(spark, d, v, loader, ttl_seconds=100, now=1000.0)
-    df2 = cached_vocab(spark, d, v, loader, ttl_seconds=100, now=1099.0)
-    assert calls == [v]
-    assert df1.collect()[0]["obj"] == df2.collect()[0]["obj"] == "1"
-    # past expiry -> refresh (snapshot overwritten, new expiry recorded)
-    df3 = cached_vocab(spark, d, v, loader, ttl_seconds=100, now=1100.0)
-    assert calls == [v, v]
-    assert df3.collect()[0]["obj"] == "2"
-    # the refreshed snapshot serves again inside its own ttl
-    cached_vocab(spark, d, v, loader, ttl_seconds=100, now=1150.0)
-    assert calls == [v, v]
-
-    # ttl=None: never expires, even far in the future
-    v2 = "http://example.org/other#"
-    cached_vocab(spark, d, v2, loader, now=1000.0)
-    cached_vocab(spark, d, v2, loader, now=10**12)
-    assert calls.count(v2) == 1
-    # a snapshot written WITHOUT a ttl still ages when a later reader
-    # requests one, counting from its created stamp (1000): inside
-    # the window it serves, past it the loader re-runs
-    cached_vocab(spark, d, v2, loader, ttl_seconds=50, now=1040.0)
-    assert calls.count(v2) == 1
-    cached_vocab(spark, d, v2, loader, ttl_seconds=50, now=1051.0)
-    assert calls.count(v2) == 2

@@ -111,34 +111,6 @@ def test_minhash_plan_no_cartesian_no_double_scan(spark):
         plan.count("Scan parquet") <= 1, plan
 
 
-def test_ivf_table_probe_is_partition_pruned(spark, tmp_path):
-    """The cell-partitioned IVF layout must turn a probe into a
-    partition-pruned scan (PartitionFilters on cell), never a full-table
-    read — the physical contract of the ANN scale path."""
-    from pyrdfa3_spark.operators.similarity import (
-        ivf_probe_table, ivf_train_local, write_ivf_table,
-    )
-
-    sf = SF
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    cents = ivf_train_local(sf, n_cells=8, iters=1)
-    path = str(tmp_path / "ivf")
-    write_ivf_table(emb, cents, path)
-
-    qvec = [float(v) for v in
-            emb.orderBy("vec_id").first()["embedding"]]
-    df = ivf_probe_table(spark, path, qvec, cents, nprobe=2, top_k=5)
-    plan = _plan(df)
-    part_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert part_lines and any("cell" in ln for ln in part_lines), plan
-    assert "Window" not in _plan(df, "simple")
-    rows = df.collect()
-    assert 1 <= len(rows) <= 5
-    assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
-    # the query's own vector lives in a probed cell -> cos 1.0 at rank 1
-    assert rows[0]["cos_sim"] == 1.0
-
-
 def test_curation_mix_plans_scale_shape(spark):
     """pack_sequences / quota_mix windows must be PARTITIONED (shard /
     stratum) — a partition-less window would serialize the whole corpus
@@ -240,7 +212,7 @@ def test_ntriples_reader_plan_scan_side(spark, tmp_path):
     """The N-Triples parse must be pure scan-side column algebra: no
     shuffle, no Python boundary, no join — a 100 TB dump parses at
     scan speed or the reader is wrong."""
-    from pyrdfa3_spark.plans.serialize import write_ntriples
+    from pyrdfa3_spark.plans.serialize import to_ntriples
     from pyrdfa3_spark.sources.ntriples import read_ntriples
 
     df = spark.read.parquet(SF + "/nation.parquet")
@@ -251,7 +223,7 @@ def test_ntriples_reader_plan_scan_side(spark, tmp_path):
         "CAST(NULL AS string) AS obj_lang",
         "CAST(NULL AS string) AS obj_datatype")
     path = str(tmp_path / "dump.nt")
-    write_ntriples(triples, path)
+    to_ntriples(triples).write.text(path)
     simple = _plan(read_ntriples(spark, path), mode="simple")
     assert "Exchange" not in simple, simple
     assert "MapInArrow" not in simple and "MapInPandas" not in simple
@@ -261,7 +233,7 @@ def test_ntriples_reader_plan_scan_side(spark, tmp_path):
 def test_jsonld_reader_plan_scan_side(spark, tmp_path):
     """The JSON-LD-lines parse must be pure scan-side column algebra
     (from_json + explodes): no shuffle, no Python boundary, no join."""
-    from pyrdfa3_spark.plans.serialize import write_jsonld
+    from pyrdfa3_spark.plans.serialize import to_jsonld
     from pyrdfa3_spark.sources.jsonld import read_jsonld
 
     df = spark.read.parquet(SF + "/nation.parquet")
@@ -272,7 +244,7 @@ def test_jsonld_reader_plan_scan_side(spark, tmp_path):
         "CAST(NULL AS string) AS obj_lang",
         "CAST(NULL AS string) AS obj_datatype")
     path = str(tmp_path / "dump.jsonl")
-    write_jsonld(triples, path)
+    to_jsonld(triples).write.text(path)
     simple = _plan(read_jsonld(spark, path), mode="simple")
     assert "Exchange" not in simple, simple
     assert "MapInArrow" not in simple and "MapInPandas" not in simple
@@ -335,6 +307,8 @@ def test_new_sparql_surface_plans(spark, tmp_path):
     plan = _plan(q_bgp_values(spark, SF))
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
     assert "CartesianProduct" not in plan, plan
+    # the required patterns bind ?r, so the VALUES join is an equi-join
+    assert "BroadcastNestedLoopJoin" not in plan, plan
 
     plan = _plan(q_kg_topk(spark, SF))
     assert "TakeOrderedAndProject" in plan, plan

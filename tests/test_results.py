@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from pyrdfa3_spark.operators.graphops import bgp_match
 from pyrdfa3_spark.plans.results import (
-    results_ask_json, results_json_doc, results_xml_doc, to_results_csv,
+    results_json_doc, results_xml_doc, to_results_csv,
     to_results_json_bindings, to_results_tsv, to_results_xml_bindings,
 )
 
@@ -132,11 +132,6 @@ def test_results_xml_doc(sols):
 def test_results_doc_cap_raises(sols):
     with pytest.raises(ValueError, match="max_rows"):
         results_json_doc(sols, max_rows=2)
-
-
-def test_results_ask_json():
-    assert json.loads(results_ask_json(True)) == {"head": {},
-                                                  "boolean": True}
 
 
 def test_results_text_query_surface(spark):

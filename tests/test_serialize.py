@@ -222,14 +222,13 @@ def test_nquads_reader_roundtrip_and_errors(spark):
 
 
 def test_ntriples_reader_from_files(spark, tmp_path):
-    """The write_ntriples -> read_ntriples loop through actual text
+    """The to_ntriples -> read_ntriples loop through actual text
     files (split-parallel scan path)."""
-    from pyrdfa3_spark.plans.serialize import write_ntriples
     from pyrdfa3_spark.sources.ntriples import read_ntriples
 
     df = spark.createDataFrame(ROWS, COLS)
     path = str(tmp_path / "dump.nt")
-    write_ntriples(df, path)
+    to_ntriples(df).write.text(path)
     back = read_ntriples(spark, path)
     assert sorted(tuple(r) for r in back.collect()) == sorted(ROWS)
 
@@ -247,7 +246,7 @@ def test_jsonld_reader_roundtrip(spark):
 
 
 def test_jsonld_reader_errors_and_files(spark, tmp_path):
-    from pyrdfa3_spark.plans.serialize import write_jsonld
+    from pyrdfa3_spark.plans.serialize import to_jsonld
     from pyrdfa3_spark.sources.jsonld import (
         parse_errors, parse_jsonld, read_jsonld,
     )
@@ -263,7 +262,7 @@ def test_jsonld_reader_errors_and_files(spark, tmp_path):
 
     df = spark.createDataFrame(ROWS, COLS)
     path = str(tmp_path / "dump.jsonl")
-    write_jsonld(df, path)
+    to_jsonld(df).write.text(path)
     back = read_jsonld(spark, path)
     assert sorted(tuple(r) for r in back.collect()) == sorted(ROWS)
 

@@ -157,24 +157,39 @@ def test_point_and_ask_planning_budget(spark, stores):
 
 
 def test_ask_runs_one_job_without_shuffle(spark, stores):
+    """sparql() ASK, graphops.ask and SparkGraph.ask share one eager
+    limit-1 take: one job, one stage, and an answer frame that
+    collects without a further job."""
+    from pyrdfa3_spark.graph import SparkGraph
+    from pyrdfa3_spark.operators.graphops import ask
+
     df, _con = stores
     kg = df.coalesce(1).cache()
     kg.count()
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    for i, (q, want) in enumerate([
-            (f"ASK {{ <{SUBJECTS[0]}> ?p ?o }}", True),
-            ("ASK { <http://absent.example/x> ?p ?o }", False)]):
+    cases = []
+    for s, want in ((SUBJECTS[0], True), ("http://absent.example/x", False)):
+        cases += [
+            (f"sparql {s}", lambda s=s: sparql(kg, f"ASK {{ <{s}> ?p ?o }}"),
+             want),
+            (f"graphops.ask {s}", lambda s=s: ask(kg, [(s, "?p", "?o")]),
+             want),
+            (f"SparkGraph.ask {s}",
+             lambda s=s: SparkGraph(kg).ask([(s, "?p", "?o")]), want)]
+    for i, (what, call, want) in enumerate(cases):
         group = f"ask-jobs-{i}"
         sc.setJobGroup(group, "ASK job count")
         try:
-            res = sparql(kg, q)
+            res = call()
             jobs = tracker.getJobIdsForGroup(group)
-            assert res.collect()[0]["result"] is want
+            got = res if isinstance(res, bool) else \
+                res.collect()[0]["result"]
+            assert got is want, what
             # collecting the answer frame runs no further job
-            assert tracker.getJobIdsForGroup(group) == jobs
+            assert tracker.getJobIdsForGroup(group) == jobs, what
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        assert len(jobs) == 1, f"{q}: {len(jobs)} jobs"
+        assert len(jobs) == 1, f"{what}: {len(jobs)} jobs"
         stages = tracker.getJobInfo(jobs[0]).stageIds
-        assert len(stages) == 1, f"{q}: a shuffle ({len(stages)} stages)"
+        assert len(stages) == 1, f"{what}: a shuffle ({len(stages)} stages)"

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from pyrdfa3_spark.sources.transcripts import synth_transcripts
 from pyrdfa3_spark.streaming.stream_extract import (
     extract_stream, run_to_completion, stream_transcripts,
-    windowed_turn_metrics,
 )
 
 
@@ -81,23 +80,6 @@ def test_stateful_sessionize_matches_batch(spark, tmp_path):
     }
     assert streamed == expected_closed
     assert len(streamed) > 10
-
-
-def test_windowed_metrics_complete_mode(spark, tmp_path):
-    in_dir = str(tmp_path / "win_in")
-    synth_transcripts(spark, n_conv=10, turns_per_conv=10, skew_factor=2) \
-        .coalesce(1).write.mode("append").parquet(in_dir)
-    metrics = windowed_turn_metrics(
-        stream_transcripts(spark, in_dir), window="10 minutes")
-    q = (metrics.writeStream.format("memory")
-         .queryName("win_metrics").outputMode("complete")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = spark.sql("select * from win_metrics").collect()
-    assert rows
-    total_turns = sum(r["n_turns"] for r in rows)
-    assert total_turns == 110  # 10 convs x 10 + skew conv extra 10
-    assert all(r["n_carrier_turns"] <= r["n_turns"] for r in rows)
 
 
 def test_stream_bucketed_materialize(spark, tmp_path):
