@@ -83,14 +83,12 @@ class SparkGraph:
     # -- construction ------------------------------------------------
 
     @classmethod
-    def from_transcripts(cls, transcripts: DataFrame,
-                         repartition_to: Optional[int] = None,
-                         ) -> "SparkGraph":
+    def from_transcripts(cls, transcripts: DataFrame) -> "SparkGraph":
         """Run the RDFa extraction pipeline (the facade twin of the
         reference's ``pyRdfa().graph_from_source``)."""
         from pyrdfa3_spark.plans.extract import extract_triples
 
-        return cls(extract_triples(transcripts, repartition_to))
+        return cls(extract_triples(transcripts))
 
     @classmethod
     def empty(cls, spark) -> "SparkGraph":
@@ -603,7 +601,6 @@ class SparkDataset:
     @classmethod
     def from_transcripts(cls, transcripts: DataFrame,
                          graph_prefix: str = "urn:conv:",
-                         repartition_to: Optional[int] = None,
                          ) -> "SparkDataset":
         """Run the RDFa extraction pipeline and materialize each
         conversation's triples as its own NAMED graph
@@ -614,7 +611,7 @@ class SparkDataset:
         boundary, no extra shuffle."""
         from pyrdfa3_spark.plans.extract import extract_triples
 
-        t = extract_triples(transcripts, repartition_to)
+        t = extract_triples(transcripts)
         # extraction dedups per document and each conversation is its
         # own graph, so the quad frame is distinct by construction —
         # the query verbs skip their set-semantics dedup shuffle

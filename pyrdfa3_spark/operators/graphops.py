@@ -522,6 +522,21 @@ def drop_dup_companions(right: DataFrame, left_cols) -> DataFrame:
     return right.drop(*dup) if dup else right
 
 
+class SparqlError(ValueError):
+    """Malformed query text."""
+
+
+class SparqlUnsupported(SparqlError):
+    """Syntactically valid SPARQL outside the implemented subset."""
+
+
+def filter_reads(expr: str, names) -> list[str]:
+    """The variables among ``names`` that the SQL filter text ``expr``
+    reads (whole-word match: ``n`` is not read by ``name``), sorted."""
+    return sorted(v for v in names
+                  if re.search(rf"\b{re.escape(v)}\b", expr))
+
+
 # SPARQL §18.5 compatibility joins on possibly-unbound variables.
 #
 # An unbound (NULL) cell is compatible with ANY binding and the merge
@@ -535,10 +550,15 @@ def drop_dup_companions(right: DataFrame, left_cols) -> DataFrame:
 # merged by ``coalesce``.  Buckets partition the input, so every
 # compatible row pair appears exactly once — bag semantics preserved.
 #
+# Every operator takes the variables CERTAINLY bound (never NULL) on
+# each side — what the callers track — and derives the shared columns
+# and their possibly-unbound subsets itself through :func:`nullable`,
+# the one place the cap below is checked, before any checkpoint or job.
+#
 # Scale shape: 2^k buckets per side (k capped at COMPAT_MAX_NULLABLE,
-# larger shapes still refuse), each branch a proper shuffle/broadcast
-# hash join Catalyst plans independently; the inputs are
-# localCheckpointed first so the per-bucket re-filters scan the
+# larger shapes refuse with SparqlUnsupported), each branch a proper
+# shuffle/broadcast hash join Catalyst plans independently; the inputs
+# are localCheckpointed first so the per-bucket re-filters scan the
 # materialized rows instead of recomputing the subtree 2^k times.  The
 # only non-equi branch is a bucket whose shared variables are ALL
 # unbound — per SPARQL that really is compatible-with-everything (a
@@ -546,6 +566,31 @@ def drop_dup_companions(right: DataFrame, left_cols) -> DataFrame:
 # bindings and are the minority, and AQE picks a broadcast nested loop
 # when the bucket is small.
 COMPAT_MAX_NULLABLE = 2
+
+
+def shared_vars(left: DataFrame, right: DataFrame) -> list[str]:
+    """The variables two solution frames share, in ``left``'s column
+    order; shape companions join along with their variable, never as
+    keys of their own."""
+    return [c for c in left.columns
+            if c in right.columns and not c.startswith(SHAPE_PREFIX)]
+
+
+def nullable(shared, left_certain, right_certain):
+    """The possibly-unbound subsets ``(left, right)`` of ``shared``:
+    the variables outside each side's certain set, sorted.  Raises
+    :class:`SparqlUnsupported` when either exceeds COMPAT_MAX_NULLABLE
+    — the null-mask decomposition's cap, checked here only."""
+    ln = sorted(v for v in shared if v not in left_certain)
+    rn = sorted(v for v in shared if v not in right_certain)
+    if max(len(ln), len(rn)) > COMPAT_MAX_NULLABLE:
+        raise SparqlUnsupported(
+            f"joining on possibly-unbound variable(s) "
+            f"{sorted(set(ln) | set(rn))}: the §18.5 null-mask "
+            f"decomposition is capped at {COMPAT_MAX_NULLABLE} "
+            "variables per side — bind them in the sibling operands "
+            "first")
+    return ln, rn
 
 
 def _null_mask_buckets(df: DataFrame, risky: list[str]):
@@ -565,32 +610,31 @@ def _null_mask_buckets(df: DataFrame, risky: list[str]):
 
 
 def compat_join(left: DataFrame, right: DataFrame,
-                left_nullable=(), right_nullable=(),
+                left_certain, right_certain,
                 how: str = "inner",
                 _left_ready: bool = False) -> DataFrame:
     """Join two solution frames on their shared variables under SPARQL
     §18.5 compatibility: a NULL cell on either side agrees with any
     value and the merged solution adopts the bound one.
 
-    ``left_nullable`` / ``right_nullable`` name the shared variables
-    that may be NULL on that side (OPTIONAL-bound, absent from a union
-    branch, UNDEF-able VALUES, NULL-able BIND).  With both empty this
-    is exactly the plain equi-join on the shared variables.
+    ``left_certain`` / ``right_certain`` name the variables certainly
+    bound on that side; a shared variable outside a side's set may be
+    NULL there (OPTIONAL-bound, absent from a union branch, UNDEF-able
+    VALUES, NULL-able BIND).  With every shared variable certain on
+    both sides this is exactly the plain equi-join on them.  Past the
+    cap it raises :class:`SparqlUnsupported` before any job runs.
 
     ``how="left"`` implements the SPARQL leftjoin (OPTIONAL): left
     rows with no compatible partner survive with NULLs for the
-    right-only variables.  The right side must be certain
-    (``right_nullable`` empty) — true for every call site, where the
-    right frame is a BGP match whose variables are all bound — because
-    per-bucket left joins would otherwise duplicate unmatched rows
-    across right buckets."""
+    right-only variables.  The right side must be certain on every
+    shared variable — :func:`leftjoin_filter` routes here only then —
+    because per-bucket left joins would otherwise duplicate unmatched
+    rows across right buckets."""
     if how not in ("inner", "left"):
         raise ValueError(f"compat_join how={how!r}")
     right = drop_dup_companions(right, left.columns)
-    shared = [c for c in left.columns
-              if c in right.columns and not c.startswith(SHAPE_PREFIX)]
-    ln = sorted(set(left_nullable) & set(shared))
-    rn = sorted(set(right_nullable) & set(shared))
+    shared = shared_vars(left, right)
+    ln, rn = nullable(shared, left_certain, right_certain)
     if how == "left" and rn:
         raise ValueError("compat_join(how='left') needs a certain "
                          f"right side; got nullable {rn}")
@@ -632,25 +676,32 @@ def compat_join(left: DataFrame, right: DataFrame,
 
 
 def leftjoin_filter(sols: DataFrame, sub: DataFrame,
-                    left_nullable=(), right_nullable=(),
+                    left_certain, right_certain,
                     filters: list[str] | None = None) -> DataFrame:
-    """SPARQL §6.1 leftjoin with the FILTER evaluated over the MERGED
-    solution (the filter may read variables bound outside the OPTIONAL
-    group): a matched row that fails the filter reverts to UNMATCHED —
-    the left row survives with NULLs for the group-only variables — it
-    does not disappear.
+    """SPARQL §6.1 leftjoin (OPTIONAL) — the one left-join entry.  The
+    certain sets are :func:`compat_join`'s, and so is the cap check.
+    With no ``filters`` and a right side certain on every shared
+    variable it is the plain ``compat_join(how="left")``.
 
-    Shape: the left side is stamped with a row id and
+    Otherwise the FILTER is evaluated over the MERGED solution (the
+    filter may read variables bound outside the OPTIONAL group): a
+    matched row that fails the filter reverts to UNMATCHED — the left
+    row survives with NULLs for the group-only variables — it does not
+    disappear.  Shape: the left side is stamped with a row id and
     localCheckpointed (ids frozen — re-reads see the same values),
     the inner compatibility join + filter computes the surviving
     matches, and one duplicate-free anti-join on the id restores the
     left rows with no surviving partner.  Same shuffle count as a
     plain left join plus one broadcastable id anti-join."""
+    _ln, rn = nullable(shared_vars(sols, sub), left_certain,
+                       right_certain)
+    if not filters and not rn:
+        return compat_join(sols, sub, left_certain, right_certain,
+                           how="left")
     sols = (sols.withColumn("__ljid", F.monotonically_increasing_id())
             .localCheckpoint(eager=True))
-    merged = compat_join(sols, sub, left_nullable=left_nullable,
-                         right_nullable=right_nullable, how="inner",
-                         _left_ready=True)
+    merged = compat_join(sols, sub, left_certain, right_certain,
+                         how="inner", _left_ready=True)
     for e in filters or []:
         merged = merged.filter(e)
     unmatched = sols.join(
@@ -661,21 +712,20 @@ def leftjoin_filter(sols: DataFrame, sub: DataFrame,
 
 
 def compat_minus(sols: DataFrame, neg: DataFrame,
-                 left_nullable=(), right_nullable=()) -> DataFrame:
+                 left_certain, right_certain) -> DataFrame:
     """SPARQL §8.3 MINUS tolerating possibly-unbound shared variables
-    on either side: a solution is removed iff some ``neg`` row is
-    compatible with it AND their bound domains overlap.  Per
-    null-mask bucket pair the overlapping bound domain is exactly the
-    shared variables non-NULL on BOTH sides, so each pair is one
-    duplicate-free left-anti join (they chain — removal by any pair
-    removes); a pair with no commonly-bound shared variable has
-    disjoint domains and removes nothing."""
-    shared = [c for c in sols.columns
-              if c in neg.columns and not c.startswith(SHAPE_PREFIX)]
+    on either side (certain sets and cap as in :func:`compat_join`): a
+    solution is removed iff some ``neg`` row is compatible with it AND
+    their bound domains overlap.  Per null-mask bucket pair the
+    overlapping bound domain is exactly the shared variables non-NULL
+    on BOTH sides, so each pair is one duplicate-free left-anti join
+    (they chain — removal by any pair removes); a pair with no
+    commonly-bound shared variable has disjoint domains and removes
+    nothing, and so does a ``neg`` sharing no variable."""
+    shared = shared_vars(sols, neg)
     if not shared:
         return sols
-    ln = sorted(set(left_nullable) & set(shared))
-    rn = sorted(set(right_nullable) & set(shared))
+    ln, rn = nullable(shared, left_certain, right_certain)
     if not ln and not rn:
         return sols.join(neg.select(*shared).dropDuplicates(), shared,
                          "left_anti")
@@ -697,18 +747,32 @@ def compat_minus(sols: DataFrame, neg: DataFrame,
 
 
 def compat_exists(sols: DataFrame, grp: DataFrame,
-                  left_nullable=(), negate: bool = False) -> DataFrame:
+                  left_certain, right_certain,
+                  negate: bool = False) -> DataFrame:
     """SPARQL §8.1.1 FILTER (NOT) EXISTS tolerating possibly-unbound
-    shared variables: only BOUND bindings substitute into the inner
+    shared variables on the solution side (certain sets and cap as in
+    :func:`compat_join`): only BOUND bindings substitute into the inner
     group — an unbound shared variable is FREE inside EXISTS.  Per
     left null-mask bucket the substituted variables are the shared
     ones non-NULL in the bucket, so each bucket is a semi/anti join on
     those keys (projecting ``grp`` onto them leaves the free variables
     unconstrained); a bucket with no bound shared variable degenerates
-    to the corpus-level does-the-group-match-at-all boolean."""
-    shared = [c for c in sols.columns
-              if c in grp.columns and not c.startswith(SHAPE_PREFIX)]
-    ln = sorted(set(left_nullable) & set(shared))
+    to the corpus-level does-the-group-match-at-all boolean (a
+    limit-1 flag joined on a constant key — a broadcast of at most one
+    row).  The group must bind every shared variable in every
+    solution — an unbound group cell would match any substituted
+    binding, which no semi-join key expresses — so a shared variable
+    outside ``right_certain`` raises :class:`SparqlUnsupported`."""
+    shared = shared_vars(sols, grp)
+    loose = sorted(v for v in shared if v not in right_certain)
+    if loose:
+        raise SparqlUnsupported(
+            f"FILTER {'NOT ' if negate else ''}EXISTS whose group "
+            f"may leave shared variable(s) {loose} unbound "
+            "(an unbound group cell matches any substituted "
+            "binding — not a semi-join key); make the group bind "
+            "them in every branch")
+    ln, _rn = nullable(shared, left_certain, right_certain)
     how = "left_anti" if negate else "left_semi"
     if ln:
         sols = sols.localCheckpoint(eager=True)
@@ -900,16 +964,13 @@ def _match(frame, positions, patterns, optional, filters,
         # FILTERs over group-visible variables apply pre-join (equal
         # to the left-join condition); a filter READING an outer
         # variable is §6.1's expression-over-the-merged-domain form
-        # and routes through leftjoin_filter instead
+        # and leftjoin_filter evaluates it over the merge
         gvars = {term[1:] for pat in grp["patterns"] for term in pat
                  if isinstance(term, str) and term.startswith("?")}
         inner_f, outer_f = [], []
         for e in grp.get("filters") or []:
-            if any(re.search(rf"\b{re.escape(v)}\b", e)
-                   for v in bound - gvars):
-                outer_f.append(e)
-            else:
-                inner_f.append(e)
+            (outer_f if filter_reads(e, bound - gvars)
+             else inner_f).append(e)
         try:
             sub = _match(frame, positions, grp["patterns"], None,
                          inner_f or None, shape, path_edges)
@@ -925,18 +986,7 @@ def _match(frame, positions, patterns, optional, filters,
             raise ValueError(
                 f"optional group {grp['patterns']} shares no variable "
                 f"with {sorted(bound)}")
-        nullable = sorted((vs & bound) - certain)
-        if len(nullable) > COMPAT_MAX_NULLABLE:
-            raise ValueError(
-                f"OPTIONAL left-joining on {len(nullable)} possibly-"
-                f"unbound variables {nullable}: the null-mask "
-                f"decomposition is capped at {COMPAT_MAX_NULLABLE}")
-        if outer_f:
-            out = leftjoin_filter(out, sub, left_nullable=nullable,
-                                  filters=outer_f)
-        else:
-            out = compat_join(out, sub, left_nullable=nullable,
-                              how="left")
+        out = leftjoin_filter(out, sub, certain, vs, filters=outer_f)
         bound |= vs
     for expr in filters or []:
         out = out.filter(expr)
@@ -970,21 +1020,20 @@ def bgp_minus(triples: DataFrame,
               patterns: list[tuple[str, str, str]],
               minus: list[tuple[str, str, str]],
               filters: list[str] | None = None) -> DataFrame:
-    """SPARQL MINUS / FILTER NOT EXISTS: solutions of ``patterns`` that
-    have NO match for the ``minus`` group on their shared variables.
-    One left-anti join on the shared variables — the same shuffle an
-    inner join would take, with Catalyst free to broadcast whichever
-    side is small.
+    """SPARQL MINUS: solutions of ``patterns`` that have NO match for
+    the ``minus`` group on their shared variables — :func:`bgp_match`
+    plus :func:`compat_minus` with both sides certain, so one left-anti
+    join on the shared variables (the same shuffle an inner join would
+    take, with Catalyst free to broadcast whichever side is small).
+    A group sharing no variable removes nothing per SPARQL and raises.
     """
     base = bgp_match(triples, patterns, filters=filters)
     neg = bgp_match(triples, minus)
-    shared = sorted(set(base.columns) & set(neg.columns))
-    if not shared:
+    if not shared_vars(base, neg):
         raise ValueError(
             "MINUS group shares no variable with the base pattern — "
             "per SPARQL semantics that removes nothing; drop the MINUS")
-    return base.join(neg.select(*shared).dropDuplicates(), shared,
-                     "left_anti")
+    return compat_minus(base, neg, base.columns, neg.columns)
 
 
 def bgp_exists(triples: DataFrame,
@@ -1005,24 +1054,18 @@ def bgp_exists(triples: DataFrame,
     every solution).  ``bgp_minus`` refuses the disjoint case; this
     operator implements it.
 
-    Scale shape: shared variables -> one ``left_semi`` / ``left_anti``
-    join on them (duplicate-free probe side, broadcastable).  Disjoint
-    group -> the existence test collapses to a 0-or-1-row frame
-    (``limit(1)``; executes a partial scan with early stop, never a
-    full count) that joins on a constant key — a broadcast of at most
-    one row, no data shuffle.
+    :func:`bgp_match` plus :func:`compat_exists` with both sides
+    certain.  Scale shape: shared variables -> one ``left_semi`` /
+    ``left_anti`` join on them (duplicate-free probe side,
+    broadcastable).  Disjoint group -> the existence test collapses to
+    a 0-or-1-row frame (``limit(1)``; executes a partial scan with
+    early stop, never a full count) that joins on a constant key — a
+    broadcast of at most one row, no data shuffle.
     """
     base = bgp_match(triples, patterns, filters=filters)
     grp = bgp_match(triples, exists)
-    shared = sorted(set(base.columns) & set(grp.columns))
-    if shared:
-        return base.join(grp.select(*shared).dropDuplicates(), shared,
-                         "left_anti" if negate else "left_semi")
-    flag = grp.limit(1).select(F.lit(1).alias("_k"))
-    return (base.withColumn("_k", F.lit(1))
-            .join(F.broadcast(flag), "_k",
-                  "left_anti" if negate else "left_semi")
-            .drop("_k"))
+    return compat_exists(base, grp, base.columns, grp.columns,
+                         negate=negate)
 
 
 def bind(sols: DataFrame, var: str, expr: str) -> DataFrame:
@@ -1372,8 +1415,7 @@ def bgp_values(triples: DataFrame,
     bound = {t[1:] for pat in patterns for t in pat
              if isinstance(t, str) and t.startswith("?")}
     unbound = [v for v in var_names if v not in bound]
-    held = [e for e in filters or ()
-            if any(re.search(rf"\b{re.escape(v)}\b", e) for v in unbound)]
+    held = [e for e in filters or () if filter_reads(e, unbound)]
     sols = bgp_match(triples, patterns, optional=optional,
                      filters=[e for e in filters or () if e not in held]
                      or None,

@@ -121,6 +121,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.utils import AnalysisException
 
 from pyrdfa3_spark.operators import graphops as G
+from pyrdfa3_spark.operators.graphops import (  # noqa: F401 (re-export)
+    SparqlError, SparqlUnsupported,
+)
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 _RDF_LANGSTRING = ("http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -174,14 +177,6 @@ def _shape_fn_sql(fn: str, var: str) -> str:
     dts = ", ".join(f"'{_XSD}{n}'" for n in _NUMERIC_XSD)
     return (f"(CASE WHEN {unknown} THEN NULL "              # ISNUMERIC
             f"ELSE NOT {iri} AND coalesce({dt}, '') IN ({dts}) END)")
-
-
-class SparqlError(ValueError):
-    """Malformed query text."""
-
-
-class SparqlUnsupported(SparqlError):
-    """Syntactically valid SPARQL outside the implemented subset."""
 
 
 class _Term(str):
@@ -2020,10 +2015,6 @@ def _check_injectable(g: dict, inject: set) -> None:
             "(the known substitution/MINUS spec conflict) — rewrite "
             "with FILTER NOT EXISTS")
 
-    def expr_reads(e: str, vs) -> list:
-        return sorted(v for v in vs
-                      if re.search(rf"\b{re.escape(v)}\b", e))
-
     def nested(ng: dict, what: str) -> None:
         gv = _group_vars(ng)
         loose = sorted(v for v in inject
@@ -2036,14 +2027,14 @@ def _check_injectable(g: dict, inject: set) -> None:
                 "join cannot mirror; bind them in every branch")
         outer = sorted(set(inject) - gv)
         for e in ng["filters"]:
-            bad = expr_reads(e, outer)
+            bad = G.filter_reads(e, outer)
             if bad:
                 raise SparqlUnsupported(
                     f"FILTER EXISTS body: a {what} FILTER reads "
                     f"substituted variable(s) {bad} its group never "
                     "binds — out of scope for the injected solve")
         for var, e, _shp in ng["binds"]:
-            bad = expr_reads(e, outer)
+            bad = G.filter_reads(e, outer)
             if bad:
                 raise SparqlUnsupported(
                     f"FILTER EXISTS body: a {what} BIND reads "
@@ -2051,7 +2042,7 @@ def _check_injectable(g: dict, inject: set) -> None:
                     "binds")
         for o in ng["optionals"]:
             for e in (o.get("filters") or []):
-                bad = expr_reads(e, outer)
+                bad = G.filter_reads(e, outer)
                 if bad:
                     raise SparqlUnsupported(
                         f"FILTER EXISTS body: an OPTIONAL filter in "
@@ -2125,13 +2116,9 @@ def _exists_inject(triples: DataFrame, sols: DataFrame, body: dict,
 
     inject = sorted(set(shared_pat) | set(filt_outer))
     _check_injectable(body, set(inject))
-    risky = sorted(v for v in inject if v not in acc_certain)
-    if len(risky) > G.COMPAT_MAX_NULLABLE:
-        raise SparqlUnsupported(
-            f"FILTER {'NOT ' if negate else ''}EXISTS substituting "
-            f"possibly-unbound variable(s) {risky}: the §8.1.1 "
-            "null-mask decomposition is capped at "
-            f"{G.COMPAT_MAX_NULLABLE} variables")
+    # the seed holds only outer bindings: only the outer side's
+    # possibly-unbound substituted variables split it into buckets
+    risky, _ = G.nullable(inject, acc_certain, inject)
     how = "left_anti" if negate else "left_semi"
     shape_vars = body.get("_shape") or frozenset()
     sols = sols.localCheckpoint(eager=True)
@@ -2237,11 +2224,8 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
     bind_targets = [b[0] for b in g["binds"]]
     pre_bind, post_bind = [], []
     for e in g["filters"]:
-        if any(re.search(rf"\b{re.escape(v)}\b", e)
-               for v in bind_targets):
-            post_bind.append(e)
-        else:
-            pre_bind.append(e)
+        (post_bind if G.filter_reads(e, bind_targets)
+         else pre_bind).append(e)
     # filters may reference subquery/GRAPH-bound variables, so with
     # those present they apply after the joins, not inside bgp_match
     inline_filters = None if late else (pre_bind or None)
@@ -2257,21 +2241,16 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
         inline_filters = None
 
     # `acc_certain` tracks the variables certainly bound (never NULL)
-    # in `sols` as operands conjoin; every equi-join below requires its
-    # shared keys certain on BOTH sides — an inner/semi/anti join on a
-    # possibly-NULL (unbound) column silently violates SPARQL's §18.5
-    # compatibility (unbound agrees with anything), so that shape raises
+    # in `sols` as operands conjoin; the graphops compat operators
+    # take it with the other operand's certain set and decompose on
+    # the possibly-unbound shared variables (§18.5: unbound agrees
+    # with anything) — a plain equi-join where both sides are certain
     acc_certain: set[str] = set()
 
     def conjoin(sols, other, what, other_certain):
         if sols is None:
             return other
-        # companion columns join along with their variable, never as
-        # keys of their own; the left frame's shape wins on overlap
-        shared = sorted(c for c in
-                        set(sols.columns) & set(other.columns)
-                        if not c.startswith(G.SHAPE_PREFIX))
-        if not shared:
+        if not G.shared_vars(sols, other):
             if init is not None:
                 # injected EXISTS solve: a body operand disconnected
                 # from the seed is a REQUIRED product under §8.1.1
@@ -2282,20 +2261,10 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
             # refuse rather than misplan it at lake scale
             raise SparqlUnsupported(
                 f"{what} shares no variables with its group")
-        ln = sorted(v for v in shared if v not in acc_certain)
-        rn = sorted(v for v in shared if v not in other_certain)
-        if max(len(ln), len(rn)) > G.COMPAT_MAX_NULLABLE:
-            raise SparqlUnsupported(
-                f"joining a {what} on possibly-unbound variable(s) "
-                f"{sorted(set(ln) | set(rn))}: the §18.5 null-mask "
-                "decomposition is capped at "
-                f"{G.COMPAT_MAX_NULLABLE} variables per side — bind "
-                "the variables in the sibling operands instead")
         # §18.5 compatibility join: unbound agrees with anything and
         # the merge adopts the bound side (null-mask decomposition
         # into equi-joins; plain equi-join when both sides certain)
-        return G.compat_join(sols, other, left_nullable=ln,
-                             right_nullable=rn)
+        return G.compat_join(sols, other, acc_certain, other_certain)
 
     def pattern_vars(patterns):
         vs = set()
@@ -2312,27 +2281,19 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
     inline_opt = None if complex_opt else (g["optionals"] or None)
     if g["patterns"]:
         base, sols = sols, None
-        try:
-            if g["values"] is not None:
-                names, rows = g["values"]
-                sols = G.bgp_values(t, g["patterns"], names, rows,
-                                    optional=inline_opt,
-                                    filters=inline_filters,
-                                    shape_vars=sv, path_edges=edges)
-                acc_certain |= {n for i, n in enumerate(names)
-                                if all(r[i] is not None for r in rows)}
-            else:
-                sols = match(g["patterns"],
-                             optional=inline_opt,
-                             filters=inline_filters,
-                             shape_vars=sv)
-        except ValueError as exc:
-            if "capped" not in str(exc):
-                raise
-            # the matcher's decomposition cap is the same limit the
-            # front-end's own guards raise as SparqlUnsupported —
-            # surface one exception type for one unsupported shape
-            raise SparqlUnsupported(str(exc)) from exc
+        if g["values"] is not None:
+            names, rows = g["values"]
+            sols = G.bgp_values(t, g["patterns"], names, rows,
+                                optional=inline_opt,
+                                filters=inline_filters,
+                                shape_vars=sv, path_edges=edges)
+            acc_certain |= {n for i, n in enumerate(names)
+                            if all(r[i] is not None for r in rows)}
+        else:
+            sols = match(g["patterns"],
+                         optional=inline_opt,
+                         filters=inline_filters,
+                         shape_vars=sv)
         acc_certain |= pattern_vars(g["patterns"])
         if base is not None:
             # injected solve: conjoin the pattern block onto the
@@ -2341,9 +2302,7 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
             # pattern-bound ones), so a plain equi-join; a block
             # disconnected from the seed is the substitution product;
             # the seed's companions win (the outer term's shape)
-            shared_b = sorted(c for c in base.columns
-                              if c in sols.columns
-                              and not c.startswith(G.SHAPE_PREFIX))
+            shared_b = G.shared_vars(base, sols)
             sols = G.drop_dup_companions(sols, base.columns)
             sols = (base.join(sols, shared_b) if shared_b
                     else base.crossJoin(sols))
@@ -2435,77 +2394,44 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
         # OPTIONAL: left-join each optional unit onto the assembled
         # solutions in syntactic order
         for o in g["optionals"]:
-            outer_f, opt_nullable = [], ()
+            # §6.1 leftjoin evaluates the filter over the MERGED
+            # solution: filters reading only CERTAIN optional-side
+            # bindings apply pre-join (equivalent), ones reading an
+            # outer variable lift out to leftjoin_filter.  For a
+            # variable a full-group body binds only optionally, the
+            # merged value adopts the outer binding where the body's
+            # is NULL, so such filters must evaluate over the merge
             if "group" in o:
-                # full-group body: its own top-level filters that
-                # read an OUTER variable are §6.1's merged-domain
-                # expression and lift out; the rest (and every nested
-                # construct) solve recursively as a unit.  CERTAIN
-                # body bindings classify as inner — for a variable
-                # the body binds only optionally, the merged value
-                # adopts the outer binding where the body's is NULL,
-                # so such filters must evaluate over the merge
-                body = o["group"]
-                bvars = _certain_vars(body)
-                inner_f = []
-                for e in body["filters"]:
-                    outside = sorted(
-                        v for v in set(sols.columns) - bvars
-                        if not v.startswith(G.SHAPE_PREFIX)
-                        and re.search(rf"\b{re.escape(v)}\b", e))
-                    (outer_f if outside else inner_f).append(e)
-                if outer_f:
-                    body = {**body, "filters": inner_f}
-                opt = _solve_group(triples, body)
-                o_certain = bvars  # filters don't affect certainty
-                opt_nullable = sorted(
-                    c for c in opt.columns
-                    if not c.startswith(G.SHAPE_PREFIX)
-                    and c not in o_certain)
+                o_certain = _certain_vars(o["group"])
+                filters = o["group"]["filters"]
             else:
-                opt_vars = pattern_vars(o["patterns"])
-                # §6.1 leftjoin evaluates the filter over the MERGED
-                # solution: filters reading only group variables
-                # apply pre-join (equivalent), ones reading outer
-                # variables route through the id-restoring
-                # leftjoin_filter
-                inner_f = []
-                for e in o["filters"] or []:
-                    outside = sorted(
-                        v for v in set(sols.columns) - opt_vars
-                        if not v.startswith(G.SHAPE_PREFIX)
-                        and re.search(rf"\b{re.escape(v)}\b", e))
-                    (outer_f if outside else inner_f).append(e)
+                o_certain = pattern_vars(o["patterns"])
+                filters = o["filters"] or []
+            outer = [v for v in set(sols.columns) - o_certain
+                     if not v.startswith(G.SHAPE_PREFIX)]
+            inner_f, outer_f = [], []
+            for e in filters:
+                (outer_f if G.filter_reads(e, outer)
+                 else inner_f).append(e)
+            if "group" in o:
+                # the rest of the body (and every nested construct)
+                # solves recursively as a unit
+                body = o["group"]
+                opt = _solve_group(triples, {**body, "filters": inner_f}
+                                   if outer_f else body)
+            else:
                 opt = match(o["patterns"],
                             filters=inner_f or None,
                             shape_vars=sv)
-            shared = sorted(c for c in
-                            set(sols.columns) & set(opt.columns)
-                            if not c.startswith(G.SHAPE_PREFIX))
-            if not shared:
+            if not G.shared_vars(sols, opt):
                 raise SparqlUnsupported(
                     "OPTIONAL shares no variables with its group")
-            risky = sorted(v for v in shared if v not in acc_certain)
-            opt_risky = sorted(set(opt_nullable) & set(shared))
-            if max(len(risky), len(opt_risky)) > G.COMPAT_MAX_NULLABLE:
-                raise SparqlUnsupported(
-                    f"OPTIONAL left-joining on possibly-unbound "
-                    f"variable(s) {sorted(set(risky) | set(opt_risky))}"
-                    ": the §18.5 null-mask decomposition is capped at "
-                    f"{G.COMPAT_MAX_NULLABLE} variables — bind them "
-                    "in the sibling operands first")
             # §6.1 leftjoin under §18.5 compatibility; the optional
             # side may itself leave shared variables unbound (a
             # nested OPTIONAL / partial union), which the
             # id-restoring leftjoin handles
-            if outer_f or opt_risky:
-                sols = G.leftjoin_filter(sols, opt,
-                                         left_nullable=risky,
-                                         right_nullable=opt_risky,
-                                         filters=outer_f)
-            else:
-                sols = G.compat_join(sols, opt, left_nullable=risky,
-                                     how="left")
+            sols = G.leftjoin_filter(sols, opt, acc_certain, o_certain,
+                                     filters=outer_f)
     if late:
         # a subquery-projected binding carries no shape (its
         # companions never leave the subquery): NULL companions keep
@@ -2536,10 +2462,8 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
             bcertain = _certain_vars(body)
             cols = {c for c in sols.columns
                     if not c.startswith(G.SHAPE_PREFIX)}
-            filt_outer = sorted(
-                v for v in cols - bvars
-                if any(re.search(rf"\b{re.escape(v)}\b", e)
-                       for e in body["filters"]))
+            filt_outer = sorted({v for e in body["filters"]
+                                 for v in G.filter_reads(e, cols - bvars)})
             inj_risky = sorted(v for v in (cols & bvars)
                                if v not in bcertain)
             if inj_risky or filt_outer:
@@ -2558,28 +2482,10 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
             if negate:
                 sols = sols.limit(0)
             continue
-        shared = sorted(c for c in
-                        set(sols.columns) & set(grp.columns)
-                        if not c.startswith(G.SHAPE_PREFIX))
-        risky = sorted(v for v in shared if v not in acc_certain)
-        grp_risky = sorted(v for v in shared if v not in grp_certain)
-        if grp_risky:
-            raise SparqlUnsupported(
-                f"FILTER {'NOT ' if negate else ''}EXISTS whose group "
-                f"may leave shared variable(s) {grp_risky} unbound "
-                "(an unbound group cell matches any substituted "
-                "binding — not a semi-join key); make the group bind "
-                "them in every branch")
-        if len(risky) > G.COMPAT_MAX_NULLABLE:
-            raise SparqlUnsupported(
-                f"FILTER {'NOT ' if negate else ''}EXISTS sharing "
-                f"possibly-unbound variable(s) {risky}: the §8.1.1 "
-                "null-mask decomposition is capped at "
-                f"{G.COMPAT_MAX_NULLABLE} variables")
         # §8.1.1: only BOUND variables substitute into EXISTS — an
         # unbound shared variable is FREE inside the pattern (per
         # left null-mask bucket, semi/anti join on the bound keys)
-        sols = G.compat_exists(sols, grp, left_nullable=risky,
+        sols = G.compat_exists(sols, grp, acc_certain, grp_certain,
                                negate=negate)
     for body in g["minus"]:
         if isinstance(body, dict):
@@ -2594,23 +2500,10 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
         else:
             neg = match(body)
             neg_certain = pattern_vars(body)
-        shared = sorted(c for c in
-                        set(sols.columns) & set(neg.columns)
-                        if not c.startswith(G.SHAPE_PREFIX))
-        if not shared:
-            continue  # SPARQL: disjoint MINUS removes nothing
-        risky = sorted(v for v in shared if v not in acc_certain)
-        neg_risky = sorted(v for v in shared if v not in neg_certain)
-        if max(len(risky), len(neg_risky)) > G.COMPAT_MAX_NULLABLE:
-            raise SparqlUnsupported(
-                f"MINUS sharing possibly-unbound variable(s) "
-                f"{sorted(set(risky) | set(neg_risky))}: the §8.3 "
-                "null-mask decomposition is capped at "
-                f"{G.COMPAT_MAX_NULLABLE} variables per side")
         # §8.3: remove a solution iff a MINUS row is compatible AND
-        # their bound domains overlap (all-unbound overlap = keep)
-        sols = G.compat_minus(sols, neg, left_nullable=risky,
-                              right_nullable=neg_risky)
+        # their bound domains overlap (all-unbound overlap = keep; a
+        # disjoint MINUS removes nothing)
+        sols = G.compat_minus(sols, neg, acc_certain, neg_certain)
     # other BIND-defined and VALUES-extension bindings: unknown shape
     sols = G.fill_null_companions(sols, sv)
     for e in post_bind:
@@ -2830,6 +2723,7 @@ def sparql(triples: DataFrame, text: str, *,
             # join stamps its companions so instantiation never
             # references a missing __shape_* column
             sols = G.join_values(sols, *q["values"],
+                                 bound=_certain_vars(g),
                                  shape_vars=svars if shaped else None)
         # template blank nodes (explicit _:b / [..]) mint fresh per
         # solution (§16.2.1)
@@ -2863,8 +2757,7 @@ def _compat_join_tiny(sols: DataFrame, other: DataFrame) -> DataFrame:
     from pyspark.sql import functions as F
 
     other = G.drop_dup_companions(other, sols.columns)
-    shared = [c for c in sols.columns
-              if c in other.columns and not c.startswith(G.SHAPE_PREFIX)]
+    shared = G.shared_vars(sols, other)
     s = sols.alias("__cj_s")
     v = F.broadcast(other.alias("__cj_v"))
     cond = None
@@ -2956,8 +2849,12 @@ def _solve_select(triples: DataFrame, q: dict) -> DataFrame:
         if q.get("values"):
             # §18.2.4.3 Values insertion precedes §18.2.4.4 Select
             # expressions, so a projection expression may read a
-            # trailing-VALUES extension variable
-            sols = G.join_values(sols, *q["values"])
+            # trailing-VALUES extension variable; a group key the
+            # WHERE certainly binds is never NULL, so a hash-join key
+            certain = _certain_vars(q["where"])
+            sols = G.join_values(
+                sols, *q["values"],
+                bound={k for k in q["group_by"] if k in certain})
         for _, e, alias in exprs:
             try:
                 sols = G.bind(sols, alias, e)
@@ -2982,6 +2879,7 @@ def _solve_select(triples: DataFrame, q: dict) -> DataFrame:
             # extension bindings carry lexically-inferred shapes like
             # every VALUES-introduced binding
             sols = G.join_values(sols, *q["values"],
+                                 bound=_certain_vars(q["where"]),
                                  shape_vars=q["where"].get("_shape"))
         for _, e, alias in exprs:
             sols = G.bind(sols, alias, e)

@@ -196,7 +196,6 @@ def _extract_batches(batches: Iterator[pa.RecordBatch],
 
 
 def extract_tagged(transcripts: DataFrame,
-                   repartition_to: Optional[int] = None,
                    hturtle_only: bool = False,
                    microdata: bool = False,
                    max_doc_bytes: Optional[int] = None) -> DataFrame:
@@ -207,15 +206,11 @@ def extract_tagged(transcripts: DataFrame,
     parsed (parse cost is ~linear at ~1 MB/s/core, so one 300 MB spam
     page otherwise pins a task for minutes).
 
-    ``repartition_to``: optional explicit shuffle on
-    pmod(hash(conv_id, turn_idx)) before the UDF.  Extraction is
-    embarrassingly parallel per *turn*, so when the source's own splits
-    are size-balanced (Iceberg/parquet file splits are) the shuffle is
-    pure overhead and stays off — measured on this harness it cost more
-    than the whole extraction.  Turn it on when the upstream layout is
-    pathologically skewed (e.g. one file per conversation with a 100x
-    conversation): the (conv_id, turn_idx) hash then spreads the hot
-    conversation across tasks instead of pinning it to one.
+    Extraction is embarrassingly parallel per *turn* and runs on the
+    source's own splits, which are size-balanced for Iceberg/parquet
+    file splits.  A caller whose input is pathologically skewed (one
+    file per conversation with a 100x conversation) repartitions the
+    frame on (conv_id, turn_idx) before calling.
     """
     # in HTurtle mode only embedded-RDF islands carry triples, so the
     # relevance predicate is the island marker, not RDFa attrs;
@@ -227,10 +222,6 @@ def extract_tagged(transcripts: DataFrame,
         pattern += "|(?i)<[^>]{0,1000}itemscope"
     df = (transcripts.select("conv_id", "turn_idx", "text")
           .filter(F.col("text").rlike(pattern)))
-    if repartition_to is not None:
-        df = df.repartition(repartition_to,
-                            F.pmod(F.hash("conv_id", "turn_idx"),
-                                   F.lit(repartition_to)))
     return df.mapInArrow(
         functools.partial(_extract_batches, hturtle_only=hturtle_only,
                           microdata=microdata, max_doc_bytes=max_doc_bytes),
@@ -251,10 +242,9 @@ def split_outputs(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
     return triples, diags
 
 
-def extract_triples(transcripts: DataFrame,
-                    repartition_to: Optional[int] = None) -> DataFrame:
+def extract_triples(transcripts: DataFrame) -> DataFrame:
     """transcripts -> triples DataFrame (diagnostics dropped)."""
-    triples, _ = split_outputs(extract_tagged(transcripts, repartition_to))
+    triples, _ = split_outputs(extract_tagged(transcripts))
     return triples
 
 

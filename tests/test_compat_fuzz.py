@@ -136,7 +136,7 @@ def test_compat_join_fuzz(spark, seed, shared_n):
     got = _multiset(
         G.compat_join(_to_df(spark, lcols, lrows),
                       _to_df(spark, rcols, rrows),
-                      left_nullable=shared, right_nullable=shared),
+                      left_certain=(), right_certain=()),
         out_cols)
     want = _as_counter(py_join(lrows, rrows, lcols, rcols), out_cols)
     assert got == want
@@ -162,7 +162,7 @@ def test_leftjoin_filter_fuzz(spark, seed, shared_n):
     got = _multiset(
         G.leftjoin_filter(_to_df(spark, lcols, lrows),
                           _to_df(spark, rcols, rrows),
-                          left_nullable=shared, right_nullable=shared,
+                          left_certain=(), right_certain=(),
                           filters=filters),
         out_cols)
     want = _as_counter(
@@ -182,7 +182,7 @@ def test_compat_minus_fuzz(spark, seed, shared_n):
     got = _multiset(
         G.compat_minus(_to_df(spark, lcols, lrows),
                        _to_df(spark, rcols, rrows),
-                       left_nullable=shared, right_nullable=shared),
+                       left_certain=(), right_certain=()),
         lcols)
     want = _as_counter(py_minus(lrows, rrows, lcols, rcols), lcols)
     assert got == want
@@ -195,7 +195,7 @@ def test_compat_exists_fuzz(spark, seed, shared_n):
     lcols = shared + ["l1"]
     rcols = shared + ["r1"]
     lrows = _rand_frame(rng, lcols, rng.randint(0, 7))
-    # the engine requires the inner group fully bound (grp_risky
+    # the engine requires the inner group fully bound (compat_exists
     # refuses otherwise), so the right side carries no NULLs
     rrows = _rand_frame(rng, rcols, rng.randint(0, 7),
                         allow_null=False)
@@ -203,7 +203,8 @@ def test_compat_exists_fuzz(spark, seed, shared_n):
     got = _multiset(
         G.compat_exists(_to_df(spark, lcols, lrows),
                         _to_df(spark, rcols, rrows),
-                        left_nullable=shared, negate=negate),
+                        left_certain=(), right_certain=rcols,
+                        negate=negate),
         lcols)
     want = _as_counter(
         py_exists(lrows, rrows, lcols, rcols, negate), lcols)

@@ -92,10 +92,8 @@ def test_pipeline_matches_local_oracle(spark, small_transcripts):
 
 
 def test_parallelism_invariance(spark, small_transcripts):
-    a = _collect_triples(extract_triples(small_transcripts,
-                                         repartition_to=2))
-    b = _collect_triples(extract_triples(small_transcripts,
-                                         repartition_to=17))
+    a = _collect_triples(extract_triples(small_transcripts.repartition(2)))
+    b = _collect_triples(extract_triples(small_transcripts.repartition(17)))
     assert a == b
 
 

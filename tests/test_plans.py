@@ -544,6 +544,34 @@ def test_compat_join_plan_no_cartesian(spark):
             or "SortMergeJoin" in simple), simple
 
 
+def test_trailing_values_joins_certain_variables_by_hash(spark):
+    """A trailing VALUES on variables the WHERE group certainly binds
+    (for an aggregated query: its certain GROUP BY keys) joins them as
+    broadcast hash-join keys, never a nested loop on ``IS NULL OR =``,
+    with the same answers as the compatibility form."""
+    from pyrdfa3_spark.operators.sparql import sparql
+
+    kg = spark.createDataFrame(
+        [("a", "p:name", "Ada"), ("b", "p:name", "Bob"),
+         ("b", "p:name", "Bobby"), ("a", "p:knows", "b")],
+        ["subj", "pred", "obj"])
+    values = 'VALUES (?s ?k) { ("a" "1") ("b" "2") ("z" "3") }'
+    cases = [
+        ("SELECT ?s ?n ?k WHERE { ?s <p:name> ?n } " + values,
+         [("a", "Ada", "1"), ("b", "Bob", "2"), ("b", "Bobby", "2")]),
+        ("SELECT ?s (COUNT(?n) AS ?c) WHERE { ?s <p:name> ?n } "
+         "GROUP BY ?s " + values, [("a", 1), ("b", 2)]),
+        ("CONSTRUCT { ?s <p:k> ?k } WHERE { ?s <p:name> ?n } " + values,
+         [("a", "p:k", "1"), ("b", "p:k", "2")]),
+    ]
+    for text, want in cases:
+        out = sparql(kg, text)
+        plan = _plan(out)
+        assert "BroadcastHashJoin" in plan, (text, plan)
+        assert "BroadcastNestedLoopJoin" not in plan, (text, plan)
+        assert sorted(tuple(r) for r in out.collect()) == want, text
+
+
 def test_results_serializer_plans_scan_side(spark):
     """Every SPARQL results serializer must be a single narrow
     projection over the solutions frame: no shuffle, no Python

@@ -2165,6 +2165,37 @@ def test_compat_join_cap_still_raises(kg):
             UNION { ?s p:knows ?w } }""").collect()
 
 
+def test_capped_shapes_fail_before_any_job(spark, kg):
+    """The null-mask cap is checked where the compat operators start,
+    before any localCheckpoint: a capped shape raises without running
+    a Spark job, through the front end and through the operator."""
+    from pyrdfa3_spark.operators import graphops as G
+
+    three = ["a", "b", "c"]
+    left = spark.createDataFrame([("x", None, "y", "1")],
+                                 "a string, b string, c string, l string")
+    right = spark.createDataFrame([("x", "z", None, "2")],
+                                  "a string, b string, c string, r string")
+    shapes = [
+        lambda: sparql(kg, """SELECT ?s WHERE {
+            ?s p:knows ?x . ?s p:name ?y . ?s p:type ?z .
+            { ?s p:knows ?x . ?s p:name ?y . ?s p:type ?z }
+            UNION { ?s p:knows ?w } }"""),
+        lambda: G.compat_join(left, right, (), three),
+    ]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for i, shape in enumerate(shapes):
+        group = f"capped-shape-{i}"
+        sc.setJobGroup(group, "capped shape job count")
+        try:
+            with pytest.raises(SparqlUnsupported, match="capped"):
+                shape()
+            assert tracker.getJobIdsForGroup(group) == [], i
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_values_only_group_and_values_beside_union(kg):
     out = sorted(_rows(sparql(kg, """SELECT ?s ?n WHERE {
         ?s p:name ?n . { VALUES ?s { "a" } } }""")))
