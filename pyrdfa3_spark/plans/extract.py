@@ -2,10 +2,10 @@
 
 Spark-first layout (SURVEY.md §3.3):
 
-    scan -> cheap rlike prefilter (pushed into the source scan)
-         -> explicit repartition on pmod(hash(conv_id, turn_idx), P)
-            (balances the skewed-conversation fixture: the unit of work
-            is a *turn*, so a 100x conversation spreads across tasks)
+    scan -> prefilter on the scan side: a byte test for ``<`` (a turn
+            without one holds no markup, so plain prose never reaches
+            the regex or its UTF-16 decode), then ``rlike`` with
+            :data:`RDFA_PREFILTER`, whose cost is linear in the text
          -> ONE Arrow-batched ``mapInArrow`` UDF
             (parse + RDFa processing + per-document dedup + deterministic
             skolemization; document graphs never cross the JVM boundary)
@@ -46,10 +46,18 @@ from pyspark.sql.types import (
 # embedded-RDF-island-only documents (E14: <script type="text/turtle">,
 # rdf:RDF in SVG) in the pipeline — they carry triples without any RDFa
 # attribute.
+#
+# The spans after ``<`` are ``[^<>]``, not ``[^>]``, so the regex cost is
+# linear in the text: with ``[^>]`` every bare ``<`` (``i < n`` in code)
+# rescans up to 1,000 chars per alternative, and the spans of successive
+# ``<`` overlap.  The keep set is the same: if a ``[^>]`` span from some
+# ``<`` reaches the attribute, the last ``<`` before the attribute starts
+# a shorter span that holds neither ``<`` nor ``>``, so the ``[^<>]``
+# form matches there; the converse is immediate.
 RDFA_PREFILTER = (
-    "(?i)<[^>]{0,1000}(property|typeof|about|resource|vocab|prefix|rel|rev"
+    "(?i)<[^<>]{0,1000}(property|typeof|about|resource|vocab|prefix|rel|rev"
     "|role|datatype)\\s*="
-    "|(?i)text/turtle|<[^>]{0,200}:RDF[\\s>]"
+    "|(?i)text/turtle|<[^<>]{0,200}:RDF[\\s>]"
 )
 
 TRIPLE_SCHEMA = StructType([
@@ -195,6 +203,25 @@ def _extract_batches(batches: Iterator[pa.RecordBatch],
         yield pa.RecordBatch.from_pydict(rows, schema=ARROW_SCHEMA)
 
 
+def _relevant_turns(transcripts: DataFrame, hturtle_only: bool,
+                    microdata: bool) -> DataFrame:
+    """The turns that can carry triples in the given mode: the scan-side
+    prefilter of :func:`extract_tagged`."""
+    # in HTurtle mode only embedded-RDF islands carry triples, so the
+    # relevance predicate is the island marker, not RDFa attrs;
+    # microdata carriers are matched by their itemscope attribute.  The
+    # ``<`` test goes first and is exact in every mode: the UDF skips a
+    # text without ``<`` before any mode-specific work.  Both tests drop
+    # NULL texts.
+    pattern = ("(?i)text/turtle|<[^<>]*:RDF" if hturtle_only
+               else RDFA_PREFILTER)
+    if microdata:
+        pattern += "|(?i)<[^<>]{0,1000}itemscope"
+    text = F.col("text")
+    return (transcripts.select("conv_id", "turn_idx", "text")
+            .filter(text.contains("<") & text.rlike(pattern)))
+
+
 def extract_tagged(transcripts: DataFrame,
                    hturtle_only: bool = False,
                    microdata: bool = False,
@@ -212,17 +239,7 @@ def extract_tagged(transcripts: DataFrame,
     file per conversation with a 100x conversation) repartitions the
     frame on (conv_id, turn_idx) before calling.
     """
-    # in HTurtle mode only embedded-RDF islands carry triples, so the
-    # relevance predicate is the island marker, not RDFa attrs;
-    # microdata carriers are matched by their itemscope attribute.  The
-    # prefilter also keeps NULL texts out of the UDF.
-    pattern = ("(?i)text/turtle|<[^>]*:RDF" if hturtle_only
-               else RDFA_PREFILTER)
-    if microdata:
-        pattern += "|(?i)<[^>]{0,1000}itemscope"
-    df = (transcripts.select("conv_id", "turn_idx", "text")
-          .filter(F.col("text").rlike(pattern)))
-    return df.mapInArrow(
+    return _relevant_turns(transcripts, hturtle_only, microdata).mapInArrow(
         functools.partial(_extract_batches, hturtle_only=hturtle_only,
                           microdata=microdata, max_doc_bytes=max_doc_bytes),
         schema=TRIPLE_SCHEMA)

@@ -2,16 +2,21 @@
 
 The oracle here is the engine itself run in-process on the same
 deterministically rendered fragments — this validates the Spark plumbing
-(prefilter, repartition, Arrow UDF, skolemization, per-doc dedup),
+(prefilter, Arrow UDF, skolemization, per-doc dedup),
 while tests/test_engine.py validates the semantics against hand-derived
 golden graphs.
 """
 
 from __future__ import annotations
 
+import functools
+import random
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
+from pyrdfa3_spark.plans import extract
 from pyrdfa3_spark.plans.extract import (
     extract_tagged, extract_triples, split_outputs,
 )
@@ -176,3 +181,109 @@ def test_max_doc_bytes_guard(spark):
     assert {r["turn_idx"] for r in all_triples.collect()} == {0, 1}
 
 
+# The prefilter patterns with overlapping [^>] spans, with no "<" guard:
+# the oracle of the keep-set differential below.  They run through Spark
+# rlike (Java regex semantics), as the pipeline's do.
+_OLD_RDFA = ("(?i)<[^>]{0,1000}(property|typeof|about|resource|vocab|prefix"
+             "|rel|rev|role|datatype)\\s*="
+             "|(?i)text/turtle|<[^>]{0,200}:RDF[\\s>]")
+_OLD_PATTERNS = {
+    "rdfa": _OLD_RDFA,
+    "hturtle": "(?i)text/turtle|<[^>]*:RDF",
+    "microdata": _OLD_RDFA + "|(?i)<[^>]{0,1000}itemscope",
+}
+_MODES = {"rdfa": {}, "hturtle": {"hturtle_only": True},
+          "microdata": {"microdata": True}}
+_ATTRS = ["property", "typeof", "about", "resource", "vocab", "prefix",
+          "rel", "rev", "role", "datatype"]
+
+
+def _prefilter_corpus():
+    """Seeded texts around every edge of the prefilter: random atom soup,
+    spans on both sides of the 200/1000-char bounds, ``<`` inside an
+    attribute value, markers with no ``<``, NULL, non-Latin-1 prose and
+    every fragments.py template wrapped in prose."""
+    from pyrdfa3_spark.sources.fragments import (
+        N_TEMPLATES, PROSE_AFTER, PROSE_BEFORE, render_fragment,
+    )
+
+    rng = random.Random(20240917)
+
+    def mixed_case(word):
+        return "".join(c.upper() if rng.random() < 0.3 else c for c in word)
+
+    atoms = ["<", ">", "=", " = ", '"', "'", "\n", " ", "div ", "x",
+             ":RDF", ":rdf ", "text/turtle", "itemscope", "日本語", "é",
+             "</span>", "<p>"]
+    texts = []
+    for _ in range(500):
+        parts = []
+        for _ in range(rng.randint(1, 40)):
+            r = rng.random()
+            if r < 0.25:
+                parts.append(mixed_case(rng.choice(_ATTRS)))
+            elif r < 0.3:
+                parts.append(rng.choice("ab é\n") * rng.randint(150, 1100))
+            else:
+                parts.append(rng.choice(atoms))
+        texts.append("".join(parts))
+    for n in (199, 200, 201, 999, 1000, 1001):
+        fill = "a" * n
+        texts += [f"<{fill}property=", f"<{fill}TypeOf =x>",
+                  f"<{fill}:RDF>", f"<{fill}:RDF x", f"<{fill}itemscope>",
+                  f"<{fill[:-3]}<b property='p'>",
+                  f"< {'<' * 3}{fill}about=", f"<{fill}>rel="]
+    texts += ['<div title="a<b" property="x">y</div>',
+              '<div title="a<b" itemscope>y</div>',
+              '<p title="x>y" property="z">w</p>',
+              "plain text/turtle mention, no markup",
+              "for (i = 0; i < n; i++) property = 1; about=2",
+              "日本語の文章です。ünïcødé ✓ 😀 — no markup at all",
+              "😀 <span property=\"名前\">値</span> ✓",
+              None]
+    for i in range(N_TEMPLATES):
+        _, frag = render_fragment(i, i)
+        texts.append(PROSE_BEFORE[i % 4] + frag + PROSE_AFTER[i % 4])
+    return [(f"c{i % 7}", i, t) for i, t in enumerate(texts)]
+
+
+@pytest.fixture(scope="module")
+def prefilter_corpus(spark):
+    df = spark.createDataFrame(
+        _prefilter_corpus(), "conv_id string, turn_idx int, text string")
+    df.cache().count()
+    return df
+
+
+def _turns(df):
+    return sorted(r["turn_idx"] for r in df.select("turn_idx").collect())
+
+
+@pytest.mark.parametrize("mode", sorted(_MODES))
+def test_prefilter_keep_set_matches_old_patterns(spark, prefilter_corpus,
+                                                 mode):
+    """The "<" guard plus [^<>] spans keep exactly the turns the old
+    patterns kept that hold a "<" (the UDF skips the rest before any
+    mode-specific work), and extraction emits the same triple and
+    diagnostic rows as under the old filter."""
+    text = F.col("text")
+    old = prefilter_corpus.filter(text.rlike(_OLD_PATTERNS[mode]))
+    opts = _MODES[mode]
+    kept = extract._relevant_turns(prefilter_corpus,
+                                   opts.get("hturtle_only", False),
+                                   opts.get("microdata", False))
+    expected = _turns(old.filter(text.contains("<")))
+    assert _turns(kept) == expected
+    # the corpus reaches both sides of the filter and of the guard
+    assert 0 < len(expected) < len(_turns(old)) < prefilter_corpus.count()
+    if mode == "rdfa":
+        # the exported pattern alone keeps the same set as the old one
+        assert _turns(prefilter_corpus.filter(
+            text.rlike(extract.RDFA_PREFILTER))) == _turns(old)
+
+    old_rows = old.select("conv_id", "turn_idx", "text").mapInArrow(
+        functools.partial(extract._extract_batches, **opts),
+        schema=extract.TRIPLE_SCHEMA).collect()
+    new_rows = extract_tagged(prefilter_corpus, **opts).collect()
+    assert Counter(map(tuple, new_rows)) == Counter(map(tuple, old_rows))
+    assert any(r["kind"] == "t" for r in new_rows)

@@ -13,6 +13,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 
 # The guards assert plan PROPERTIES (pushdown, broadcast, single
 # Python boundary, partial agg, no cartesian), which must hold at
@@ -39,8 +40,14 @@ def test_extraction_plan_single_python_boundary_and_pruning(spark):
     assert simple.count("MapInArrow") == 1     # exactly one Python boundary
     assert "MapInPandas" not in simple
     plan = _plan(df)
-    # the rlike prefilter must sit scan-side, not after the UDF
-    assert "rlike" in plan or "RLIKE" in plan
+    # the prefilter must sit scan-side, not after the UDF, and test for
+    # "<" ahead of the RLIKE so prose never reaches the regex
+    nodes = re.split(r"\n\((?=\d+\) )", plan)
+    arrow = next(i for i, n in enumerate(nodes)
+                 if re.match(r"\d+\) MapInArrow\b", n))
+    cond = next(ln for n in nodes[:arrow] if re.match(r"\d+\) Filter\b", n)
+                for ln in n.splitlines() if ln.startswith("Condition"))
+    assert 0 <= cond.find("Contains(") < cond.find("RLIKE("), cond
     # column pruning: the documents scan must not read unused columns
     scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert scan and all("lang" not in ln and "kind" not in ln
