@@ -92,8 +92,8 @@ class SparkGraph:
 
     @classmethod
     def empty(cls, spark) -> "SparkGraph":
-        return cls(spark.createDataFrame(
-            [], "subj string, pred string, obj string"))
+        return cls(G.local_frame(
+            spark, [], "subj string, pred string, obj string"))
 
     # -- rdflib-style triple access ----------------------------------
 
@@ -189,8 +189,8 @@ class SparkGraph:
         """rdflib ``add`` — returns a NEW graph (DataFrames are
         immutable).  For bulk loads union whole frames instead."""
         s, p, o = triple
-        row = self.df.sparkSession.createDataFrame(
-            [(s, p, o)], "subj string, pred string, obj string")
+        row = G.local_frame(self.df.sparkSession, [(s, p, o)],
+                            "subj string, pred string, obj string")
         return SparkGraph(
             self.df.unionByName(row, allowMissingColumns=True),
             self._ns)
@@ -247,16 +247,14 @@ class SparkGraph:
             raise ValueError("parse needs exactly one of source/data")
         if data is not None:
             if fmt in ("nt", "ntriples"):
-                source = spark.createDataFrame(
-                    _data_lines(data),
-                    schema="line string")  # explicit: data may be ''
+                source = G.local_frame(spark, _data_lines(data),
+                                       "line string")
             elif fmt == "jsonld":
-                source = spark.createDataFrame(
-                    _data_lines(data),
-                    schema="jsonld string")
+                source = G.local_frame(spark, _data_lines(data),
+                                       "jsonld string")
             else:
-                source = spark.createDataFrame([(0, data)],
-                                               ["doc_id", "text"])
+                source = G.local_frame(spark, [(0, data)],
+                                       "doc_id bigint, text string")
         if fmt in ("nt", "ntriples"):
             from pyrdfa3_spark.sources.ntriples import (parse_ntriples,
                                                         read_ntriples)
@@ -451,10 +449,11 @@ class SparkGraph:
             if optional is not None or filters is not None:
                 raise ValueError("text queries carry OPTIONAL/FILTER "
                                  "inline")
-            from pyrdfa3_spark.operators.sparql import sparql
+            from pyrdfa3_spark.operators.sparql import execute, parse
 
-            return sparql(self._set_frame(), patterns,
-                          init_bindings=initBindings, init_ns=initNs)
+            q = parse(patterns, initNs)
+            return execute(self._query_frame(q), q,
+                           init_bindings=initBindings)
         if initBindings is not None or initNs is not None:
             raise ValueError("initBindings/initNs apply to text queries")
         return G.bgp_match(self._set_frame(), patterns,
@@ -469,6 +468,11 @@ class SparkGraph:
         from pyrdfa3_spark.operators.sparql import update as _update
 
         return SparkGraph(_update(self.df, text), self._ns)
+
+    def _query_frame(self, q: dict) -> DataFrame:
+        """The frame a parsed text query runs over: the set, except
+        for ASK (existence reads the same over the bag)."""
+        return self.df if q["form"] == "ask" else self._set_frame()
 
     def ask(self, patterns, filters=None) -> bool:
         # existence reads the same over the bag as over the set, so
@@ -506,8 +510,9 @@ class SparkGraph:
             # block (the 1-row local header partition collects ahead
             # of the body partitions).
             body = S.to_turtle(df, prefixes=self._ns or None)
-            header = df.sparkSession.createDataFrame(
-                [(S.turtle_header(self._ns or None),)], ["block"])
+            header = G.local_frame(
+                df.sparkSession, [(S.turtle_header(self._ns or None),)],
+                "block string")
             return header.unionByName(body)
         if fmt == "jsonld":
             return S.to_jsonld(df, context=self._ns or None)
@@ -590,12 +595,15 @@ class SparkDataset:
             and c in self.df.columns]
         return self.df.dropDuplicates(key)
 
+    _query_frame = SparkGraph._query_frame
+
     # -- construction --------------------------------------------------
 
     @classmethod
     def empty(cls, spark, default_union: bool = False) -> "SparkDataset":
-        return cls(spark.createDataFrame(
-            [], "subj string, pred string, obj string, graph string"),
+        return cls(G.local_frame(
+            spark, [],
+            "subj string, pred string, obj string, graph string"),
             default_union=default_union)
 
     @classmethod
@@ -677,8 +685,8 @@ class SparkDataset:
 
     def add(self, quad) -> "SparkDataset":
         s, p, o, g = quad
-        row = self.df.sparkSession.createDataFrame(
-            [(s, p, o, g)],
+        row = G.local_frame(
+            self.df.sparkSession, [(s, p, o, g)],
             "subj string, pred string, obj string, graph string")
         return self._derive(self.df.unionByName(
             row, allowMissingColumns=True))
@@ -688,8 +696,8 @@ class SparkDataset:
         (the lake-scale path: a plain union, no driver materialization)
         or a small driver-side iterable of ``(s, p, o, g)`` tuples."""
         if not isinstance(quads, DataFrame):
-            quads = self.df.sparkSession.createDataFrame(
-                [tuple(q) for q in quads],
+            quads = G.local_frame(
+                self.df.sparkSession, [tuple(q) for q in quads],
                 "subj string, pred string, obj string, graph string")
         return self._derive(self.df.unionByName(
             quads, allowMissingColumns=True))
@@ -743,11 +751,12 @@ class SparkDataset:
         ``default_union`` (rdflib Dataset vs ConjunctiveGraph posture);
         GRAPH / FROM / FROM NAMED work either way.  ``initBindings`` /
         ``initNs`` as on :meth:`SparkGraph.query`."""
-        from pyrdfa3_spark.operators.sparql import sparql
+        from pyrdfa3_spark.operators.sparql import execute, parse
 
-        return sparql(self._set_frame(), text,
-                      union_default=self.default_union,
-                      init_bindings=initBindings, init_ns=initNs)
+        q = parse(text, initNs)
+        return execute(self._query_frame(q), q,
+                       union_default=self.default_union,
+                       init_bindings=initBindings)
 
     def update(self, text: str) -> "SparkDataset":
         """SPARQL 1.1 UPDATE over the quad store (GRAPH blocks, WITH,
@@ -799,9 +808,8 @@ class SparkDataset:
             from pyrdfa3_spark.sources.ntriples import (parse_nquads,
                                                         read_nquads)
             if data is not None:
-                source = spark.createDataFrame(
-                    _data_lines(data),
-                    schema="line string")
+                source = G.local_frame(spark, _data_lines(data),
+                                       "line string")
             parsed = (parse_nquads(source)
                       if isinstance(source, DataFrame)
                       else read_nquads(spark, source))
@@ -809,8 +817,8 @@ class SparkDataset:
             from pyrdfa3_spark.sources.rdfdocs import (
                 parse_rdf_documents, triples_only)
             if data is not None:
-                source = spark.createDataFrame([(0, data)],
-                                               ["doc_id", "text"])
+                source = G.local_frame(spark, [(0, data)],
+                                       "doc_id bigint, text string")
             elif not isinstance(source, DataFrame):
                 source = (spark.read.text(source, wholetext=True)
                           .select(F.xxhash64(F.input_file_name())

@@ -9,11 +9,14 @@ noted).
 
 from __future__ import annotations
 
+import copy
+import functools
 import re
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pyrdfa3_spark.functions.constants import (
     RDF_TYPE, RDFA_COPY, RDFA_PATTERN,
@@ -39,6 +42,39 @@ def sql_str(s: str) -> str:
 
 def _sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
+
+
+@functools.lru_cache(maxsize=64)
+def _ddl_schema(ddl: str) -> StructType:
+    return StructType.fromDDL(ddl)  # a JVM parse: three py4j calls
+
+
+def local_frame(spark, rows, schema) -> DataFrame:
+    """A frame of driver-side rows: the one builder of every inline
+    frame the operators and the graph facade make from literals
+    (VALUES binding tables, DATA deltas, DESCRIBE node lists, BFS
+    sources, walked path edges, facade rows).  The rows reach the JVM as one Arrow
+    table, so the frame plans as a ``LocalTableScan`` and scanning it
+    starts no Python worker; ``createDataFrame(<list>)`` plans an
+    ``ExistingRDD`` scan whose every task runs in one.  Build cost is
+    linear in the row count.  ``schema`` is a DDL string
+    (``"subj string, pred string"``) or a ``StructType``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    # a copy: the frame keeps its schema object, which callers may alter
+    st = (copy.deepcopy(_ddl_schema(schema)) if isinstance(schema, str)
+          else schema)
+    width = len(st.fields)
+    for r in rows:
+        if len(r) != width:
+            raise ValueError(f"row {r!r} has {len(r)} cells; the "
+                             f"schema has {width}")
+    cols = list(zip(*rows)) if rows else [()] * width
+    table = pa.table([pa.array(c, type=to_arrow_type(f.dataType))
+                      for c, f in zip(cols, st.fields)],
+                     names=st.fieldNames())
+    return spark.createDataFrame(table, st)
 
 
 def dedup_triples(triples: DataFrame, per_document: bool = True) -> DataFrame:
@@ -305,10 +341,8 @@ def miniowl_expand(data: DataFrame, vocab: DataFrame,
                   for r in vocab.select("subj", "pred", "obj").collect()]
     prop_map, class_map = _schema_maps(vocab_rows)
 
-    pm = spark.createDataFrame(prop_map or [("", "")], ["f", "t"]) \
-        .filter(F.col("f") != "")
-    cm = spark.createDataFrame(class_map or [("", "")], ["f", "t"]) \
-        .filter(F.col("f") != "")
+    pm = local_frame(spark, prop_map, "f string, t string")
+    cm = local_frame(spark, class_map, "f string, t string")
 
     base = data.select("subj", "pred", "obj").dropDuplicates() \
         .localCheckpoint(eager=True)  # see transitive_closure: no cache leak
@@ -1389,6 +1423,66 @@ def path_zero_or_more(triples: DataFrame, pred: str,
     return plus.unionByName(zero).dropDuplicates()
 
 
+def path_walk(triples: DataFrame, pred: str, start: str, out_pred: str,
+              reverse: bool = False, zero_length: bool = False,
+              max_iterations: int = 20) -> DataFrame:
+    """SPARQL ``<start> pred+ ?x`` (with ``reverse``: ``?x pred+
+    <start>``) walked from the constant end — the magic-sets rewrite
+    (Bancilhon et al., PODS 1986) of :func:`path_closure` filtered to
+    ``start``: only nodes reachable from ``start`` are ever touched,
+    where the closure computes every pair the predicate connects.
+    Returns the same ``(subj, pred, obj)`` edges under ``out_pred`` as
+    that filtered closure — ``(start, out_pred, x)`` for every ``x``
+    one or more hops away (reversed: ``(x, out_pred, start)``) — as a
+    :func:`local_frame`.  With ``zero_length`` it is ``pred*``: the
+    zero-length pair ``(start, start)`` comes from the lazy
+    :func:`graph_terms` slice filtered to ``start``, exactly as
+    :func:`path_zero_or_more` gives it (so only when ``start`` is a
+    graph term).
+
+    Scale shape: each round filters the predicate's edge slice to the
+    frontier — an ``IN`` list, which the scan evaluates as a hash set
+    — and collects the next nodes: one job per round, no shuffle; a
+    seed whose farthest reachable node is ``e`` hops away takes
+    ``e + 1`` rounds.  (A broadcast join against a frontier frame
+    would cost a second job per round, the broadcast's own.)  The
+    reached set is held on the driver: its size is the answer's size,
+    the same posture as :func:`describe`.  When the frontier still
+    grows after ``max_iterations`` rounds, the walk falls back to the
+    doubling closure filtered to ``start``, so deep chains keep
+    working."""
+    src, dst = ("obj", "subj") if reverse else ("subj", "obj")
+    edges = triples.filter(f"pred = {sql_str(pred)}")
+    reached: set[str] = set()
+    frontier = {start}
+    for _ in range(max_iterations):
+        keys = ", ".join(sql_str(n) for n in sorted(frontier))
+        nxt = {r[0] for r in edges.filter(f"{src} IN ({keys})")
+               .selectExpr(dst).collect()}
+        frontier = nxt - reached - {None}
+        if not frontier:
+            break
+        reached |= frontier
+    else:
+        whole = (path_zero_or_more if zero_length else path_closure)(
+            triples, pred, out_pred=out_pred, strategy="doubling")
+        return whole.filter(f"{src} = {sql_str(start)}")
+    if zero_length:
+        # the zero-length slice supplies (start, start)
+        reached.discard(start)
+    out = local_frame(
+        triples.sparkSession,
+        [(n, out_pred, start) if reverse else (start, out_pred, n)
+         for n in sorted(reached)],
+        "subj string, pred string, obj string")
+    if not zero_length:
+        return out
+    zero = (graph_terms(triples).filter(f"node = {sql_str(start)}")
+            .selectExpr("node AS subj", f"{sql_str(out_pred)} AS pred",
+                        "node AS obj"))
+    return out.unionByName(zero)
+
+
 def bgp_values(triples: DataFrame,
                patterns: list[tuple[str, str, str]],
                var_names: list[str],
@@ -1483,7 +1577,8 @@ def join_values(sols: DataFrame, names: list[str], rows: list[tuple],
             for _ in rs[1:]:
                 part = part.unionByName(one)
         else:
-            lit = sols.sparkSession.createDataFrame(
+            lit = local_frame(
+                sols.sparkSession,
                 [tuple(str(r[i]) for i in mask) for r in rs],
                 ", ".join(f"{_sql_ident(c)} string" for c in cols))
             left = sols.alias("__vj_s")
@@ -1736,9 +1831,9 @@ def describe(triples: DataFrame, nodes: list[str],
     """
     if not nodes:
         raise ValueError("describe needs at least one node")
-    spark = triples.sparkSession
-    frontier = spark.createDataFrame([(n,) for n in nodes], ["subj"]) \
-        .dropDuplicates()
+    frontier = local_frame(triples.sparkSession,
+                           [(n,) for n in sorted(set(nodes))],
+                           "subj string")
     return _describe_loop(triples, frontier, max_hops, hint=True)
 
 
@@ -1796,10 +1891,10 @@ def bfs_distances(edges: DataFrame, sources: list[str],
     """
     if not sources:
         raise ValueError("bfs_distances needs at least one source")
-    spark = edges.sparkSession
     e = edges.select("src", "dst").dropDuplicates()
-    frontier = spark.createDataFrame(
-        [(n,) for n in sources], ["node"]).dropDuplicates()
+    frontier = local_frame(edges.sparkSession,
+                           [(n,) for n in sorted(set(sources))],
+                           "node string")
     out = frontier.select("node", F.lit(0).cast("bigint").alias("dist"))
     for hop in range(1, max_hops + 1):
         nxt = (e.join(frontier.withColumnRenamed("node", "src"), "src")

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyrdfa3_spark.functions.constants import RDF_TYPE
+from pyrdfa3_spark.operators.graphops import local_frame
 
 #: value "looks like an IRI" when the triple store carries no
 #: ``obj_is_iri`` column: an RFC 3986 scheme prefix.  The extraction
@@ -69,8 +70,8 @@ _VIOLATION_COLS = ("focus", "shape", "path", "constraint", "value")
 
 
 def _empty_report(spark) -> DataFrame:
-    return spark.createDataFrame(
-        [], "focus string, shape string, path string, "
+    return local_frame(
+        spark, [], "focus string, shape string, path string, "
             "constraint string, value string")
 
 

@@ -34,8 +34,10 @@ misparses — outside it):
   p1|p2|..  !(p1|p2)`` and NESTED combinations (``(p1/p2)+``,
   ``^(p*)``, closure over alternatives, ...) — each operator compiles
   to the matching ``path_*`` virtual-predicate operator, nested
-  operands materializing bottom-up into the working frame; path
-  operators on a variable predicate raise.
+  operands materializing bottom-up into the working frame; a
+  top-level ``+``/``*`` with a constant subject or object walks from
+  that constant (``path_walk``); path operators on a variable
+  predicate raise.
 * ``ASK``, ``CONSTRUCT {template} WHERE {..}``, ``DESCRIBE <iri>...``.
 * Dataset clauses ``FROM <g>`` / ``FROM NAMED <g>`` on every query
   form (quad frames only): FROM graphs merge into the default graph,
@@ -1785,13 +1787,17 @@ def _expand_paths(triples: DataFrame, groups: list[dict],
     materialize the working frame IS ``triples``.  Nested paths (e.g.
     ``(p1/p2)+`` or ``^(p*)``) materialize bottom-up: each inner
     operand becomes a virtual edge set in the working frame before
-    the outer operator closes over it."""
+    the outer operator closes over it.  A top-level ``+``/``*`` with
+    a constant endpoint walks from that constant instead
+    (``graphops.path_walk``)."""
     counter = [0]
     # the frame passes through untouched unless a path materializes:
     # the matcher projects only the bound variables anyway
     work = [triples]
 
-    def materialize(path) -> str:
+    def materialize(path, start=None) -> str:
+        """``start``: ``(constant, reverse)`` for a top-level closure
+        with a constant endpoint — the subject, else the object."""
         kind = path[0]
         if kind == "pred":
             return path[1]
@@ -1823,13 +1829,22 @@ def _expand_paths(triples: DataFrame, groups: list[dict],
         else:
             inner = path[1] if isinstance(path[1], str) \
                 else materialize(path[1])
-            # text-surface closures use the doubling strategy: the
-            # query author can't pick per-call knobs here, and
-            # doubling's log2-depth rounds (2^20-deep graphs inside
-            # the default iteration budget) are the safe default for
-            # unknown-depth data; operator-level callers who know
-            # their graph is shallow keep semi-naive's smaller joins
-            if kind == "plus":
+            # a closure with a constant endpoint walks from it: one
+            # job per hop, touching only the nodes it reaches.  A
+            # closure with both ends free, or nested in another
+            # path, uses the doubling strategy: the query author
+            # can't pick per-call knobs here, and doubling's
+            # log2-depth rounds (2^20-deep graphs inside the default
+            # iteration budget) are the safe default for
+            # unknown-depth data (the walk falls back to it, filtered
+            # to its constant, past 20 hops); operator-level callers
+            # who know their graph is shallow keep semi-naive's
+            # smaller joins
+            if start is not None and kind in ("plus", "star"):
+                edges = G.path_walk(work[0], inner, start[0], name,
+                                    reverse=start[1],
+                                    zero_length=kind == "star")
+            elif kind == "plus":
                 edges = G.path_closure(work[0], inner, out_pred=name,
                                        strategy="doubling")
             elif kind == "star":
@@ -1871,7 +1886,13 @@ def _expand_paths(triples: DataFrame, groups: list[dict],
                         "endpoint's shape is unknown; match a "
                         "variable and FILTER on LANG/DATATYPE of a "
                         "single-hop binding instead)")
-                pred = materialize(path)
+                start = None
+                if path[0] in ("plus", "star"):
+                    if not s.startswith("?"):
+                        start = (s, False)
+                    elif not o.startswith("?"):
+                        start = (o, True)
+                pred = materialize(path, start)
             else:  # already a plain string (template positions)
                 pred = path
             out.append((s, pred, o))
@@ -2368,10 +2389,11 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
         names, rows = g["values"]
         if sols is None:
             sols = G.ensure_shape_companions(
-                triples.sparkSession.createDataFrame(
+                G.local_frame(
+                    triples.sparkSession,
                     [tuple(None if c is None else str(c) for c in r)
                      for r in rows],
-                    schema=", ".join(f"`{n}` string" for n in names)),
+                    ", ".join(f"`{n}` string" for n in names)),
                 [n for n in sv or () if n in names])
         else:
             sols = G.join_values(sols, names, rows, bound=acc_certain,
@@ -2617,9 +2639,18 @@ def sparql(triples: DataFrame, text: str, *,
     with the same broadcast bag semantics as written VALUES (the
     binding table is lexical: pass term strings; ``None`` = UNDEF).
     ``init_ns`` pre-seeds prefixes (see :func:`parse`)."""
+    return execute(triples, parse(text, init_ns),
+                   union_default=union_default,
+                   init_bindings=init_bindings)
+
+
+def execute(triples: DataFrame, q: dict, *, union_default: bool = True,
+            init_bindings: dict | None = None) -> DataFrame:
+    """:func:`sparql` over a query :func:`parse` returned, for callers
+    that pick the frame by the query form (``q["form"]``).  Solving
+    rewrites the query's groups, so each parse executes once."""
     from pyspark.sql import functions as F
 
-    q = parse(text, init_ns)
     if init_bindings:
         w = q.get("where")
         if not w:
@@ -2662,9 +2693,7 @@ def sparql(triples: DataFrame, text: str, *,
     if q["form"] == "ask":
         return G.ask_solutions(_solve_group(triples, q["where"]))
     if q["form"] == "describe":
-        # parser terms are str subclasses; createDataFrame's schema
-        # inference dispatches on exact type, so ground them to str
-        return G.describe(triples, [str(n) for n in q["nodes"]])
+        return G.describe(triples, q["nodes"])
     if q["form"] == "describe_var":
         sols = _solve_group(triples, q["where"])
         missing = [v for v in q["vars"] if v not in sols.columns]
@@ -2677,8 +2706,8 @@ def sparql(triples: DataFrame, text: str, *,
             nodes = part if nodes is None else nodes.unionByName(part)
         if q["nodes"]:  # mixed DESCRIBE <iri> ?x form: one batch frame
             nodes = nodes.unionByName(
-                triples.sparkSession.createDataFrame(
-                    [(str(i),) for i in q["nodes"]], "node string"))
+                G.local_frame(triples.sparkSession,
+                              [(i,) for i in q["nodes"]], "node string"))
         return G.describe_frame(triples, nodes)
     if q["form"] == "construct":
         g = q["where"]
@@ -2740,7 +2769,7 @@ def sparql(triples: DataFrame, text: str, *,
             schema = ("subj string, pred string, obj string"
                       + (", obj_is_iri boolean, obj_lang string, "
                          "obj_datatype string" if shaped else ""))
-            return triples.sparkSession.createDataFrame([], schema)
+            return G.local_frame(triples.sparkSession, [], schema)
         return G.construct_solutions(sols, template, obj_shapes=shapes)
 
     return _solve_select(triples, q)
@@ -3256,8 +3285,9 @@ def update(triples: DataFrame, text: str) -> DataFrame:
 
     Scale shapes, per operation kind:
 
-    * ``INSERT DATA`` / ``DELETE DATA``: the ground delta is a literal
-      driver-side frame, so the set semantics cost is ONE broadcast
+    * ``INSERT DATA`` / ``DELETE DATA``: the ground delta is a
+      ``graphops.local_frame``, a ``LocalTableScan`` whose scan starts
+      no Python worker, so the set semantics cost is ONE broadcast
       anti-join over the big side — no shuffle of the graph at all
       (plan-guarded in tests/test_plans.py).
     * ``CLEAR`` / ``DROP``: a filter — no join, no shuffle.
@@ -3607,7 +3637,7 @@ def _apply_update(df: DataFrame, op: dict, quads: bool) -> DataFrame:
                   + (", graph string" if quads else "")
                   + (", obj_is_iri boolean, obj_lang string, "
                      "obj_datatype string" if shape else ""))
-        delta = (df.sparkSession.createDataFrame(data, schema=schema)
+        delta = (G.local_frame(df.sparkSession, data, schema)
                  .select(*_TRIPLE_KEY, *(("graph",) if quads else ()),
                          *shape))
         if op["op"] == "delete_data":

@@ -680,3 +680,39 @@ def test_correctness_window_puts_never_green_entries_first():
     order = entrymod._window_order(names, rounds)
     assert order[:2] == [names[1], names[2]]
     assert order[2:] == [n for n in names if n not in names[1:3]]
+
+
+def test_inline_frames_plan_local_scans(spark):
+    """Frames built from driver literals — DATA deltas, VALUES and
+    initBindings tables, DESCRIBE node lists, facade rows, a walked
+    path's edges — plan as a LocalTableScan, never as an ExistingRDD
+    scan, whose every task starts a Python worker.  The base graph is
+    a Range projection, so any local scan comes from the code under
+    test.  (A localCheckpoint frame also scans as ExistingRDD, JVM
+    side; DESCRIBE's resource has no blank-node objects, so its
+    frontier walk stops before checkpointing one.)"""
+    from pyrdfa3_spark.graph import SparkGraph
+    from pyrdfa3_spark.operators.sparql import sparql, update
+
+    base = spark.range(20).selectExpr(
+        "concat('s', id) AS subj", "'p:k' AS pred",
+        "concat('s', id + 1) AS obj")
+    cases = {
+        "INSERT DATA": update(base, 'INSERT DATA { <n1> <p> "v" }'),
+        "DELETE DATA": update(base, "DELETE DATA { <s1> <p:k> <s2> }"),
+        "VALUES-only group": sparql(
+            base, "SELECT ?x WHERE { VALUES ?x { <a> <b> } }"),
+        "trailing VALUES": sparql(
+            base, "SELECT ?s ?o WHERE { ?s <p:k> ?o } "
+                  "VALUES ?s { <s1> <s2> }"),
+        "initBindings": sparql(base, "SELECT ?o WHERE { ?s <p:k> ?o }",
+                               init_bindings={"s": "s3"}),
+        "DESCRIBE <iri>": sparql(base, "DESCRIBE <s4>"),
+        "SparkGraph.add": SparkGraph(base).add(("x", "p:k", "y")).df,
+        "bound + path": sparql(base, "SELECT ?b WHERE { <s15> <p:k>+ ?b }"),
+    }
+    for what, df in cases.items():
+        df.collect()
+        plan = _plan(df)
+        assert "LocalTableScan" in plan, (what, plan)
+        assert "ExistingRDD" not in plan, (what, plan)

@@ -3289,3 +3289,141 @@ def test_update_quad_templates(spark):
     with pytest.raises(SparqlError, match="quad frame"):
         update(trip, 'INSERT { GRAPH <g> { ?s <p:x> "1" } } '
                      "WHERE { ?s <p:v> ?o }")
+
+
+# ------------------------------------------------------------------ #
+# property paths with a constant endpoint: the bound-start walk
+# ------------------------------------------------------------------ #
+
+def _walk_graph(seed: int) -> list[tuple[str, str, str, str]]:
+    """A seeded random quad set over IRIs ``n0..n9`` and blank nodes
+    ``_:b0.._:b2``: ``p:a``/``p:b`` edges with cycles, self-loops and
+    literal objects, spread over the named graphs ``g1``/``g2``."""
+    import random
+
+    rng = random.Random(seed)
+    nodes = [f"n{i}" for i in range(10)] + [f"_:b{i}" for i in range(3)]
+    rows = {("n0", "p:a", "n0", "g1"),            # a self-loop
+            ("n1", "p:a", "n2", "g1"), ("n2", "p:a", "n1", "g1"),
+            ("n2", "p:a", "L0", "g1")}              # a literal object
+    while len(rows) < 30:
+        o = (f"L{rng.randrange(3)}" if rng.random() < 0.15
+             else rng.choice(nodes))
+        rows.add((rng.choice(nodes), rng.choice(("p:a", "p:b")), o,
+                  rng.choice(("g1", "g2"))))
+    return sorted(rows)
+
+
+def _closure_pairs(kg, path: str) -> set[tuple[str, str]]:
+    """Every pair the free-end form of ``path`` relates — the doubling
+    closure, which no constant endpoint steers."""
+    return set(_rows(sparql(kg, f"SELECT ?x ?y WHERE {{ ?x {path} ?y }}")))
+
+
+def _cached(spark, path, rows, cols):
+    """``rows`` as a cached parquet-backed frame: its scans run in the
+    JVM, as a materialized graph table's do."""
+    spark.createDataFrame(rows, cols).write.parquet(str(path))
+    df = spark.read.parquet(str(path)).cache()
+    df.count()
+    return df
+
+
+def test_path_walk_matches_filtered_closure(spark, tmp_path):
+    """A ``+``/``*`` path with a constant subject or object walks from
+    the constant; its answers equal the free-end closure filtered to
+    that constant, on seeded graphs with cycles, self-loops, literal
+    objects and blank nodes — for single predicates, a sequence under
+    ``+``, and a constant start inside GRAPH <g>.  Path answers are
+    distinct, so the walk's rows compare as a sorted list."""
+    from pyrdfa3_spark.operators import graphops as G
+
+    for seed in (1, 2):
+        quads = _walk_graph(seed)
+        qs = _cached(spark, tmp_path / f"q{seed}", quads,
+                     ["subj", "pred", "obj", "graph"])
+        kg = qs.drop("graph")
+        # n0: on a self-loop; n1: on a cycle; n99: in no triple
+        consts = ["n0", "n1", "n99"]
+        for path in ("<p:a>+", "<p:a>*", "(<p:a>/<p:b>)+"):
+            pairs = _closure_pairs(kg, path)
+            for c in consts:
+                got = sorted(_rows(sparql(
+                    kg, f"SELECT ?y WHERE {{ <{c}> {path} ?y }}")))
+                assert got == sorted((y,) for x, y in pairs if x == c), \
+                    (seed, path, c)
+                got = sorted(_rows(sparql(
+                    kg, f"SELECT ?x WHERE {{ ?x {path} <{c}> }}")))
+                assert got == sorted((x,) for x, y in pairs if y == c), \
+                    (seed, path, c)
+            # a literal as the constant object
+            got = sorted(_rows(sparql(
+                kg, f'SELECT ?x WHERE {{ ?x {path} "L0" }}')))
+            assert got == sorted((x,) for x, y in pairs if y == "L0"), \
+                (seed, path)
+        # both ends constant: a ground pattern binds no variable, so
+        # this case runs the operator the front end calls (walking
+        # from the subject; the matcher then filters the object)
+        pairs = _closure_pairs(kg, "<p:a>+")
+        for s in consts:
+            reached = [r.obj for r in G.path_walk(
+                kg, "p:a", s, "\x00path1").collect()]
+            assert len(reached) == len(set(reached)), (seed, s)
+            for o in consts + ["L0"]:
+                assert (o in reached) == ((s, o) in pairs), (seed, s, o)
+        # a constant start inside GRAPH <g1>: only g1's edges count
+        g1 = qs.filter("graph = 'g1'").drop("graph")
+        for path in ("<p:a>+", "<p:a>*"):
+            pairs = _closure_pairs(g1, path)
+            for c in consts:
+                got = sorted(_rows(sparql(
+                    qs, f"SELECT ?y WHERE {{ GRAPH <g1> "
+                        f"{{ <{c}> {path} ?y }} }}")))
+                assert got == sorted((y,) for x, y in pairs if x == c), \
+                    (seed, path, c)
+        qs.unpersist()
+
+
+def test_path_walk_deep_chain_falls_back(spark, tmp_path):
+    """A constant start on a chain deeper than the walk's 20 rounds
+    falls back to the doubling closure filtered to the start and
+    still answers every hop."""
+    n = 60
+    t = _cached(spark, tmp_path / "chain",
+                [(f"n{i}", "p:next", f"n{i+1}") for i in range(n - 1)],
+                ["subj", "pred", "obj"])
+    out = _rows(sparql(t, "SELECT ?o WHERE { <n0> p:next+ ?o }"))
+    assert sorted(out) == sorted((f"n{i}",) for i in range(1, n))
+    back = _rows(sparql(t, f"SELECT ?s WHERE {{ ?s p:next* <n{n-1}> }}"))
+    assert len(back) == n
+    t.unpersist()
+
+
+def test_path_walk_runs_one_job_per_hop(spark, tmp_path):
+    """A bound ``+`` runs one job per hop of the walk plus one for the
+    answer — at most (eccentricity of the seed + 2) jobs, where the
+    whole-predicate closure runs several per doubling round."""
+    edges = [("s", "n1"), ("n1", "n2"), ("n2", "n3"), ("n3", "n1"),
+             ("n2", "n4"), ("x", "y"), ("y", "x")]
+    kg = _cached(spark, tmp_path / "kg",
+                 [(a, "p:k", b) for a, b in edges] + [("s", "p:name", "S")],
+                 ["subj", "pred", "obj"])
+    # hops from s to its farthest reachable node (here 3, to n4)
+    dist, layer, d = {}, {"s"}, 0
+    while layer:
+        d += 1
+        layer = {b for a, b in edges if a in layer} - set(dist)
+        dist.update({b: d for b in layer})
+    ecc = max(dist.values())
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "path-walk-jobs"
+    sc.setJobGroup(group, "bound path job count")
+    try:
+        out = _rows(sparql(kg, "SELECT ?b WHERE { <s> p:k+ ?b }"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(out) == [("n1",), ("n2",), ("n3",), ("n4",)]
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) <= ecc + 2, (len(jobs), ecc)
+    kg.unpersist()

@@ -193,3 +193,38 @@ def test_ask_runs_one_job_without_shuffle(spark, stores):
         assert len(jobs) == 1, f"{what}: {len(jobs)} jobs"
         stages = tracker.getJobInfo(jobs[0]).stageIds
         assert len(stages) == 1, f"{what}: a shuffle ({len(stages)} stages)"
+
+
+def test_facade_text_ask_skips_set_dedup(spark, stores):
+    """``SparkGraph.query`` and ``SparkDataset.query`` answer text ASK
+    over the frame as given: existence reads the same over the bag as
+    over the set, so a frame with duplicate rows gives the same answer
+    in one job with one stage, without the set dedup's shuffle."""
+    from pyrdfa3_spark.graph import SparkDataset, SparkGraph
+
+    df, _con = stores
+    bag = df.unionByName(df).coalesce(1).cache()
+    bag.count()
+    quads = bag.selectExpr("*", "CAST(NULL AS STRING) AS graph").cache()
+    quads.count()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for i, (s, want) in enumerate(((SUBJECTS[1], True),
+                                   ("http://absent.example/x", False))):
+        text = f"ASK {{ <{s}> ?p ?o }}"
+        for what, facade in (("SparkGraph", SparkGraph(bag)),
+                             ("SparkDataset", SparkDataset(quads))):
+            group = f"facade-ask-{what}-{i}"
+            sc.setJobGroup(group, "facade ASK job count")
+            try:
+                got = facade.query(text).collect()[0]["result"]
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert got is want, (what, s)
+            jobs = tracker.getJobIdsForGroup(group)
+            assert len(jobs) == 1, f"{what}: {len(jobs)} jobs"
+            stages = tracker.getJobInfo(jobs[0]).stageIds
+            assert len(stages) == 1, \
+                f"{what}: a shuffle ({len(stages)} stages)"
+    quads.unpersist()
+    bag.unpersist()
