@@ -471,8 +471,11 @@ class SparkGraph:
 
     def _query_frame(self, q: dict) -> DataFrame:
         """The frame a parsed text query runs over: the set, except
-        for ASK (existence reads the same over the bag)."""
-        return self.df if q["form"] == "ask" else self._set_frame()
+        for an ASK that reads the same over the bag, which skips the
+        set dedup shuffle."""
+        from pyrdfa3_spark.operators.sparql import ask_reads_bag
+
+        return self.df if ask_reads_bag(q) else self._set_frame()
 
     def ask(self, patterns, filters=None) -> bool:
         # existence reads the same over the bag as over the set, so

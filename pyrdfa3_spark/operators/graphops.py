@@ -9,7 +9,6 @@ noted).
 
 from __future__ import annotations
 
-import copy
 import functools
 import re
 
@@ -46,25 +45,26 @@ def _sql_ident(name: str) -> str:
 
 @functools.lru_cache(maxsize=64)
 def _ddl_schema(ddl: str) -> StructType:
-    return StructType.fromDDL(ddl)  # a JVM parse: three py4j calls
+    # a JVM parse of three py4j calls, ~2.4 ms of the ~14 ms a 1-row
+    # local_frame costs; the frames built from one DDL share the
+    # StructType, which nothing alters
+    return StructType.fromDDL(ddl)
 
 
-def local_frame(spark, rows, schema) -> DataFrame:
+def local_frame(spark, rows, ddl: str) -> DataFrame:
     """A frame of driver-side rows: the one builder of every inline
     frame the operators and the graph facade make from literals
     (VALUES binding tables, DATA deltas, DESCRIBE node lists, BFS
-    sources, walked path edges, facade rows).  The rows reach the JVM as one Arrow
-    table, so the frame plans as a ``LocalTableScan`` and scanning it
-    starts no Python worker; ``createDataFrame(<list>)`` plans an
-    ``ExistingRDD`` scan whose every task runs in one.  Build cost is
-    linear in the row count.  ``schema`` is a DDL string
-    (``"subj string, pred string"``) or a ``StructType``."""
+    sources, walked path edges, facade rows).  The rows reach the JVM
+    as one Arrow table, so the frame plans as a ``LocalTableScan`` and
+    scanning it starts no Python worker; ``createDataFrame(<list>)``
+    plans an ``ExistingRDD`` scan whose every task runs in one.  Build
+    cost is linear in the row count.  ``ddl`` is the schema as a DDL
+    string (``"subj string, pred string"``)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
-    # a copy: the frame keeps its schema object, which callers may alter
-    st = (copy.deepcopy(_ddl_schema(schema)) if isinstance(schema, str)
-          else schema)
+    st = _ddl_schema(ddl)
     width = len(st.fields)
     for r in rows:
         if len(r) != width:
@@ -1423,9 +1423,18 @@ def path_zero_or_more(triples: DataFrame, pred: str,
     return plus.unionByName(zero).dropDuplicates()
 
 
+#: :func:`path_walk`'s budgets: past ``_WALK_ROUNDS`` rounds (the
+#: closure's own default round budget), or once it has reached more
+#: than ``_WALK_MAX_NODES`` nodes, the walk hands over to the doubling
+#: closure filtered to its start.  A round's ``IN`` list of 1,000 keys
+#: costs ~90 ms, of 10,000 keys ~400 ms (local[2])
+_WALK_ROUNDS = 20
+_WALK_MAX_NODES = 1_000
+
+
 def path_walk(triples: DataFrame, pred: str, start: str, out_pred: str,
-              reverse: bool = False, zero_length: bool = False,
-              max_iterations: int = 20) -> DataFrame:
+              reverse: bool = False, zero_length: bool = False
+              ) -> DataFrame:
     """SPARQL ``<start> pred+ ?x`` (with ``reverse``: ``?x pred+
     <start>``) walked from the constant end — the magic-sets rewrite
     (Bancilhon et al., PODS 1986) of :func:`path_closure` filtered to
@@ -1446,24 +1455,27 @@ def path_walk(triples: DataFrame, pred: str, start: str, out_pred: str,
     seed whose farthest reachable node is ``e`` hops away takes
     ``e + 1`` rounds.  (A broadcast join against a frontier frame
     would cost a second job per round, the broadcast's own.)  The
-    reached set is held on the driver: its size is the answer's size,
-    the same posture as :func:`describe`.  When the frontier still
-    grows after ``max_iterations`` rounds, the walk falls back to the
-    doubling closure filtered to ``start``, so deep chains keep
-    working."""
+    reached set is held on the driver, so the walk is for answers of
+    at most ``_WALK_MAX_NODES`` nodes, the posture of
+    :func:`describe`: past that many, or when the frontier still grows
+    after ``_WALK_ROUNDS`` rounds, the walk falls back to the doubling
+    closure filtered to ``start``, so wide fan-out and deep chains
+    keep working.  The round that crosses the node budget has
+    already collected one hop's fan-out of at most ``_WALK_MAX_NODES``
+    frontier nodes."""
     src, dst = ("obj", "subj") if reverse else ("subj", "obj")
     edges = triples.filter(f"pred = {sql_str(pred)}")
     reached: set[str] = set()
     frontier = {start}
-    for _ in range(max_iterations):
+    for _ in range(_WALK_ROUNDS):
         keys = ", ".join(sql_str(n) for n in sorted(frontier))
         nxt = {r[0] for r in edges.filter(f"{src} IN ({keys})")
                .selectExpr(dst).collect()}
         frontier = nxt - reached - {None}
-        if not frontier:
-            break
         reached |= frontier
-    else:
+        if not frontier or len(reached) > _WALK_MAX_NODES:
+            break
+    if frontier:
         whole = (path_zero_or_more if zero_length else path_closure)(
             triples, pred, out_pred=out_pred, strategy="doubling")
         return whole.filter(f"{src} = {sql_str(start)}")

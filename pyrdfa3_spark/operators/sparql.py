@@ -1700,22 +1700,41 @@ def _attach_shape(g: dict | None, shape_vars) -> None:
     if g is None or not shape_vars:
         return
     g["_shape"] = shape_vars
-    for _giri, sub in g.get("graph_scoped") or ():
+    for sub in _child_groups(g):
         _attach_shape(sub, shape_vars)
-    for chain in g["unions"]:
-        for branch in chain:
-            _attach_shape(branch, shape_vars)
-    for sq in g["subqueries"]:
-        _attach_shape(sq["where"], shape_vars)
-    for o in g["optionals"]:
+
+
+def _child_groups(g: dict):
+    """The groups nested directly in ``g``: GRAPH <iri> groups, UNION
+    branches, subquery WHERE groups, OPTIONAL groups and group-shaped
+    EXISTS / MINUS bodies."""
+    for _giri, sub in g.get("graph_scoped") or ():
+        yield sub
+    for chain in g.get("unions") or ():
+        yield from chain
+    for sq in g.get("subqueries") or ():
+        yield sq["where"]
+    for o in g.get("optionals") or ():
         if isinstance(o, dict) and "group" in o:
-            _attach_shape(o["group"], shape_vars)
-    for _, body in g["exists"]:
+            yield o["group"]
+    for _, body in g.get("exists") or ():
         if isinstance(body, dict):
-            _attach_shape(body, shape_vars)
-    for body in g["minus"]:
+            yield body
+    for body in g.get("minus") or ():
         if isinstance(body, dict):
-            _attach_shape(body, shape_vars)
+            yield body
+
+
+def ask_reads_bag(q: dict) -> bool:
+    """An ASK with no subquery at any depth answers the same over a
+    frame with duplicate rows as over its set: every other operator
+    keeps or drops a solution by existence alone, while a subquery's
+    aggregates and slices (COUNT, LIMIT, OFFSET) count duplicates."""
+    def has_subquery(g: dict) -> bool:
+        return bool(g.get("subqueries")) or any(
+            has_subquery(sub) for sub in _child_groups(g))
+
+    return q["form"] == "ask" and not has_subquery(q["where"])
 
 
 def _tagged(term) -> bool:
@@ -1733,22 +1752,8 @@ def _group_has_graphs(g: dict) -> bool:
     the graph column, so a nested GRAPH would otherwise fail with a
     misleading 'needs a quad frame' diagnosis on a genuine quad
     store)."""
-    if g.get("graphs") or g.get("graph_scoped"):
-        return True
-    return (any(_group_has_graphs(sq["where"])
-                for sq in g.get("subqueries") or ())
-            or any(_group_has_graphs(b)
-                   for chain in g.get("unions") or ()
-                   for b in chain)
-            or any(_group_has_graphs(o["group"])
-                   for o in g.get("optionals") or ()
-                   if isinstance(o, dict) and "group" in o)
-            or any(_group_has_graphs(body)
-                   for _, body in g.get("exists") or ()
-                   if isinstance(body, dict))
-            or any(_group_has_graphs(body)
-                   for body in g.get("minus") or ()
-                   if isinstance(body, dict)))
+    return bool(g.get("graphs") or g.get("graph_scoped")) or any(
+        _group_has_graphs(sub) for sub in _child_groups(g))
 
 
 def _group_has_tagged(g: dict) -> bool:
@@ -1837,9 +1842,9 @@ def _expand_paths(triples: DataFrame, groups: list[dict],
             # log2-depth rounds (2^20-deep graphs inside the default
             # iteration budget) are the safe default for
             # unknown-depth data (the walk falls back to it, filtered
-            # to its constant, past 20 hops); operator-level callers
-            # who know their graph is shallow keep semi-naive's
-            # smaller joins
+            # to its constant, past 20 hops or 1,000 reached nodes);
+            # operator-level callers who know their graph is shallow
+            # keep semi-naive's smaller joins
             if start is not None and kind in ("plus", "star"):
                 edges = G.path_walk(work[0], inner, start[0], name,
                                     reverse=start[1],

@@ -3399,6 +3399,34 @@ def test_path_walk_deep_chain_falls_back(spark, tmp_path):
     t.unpersist()
 
 
+def test_path_walk_wide_fan_out_falls_back(spark, tmp_path, monkeypatch):
+    """A constant start that reaches more nodes than the walk's node
+    budget falls back to the closure filtered to the start, walking
+    forward or backward, and still answers every node; a start that
+    reaches fewer stays a walk."""
+    from pyrdfa3_spark.operators import graphops as G
+
+    monkeypatch.setattr(G, "_WALK_MAX_NODES", 5)
+    closures = []
+    closure = G.path_closure
+    monkeypatch.setattr(G, "path_closure", lambda *a, **k: (
+        closures.append(a[1]), closure(*a, **k))[1])
+    fan = [f"n{i}" for i in range(10)]
+    t = _cached(spark, tmp_path / "fan",
+                [("hub", "p:k", n) for n in fan]
+                + [(n, "p:k", "sink") for n in fan],
+                ["subj", "pred", "obj"])
+    out = _rows(sparql(t, "SELECT ?b WHERE { <hub> p:k+ ?b }"))
+    assert sorted(out) == sorted((n,) for n in fan + ["sink"])
+    back = _rows(sparql(t, "SELECT ?a WHERE { ?a p:k* <sink> }"))
+    assert sorted(back) == sorted((n,) for n in fan + ["hub", "sink"])
+    assert closures == ["p:k", "p:k"]
+    assert _rows(sparql(t, "SELECT ?b WHERE { <n0> p:k+ ?b }")) \
+        == [("sink",)]
+    assert closures == ["p:k", "p:k"]
+    t.unpersist()
+
+
 def test_path_walk_runs_one_job_per_hop(spark, tmp_path):
     """A bound ``+`` runs one job per hop of the walk plus one for the
     answer — at most (eccentricity of the seed + 2) jobs, where the

@@ -228,3 +228,36 @@ def test_facade_text_ask_skips_set_dedup(spark, stores):
                 f"{what}: a shuffle ({len(stages)} stages)"
     quads.unpersist()
     bag.unpersist()
+
+
+def test_facade_ask_with_subquery_counts_the_set(spark, stores):
+    """An ASK whose group nests a subquery, at any depth, runs over the
+    set: the subquery's COUNT and OFFSET would count duplicate rows.
+    Each ASK here answers differently over the doubled frame."""
+    from pyrdfa3_spark.graph import SparkDataset, SparkGraph
+
+    df, con = stores
+    s = SUBJECTS[1]
+    n = con.execute("SELECT count(*) FROM kg WHERE subj = ?",
+                    [s]).fetchone()[0]
+    bag = df.unionByName(df).cache()
+    quads = bag.selectExpr("*", "CAST(NULL AS STRING) AS graph").cache()
+    count = (f"{{ SELECT (COUNT(*) AS ?n) WHERE {{ <{s}> ?p ?o }} }} "
+             f"FILTER(?n = {n})")
+    offset = (f"{{ SELECT ?o WHERE {{ <{s}> ?p ?o }} ORDER BY ?o "
+              f"OFFSET {n} }}")
+    cases = [
+        (f"ASK {{ {count} }}", True),
+        (f"ASK {{ {offset} }}", False),
+        # nested in a UNION branch and in an EXISTS body
+        (f"ASK {{ {{ {count} }} UNION {{ <urn:absent> ?p ?o }} }}", True),
+        (f"ASK {{ ?x ?y ?z FILTER EXISTS {{ {count} }} }}", True),
+    ]
+    for text, want in cases:
+        for what, facade in (("SparkGraph", SparkGraph(bag)),
+                             ("SparkDataset", SparkDataset(quads))):
+            got = facade.query(text).collect()[0]["result"]
+            assert got is want, (what, text)
+        assert sparql(bag, text).collect()[0]["result"] is not want, text
+    quads.unpersist()
+    bag.unpersist()
