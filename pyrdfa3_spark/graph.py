@@ -71,14 +71,9 @@ class SparkGraph:
         promised distinctness."""
         if self._distinct:
             return self.df
-        key = list(_PATTERN_COLS) + [
-            c for c in G.TRIPLE_KEY if c not in _PATTERN_COLS
-            and c in self.df.columns]
-        if "graph" in self.df.columns:
-            # a quad-carrying frame keeps per-graph rows distinct —
-            # rdflib's ConjunctiveGraph yields per-context duplicates
-            key.append("graph")
-        return self.df.dropDuplicates(key)
+        # a quad-carrying frame keeps per-graph rows distinct —
+        # rdflib's ConjunctiveGraph yields per-context duplicates
+        return self.df.dropDuplicates(G.term_key(self.df, quad=True))
 
     # -- construction ------------------------------------------------
 
@@ -171,10 +166,8 @@ class SparkGraph:
         frames distinctness includes the shape columns — rdflib counts
         ``"3"`` and ``"3"^^xsd:integer`` as two triples.  A Spark
         action."""
-        cols = list(_PATTERN_COLS) + [
-            c for c in G.TRIPLE_KEY if c not in _PATTERN_COLS
-            and c in self.df.columns]
-        return self.df.select(*cols).dropDuplicates().count()
+        return (self.df.select(*G.term_key(self.df))
+                .dropDuplicates().count())
 
     def iter_triples(self, limit: int = 10_000) -> Iterator[tuple]:
         """Explicitly bounded driver-side iteration — the honest stand-
@@ -538,7 +531,7 @@ class SparkGraph:
             # diverge on what counts as a term
             df = df.withColumn("obj_is_iri",
                                G._lexical_is_iri("obj"))
-        for c in ("obj_lang", "obj_datatype"):
+        for c in G.TERM_COLS[3:]:  # the shape columns still missing
             if c not in df.columns:
                 df = df.withColumn(c, F.lit(None).cast("string"))
         return df
@@ -593,10 +586,7 @@ class SparkDataset:
         constructor promised distinctness."""
         if self._distinct:
             return self.df
-        key = list(_QUAD_COLS) + [
-            c for c in G.TRIPLE_KEY if c not in _QUAD_COLS
-            and c in self.df.columns]
-        return self.df.dropDuplicates(key)
+        return self.df.dropDuplicates(G.term_key(self.df, quad=True))
 
     _query_frame = SparkGraph._query_frame
 
@@ -679,10 +669,8 @@ class SparkDataset:
         graphs counts twice, matching rdflib's per-context counting).
         On literal-shaped frames distinctness includes the shape
         columns, like :meth:`SparkGraph.__len__`.  A Spark action."""
-        cols = list(_QUAD_COLS) + [
-            c for c in G.TRIPLE_KEY if c not in _QUAD_COLS
-            and c in self.df.columns]
-        return self.df.select(*cols).dropDuplicates().count()
+        return (self.df.select(*G.term_key(self.df, quad=True))
+                .dropDuplicates().count())
 
     # -- mutation (functional) -------------------------------------------
 

@@ -21,8 +21,13 @@ from pyrdfa3_spark.functions.constants import (
     RDF_TYPE, RDFA_COPY, RDFA_PATTERN,
 )
 
-TRIPLE_KEY = ["subj", "pred", "obj", "obj_is_iri", "obj_lang",
-              "obj_datatype"]
+#: The columns that hold a stored triple's RDF terms: the lexical
+#: triple, then the object's literal shape.  rdflib's Graph is a set
+#: (SURVEY E16), so these columns, compared null-safely, are a row's
+#: identity as a statement; :func:`term_key` picks the ones a frame
+#: carries and :func:`term_join` joins on them.
+TERM_COLS = ("subj", "pred", "obj", "obj_is_iri", "obj_lang",
+             "obj_datatype")
 
 # reserved predicate namespace for materialized property-path edges
 # (the SPARQL front-end unions them into its working frame); variable
@@ -77,11 +82,61 @@ def local_frame(spark, rows, ddl: str) -> DataFrame:
     return spark.createDataFrame(table, st)
 
 
+def term_key(left: DataFrame, right: DataFrame | None = None,
+             quad: bool = False) -> list[str]:
+    """The set key of ``left`` (of ``left`` and ``right`` when both are
+    given): the :data:`TERM_COLS` every given frame carries.  That is
+    the triple key of the graph algebra and :func:`graph_diff`;
+    ``quad=True`` gives the quad key of SPARQL UPDATE and the graph
+    facades' set frames, which adds ``graph`` when every given frame
+    carries it."""
+    names = (TERM_COLS[:3] + ("graph",) + TERM_COLS[3:] if quad
+             else TERM_COLS)
+    have = set(left.columns)
+    if right is not None:
+        have &= set(right.columns)
+    return [c for c in names if c in have]
+
+
+def term_join(left: DataFrame, right: DataFrame, how: str,
+              key: list[str]) -> DataFrame:
+    """The rows of ``left`` that have (``how="left_semi"``) or lack
+    (``"left_anti"``) a ``right`` row equal on every ``key`` column,
+    NULL matching NULL: ``obj_lang``/``obj_datatype`` are NULL on
+    plain literals and IRIs, and a plain ``=`` would match none of
+    them.  The one null-safe semi/anti join; its condition is one SQL
+    expression (a Column per key costs driver->JVM round trips), and
+    ``<=>`` conjuncts are equi-keys, so the plan is a hash join that
+    AQE broadcasts when ``right`` is small (a broadcast hint on
+    ``right`` carries through).  ``right`` is not deduplicated: a
+    semi or anti join's answer does not depend on duplicates on its
+    build side, and a dedup would cost a shuffle.  Both sides are
+    aliased, so ``g - g`` (shared lineage) stays unambiguous."""
+    if how not in ("left_semi", "left_anti"):
+        raise ValueError(f"term_join how={how!r}")
+    cond = " AND ".join(f"__tj_l.{c} <=> __tj_r.{c}"
+                        for c in map(_sql_ident, key))
+    return left.alias("__tj_l").join(
+        right.select(*key).alias("__tj_r"), F.expr(cond), how)
+
+
+def keyless_exists(sols: DataFrame, grp: DataFrame,
+                   how: str) -> DataFrame:
+    """``sols`` whole when ``grp`` has a row (``how="left_semi"``) or
+    when it has none (``"left_anti"``), else empty: a limit-1 flag
+    joined on a constant key, a broadcast of at most one row.  The
+    existence test of an EXISTS that substitutes no variable and of a
+    ground triple pattern."""
+    flag = grp.limit(1).selectExpr("1 AS __ek")
+    return (sols.withColumn("__ek", F.lit(1))
+            .join(F.broadcast(flag), "__ek", how).drop("__ek"))
+
+
 def dedup_triples(triples: DataFrame, per_document: bool = True) -> DataFrame:
     """RDF set semantics (E16; rdflib Graph is a set).  Per-document by
     default — matching the reference's one-graph-per-source scoping —
     global when ``per_document=False``."""
-    cols = [c for c in TRIPLE_KEY if c in triples.columns]
+    cols = term_key(triples)
     if per_document:
         cols = ["conv_id", "turn_idx"] + cols
     return triples.dropDuplicates(cols)
@@ -141,36 +196,18 @@ def handle_prototypes(triples: DataFrame) -> DataFrame:
     return kept.unionByName(expanded)
 
 
-def _triple_key_join(triples: DataFrame, other: DataFrame,
-                     how: str) -> DataFrame:
-    """Semi/anti join on the shared triple-key columns with NULL-SAFE
-    equality — ``obj_lang``/``obj_datatype`` are NULL for plain
-    literals, and a plain ``=`` join would treat every such row as
-    unmatched (subtraction silently no-ops, intersection empties).
-
-    Both sides are aliased so the condition stays unambiguous even when
-    the two frames share lineage (``g - g`` is a legal self-join)."""
-    on = [c for c in TRIPLE_KEY if c in triples.columns
-          and c in other.columns]
-    left = triples.alias("__tkj_l")
-    right = other.select(on).dropDuplicates().alias("__tkj_r")
-    cond = None
-    for c in on:
-        eq = F.col(f"__tkj_l.{c}").eqNullSafe(F.col(f"__tkj_r.{c}"))
-        cond = eq if cond is None else cond & eq
-    return left.join(right, cond, how)
-
-
 def subtract_graph(triples: DataFrame, other: DataFrame) -> DataFrame:
     """Set difference on the triple key (G5; reference:
     pyRdfa/rdfs/process.py:300) — left_anti join, broadcastable."""
-    return _triple_key_join(triples, other, "left_anti")
+    return term_join(triples, other, "left_anti",
+                     term_key(triples, other))
 
 
 def intersect_graphs(triples: DataFrame, other: DataFrame) -> DataFrame:
     """Set intersection on the triple key — left_semi twin of
     :func:`subtract_graph`."""
-    return _triple_key_join(triples, other, "left_semi")
+    return term_join(triples, other, "left_semi",
+                     term_key(triples, other))
 
 
 def xor_graphs(triples: DataFrame, other: DataFrame) -> DataFrame:
@@ -180,8 +217,8 @@ def xor_graphs(triples: DataFrame, other: DataFrame) -> DataFrame:
     unioned; no extra dedup pass — each side is already key-distinct
     in a set-semantics graph, and the two sides are disjoint by
     construction."""
-    return union_graphs(_triple_key_join(triples, other, "left_anti"),
-                        _triple_key_join(other, triples, "left_anti"))
+    return union_graphs(subtract_graph(triples, other),
+                        subtract_graph(other, triples))
 
 
 def union_graphs(*graphs: DataFrame) -> DataFrame:
@@ -738,9 +775,7 @@ def leftjoin_filter(sols: DataFrame, sub: DataFrame,
                          how="inner", _left_ready=True)
     for e in filters or []:
         merged = merged.filter(e)
-    unmatched = sols.join(
-        merged.select("__ljid").dropDuplicates(), "__ljid",
-        "left_anti")
+    unmatched = sols.join(merged.select("__ljid"), "__ljid", "left_anti")
     return (merged.unionByName(unmatched, allowMissingColumns=True)
             .drop("__ljid"))
 
@@ -761,8 +796,7 @@ def compat_minus(sols: DataFrame, neg: DataFrame,
         return sols
     ln, rn = nullable(shared, left_certain, right_certain)
     if not ln and not rn:
-        return sols.join(neg.select(*shared).dropDuplicates(), shared,
-                         "left_anti")
+        return sols.join(neg.select(*shared), shared, "left_anti")
     if ln:
         sols = sols.localCheckpoint(eager=True)
     if rn:
@@ -774,8 +808,7 @@ def compat_minus(sols: DataFrame, neg: DataFrame,
             keys = [c for c in shared
                     if c not in lnull and c not in rnull]
             if keys:
-                part = part.join(rb.select(*keys).dropDuplicates(),
-                                 keys, "left_anti")
+                part = part.join(rb.select(*keys), keys, "left_anti")
         out = part if out is None else out.unionByName(part)
     return out
 
@@ -813,14 +846,8 @@ def compat_exists(sols: DataFrame, grp: DataFrame,
     out = None
     for lnull, lb in _null_mask_buckets(sols, ln):
         keys = [c for c in shared if c not in lnull]
-        if keys:
-            part = lb.join(grp.select(*keys).dropDuplicates(), keys,
-                           how)
-        else:
-            flag = grp.limit(1).select(F.lit(1).alias("_k"))
-            part = (lb.withColumn("_k", F.lit(1))
-                    .join(F.broadcast(flag), "_k", how)
-                    .drop("_k"))
+        part = (lb.join(grp.select(*keys), keys, how) if keys
+                else keyless_exists(lb, grp, how))
         out = part if out is None else out.unionByName(part)
     return out
 
@@ -961,14 +988,19 @@ def _match(frame, positions, patterns, optional, filters,
                     else:
                         conds.append("obj_lang IS NULL AND "
                                      f"obj_datatype = {sql_str(d)}")
-        if not cols:
-            raise ValueError(f"pattern {pat} binds no variables")
         df = frame.filter(" AND ".join(conds)) if conds else frame
-        return set(seen), df.selectExpr(*cols)
+        # a ground pattern binds nothing: its rows only say whether
+        # the triple exists
+        return set(seen), df.selectExpr(*cols) if cols else df
 
     compiled = [compile_one(p) for p in patterns]
-    bound, out = compiled[0]
-    rest = list(compiled[1:])
+    ground = [df for vs, df in compiled if not vs]
+    rest = [c for c in compiled if c[0]]
+    if rest:
+        bound, out = rest.pop(0)
+    else:
+        # only ground patterns: one empty solution when they all exist
+        bound, out = set(), ground.pop(0).limit(1).select()
     while rest:
         idx = next((i for i, (vs, _) in enumerate(rest) if vs & bound),
                    None)
@@ -981,6 +1013,8 @@ def _match(frame, positions, patterns, optional, filters,
         out = out.join(drop_dup_companions(df, out.columns),
                        sorted(vs & bound), "inner")
         bound |= vs
+    for df in ground:
+        out = keyless_exists(out, df, "left_semi")
     # required-pattern variables are certain (never NULL); variables a
     # previous OPTIONAL bound may be NULL, and a later OPTIONAL joining
     # on one needs §18.5 compatibility, not an equi-join
@@ -1142,7 +1176,8 @@ def construct(triples: DataFrame,
     """
     sols = bgp_match(triples, patterns, optional=optional,
                      filters=filters, shape_vars=shape_vars)
-    return construct_solutions(sols, template, obj_shapes=obj_shapes)
+    return construct_solutions(sols, template,
+                               obj_shapes=obj_shapes).dropDuplicates()
 
 
 def construct_solutions(sols: DataFrame,
@@ -1152,10 +1187,15 @@ def construct_solutions(sols: DataFrame,
     """The instantiation half of :func:`construct`: explode every
     ``template`` (s, p, o) per solution row (``?var`` positions
     substitute bindings, NULL-binding rows are skipped per the
-    incomplete-triple rule), with set semantics.  Exposed separately so
-    callers holding an already-solved frame (e.g. SPARQL UPDATE
-    instantiating both a DELETE and an INSERT template from ONE WHERE
-    match) don't re-run the pattern join per template.
+    incomplete-triple rule).  Exposed separately so callers holding an
+    already-solved frame (e.g. SPARQL UPDATE instantiating both a
+    DELETE and an INSERT template from ONE WHERE match) don't re-run
+    the pattern join per template.
+
+    The output is a bag: one row per solution and template entry.
+    Callers that need a set deduplicate it themselves (CONSTRUCT and
+    UPDATE's INSERT side); UPDATE's DELETE side hands it to an anti
+    join as it is, whose answer duplicates cannot change.
 
     ``graphs`` (one entry per template entry, SPARQL UPDATE's
     QuadPattern instantiation) additionally emits a ``graph`` column:
@@ -1226,16 +1266,14 @@ def construct_solutions(sols: DataFrame,
 
     rows = ", ".join(fields(i, s, p, o)
                      for i, (s, p, o) in enumerate(template))
-    out = (sols.selectExpr(f"explode(array({rows})) AS t")
-           .selectExpr("t.*")
-           .filter("subj IS NOT NULL AND pred IS NOT NULL "
-                   "AND obj IS NOT NULL"))
-    return out.dropDuplicates()
+    return (sols.selectExpr(f"explode(array({rows})) AS t")
+            .selectExpr("t.*")
+            .filter("subj IS NOT NULL AND pred IS NOT NULL "
+                    "AND obj IS NOT NULL"))
 
 
 def path_closure(triples: DataFrame, pred: str,
                  out_pred: str | None = None,
-                 max_iterations: int = 20,
                  strategy: str = "seminaive") -> DataFrame:
     """SPARQL property path ``pred+``: the transitive closure of one
     predicate's edges, rematerialized as triples under ``out_pred``
@@ -1252,8 +1290,7 @@ def path_closure(triples: DataFrame, pred: str,
     edges = (triples.filter(F.col("pred") == pred)
              .select(F.col("subj").alias("src"),
                      F.col("obj").alias("dst")))
-    closed = transitive_closure(edges, max_iterations=max_iterations,
-                                strategy=strategy)
+    closed = transitive_closure(edges, strategy=strategy)
     return closed.select(F.col("src").alias("subj"),
                          F.lit(out_pred or pred).alias("pred"),
                          F.col("dst").alias("obj"))
@@ -1265,8 +1302,7 @@ def obj_shape_cols(df: DataFrame) -> list[str]:
     term-shape builtins still see a path-bound object's shape; the
     closure forms don't (a multi-hop endpoint's shape is unknown by
     construction and reads as NULL)."""
-    return [c for c in ("obj_is_iri", "obj_lang", "obj_datatype")
-            if c in df.columns]
+    return [c for c in TERM_COLS[3:] if c in df.columns]
 
 
 def path_seq(triples: DataFrame, preds: list[str],
@@ -1408,15 +1444,13 @@ def path_zero_or_one(triples: DataFrame, pred: str,
 
 def path_zero_or_more(triples: DataFrame, pred: str,
                       out_pred: str | None = None,
-                      max_iterations: int = 20,
                       strategy: str = "seminaive") -> DataFrame:
     """SPARQL path ``p*``: :func:`path_closure` (``p+``) unioned with
     the zero-length (t, t) pairs over every graph term.  The closure
     only shuffles the predicate's edge slice; the zero pairs are a
     narrow distinct over the scan."""
     out = out_pred or pred
-    plus = path_closure(triples, pred, out_pred=out,
-                        max_iterations=max_iterations, strategy=strategy)
+    plus = path_closure(triples, pred, out_pred=out, strategy=strategy)
     zero = graph_terms(triples).select(
         F.col("node").alias("subj"), F.lit(out).alias("pred"),
         F.col("node").alias("obj"))
@@ -1443,11 +1477,10 @@ def path_walk(triples: DataFrame, pred: str, start: str, out_pred: str,
     Returns the same ``(subj, pred, obj)`` edges under ``out_pred`` as
     that filtered closure — ``(start, out_pred, x)`` for every ``x``
     one or more hops away (reversed: ``(x, out_pred, start)``) — as a
-    :func:`local_frame`.  With ``zero_length`` it is ``pred*``: the
-    zero-length pair ``(start, start)`` comes from the lazy
-    :func:`graph_terms` slice filtered to ``start``, exactly as
-    :func:`path_zero_or_more` gives it (so only when ``start`` is a
-    graph term).
+    :func:`local_frame`.  With ``zero_length`` it is ``pred*``, whose
+    answer also holds the zero-length pair ``(start, start)``, whether
+    or not ``start`` is a graph term (SPARQL 1.1 §18.4, ALP with a
+    bound start).
 
     Scale shape: each round filters the predicate's edge slice to the
     frontier — an ``IN`` list, which the scan evaluates as a hash set
@@ -1475,24 +1508,22 @@ def path_walk(triples: DataFrame, pred: str, start: str, out_pred: str,
         reached |= frontier
         if not frontier or len(reached) > _WALK_MAX_NODES:
             break
+    ddl = "subj string, pred string, obj string"
     if frontier:
-        whole = (path_zero_or_more if zero_length else path_closure)(
-            triples, pred, out_pred=out_pred, strategy="doubling")
-        return whole.filter(f"{src} = {sql_str(start)}")
+        whole = path_closure(triples, pred, out_pred=out_pred,
+                             strategy="doubling").filter(
+            f"{src} = {sql_str(start)}")
+        if not zero_length:
+            return whole
+        return whole.filter(f"{dst} <> {sql_str(start)}").unionByName(
+            local_frame(triples.sparkSession,
+                        [(start, out_pred, start)], ddl))
     if zero_length:
-        # the zero-length slice supplies (start, start)
-        reached.discard(start)
-    out = local_frame(
+        reached.add(start)
+    return local_frame(
         triples.sparkSession,
         [(n, out_pred, start) if reverse else (start, out_pred, n)
-         for n in sorted(reached)],
-        "subj string, pred string, obj string")
-    if not zero_length:
-        return out
-    zero = (graph_terms(triples).filter(f"node = {sql_str(start)}")
-            .selectExpr("node AS subj", f"{sql_str(out_pred)} AS pred",
-                        "node AS obj"))
-    return out.unionByName(zero)
+         for n in sorted(reached)], ddl)
 
 
 def bgp_values(triples: DataFrame,
@@ -2100,10 +2131,10 @@ def apply_diff(snapshot: DataFrame, diff: DataFrame) -> DataFrame:
     a plain ``=`` key would never match those rows and removals would
     silently no-op.
     """
-    on = [c for c in TRIPLE_KEY if c in snapshot.columns]
-    removed = diff.filter(F.col("op") == "removed").select(on)
+    on = term_key(snapshot)
+    removed = diff.filter(F.col("op") == "removed")
     added = diff.filter(F.col("op") == "added").select(on)
-    return (_triple_key_join(snapshot.select(on), removed, "left_anti")
+    return (term_join(snapshot.select(on), removed, "left_anti", on)
             .unionByName(added)
             .dropDuplicates())
 
@@ -2123,10 +2154,10 @@ def graph_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     IRIs) — with a plain ``=`` key every such triple would come back as
     both added AND removed when diffing identical graphs.
     """
-    on = [c for c in TRIPLE_KEY if c in old.columns and c in new.columns]
-    added = (_triple_key_join(new.select(on), old, "left_anti")
+    on = term_key(old, new)
+    added = (term_join(new.select(on), old, "left_anti", on)
              .select(F.lit("added").alias("op"), *on))
-    removed = (_triple_key_join(old.select(on), new, "left_anti")
+    removed = (term_join(old.select(on), new, "left_anti", on)
                .select(F.lit("removed").alias("op"), *on))
     return added.unionByName(removed)
 

@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyrdfa3_spark.functions.constants import RDF_TYPE
-from pyrdfa3_spark.operators.graphops import local_frame
+from pyrdfa3_spark.operators.graphops import local_frame, obj_shape_cols
 
 #: value "looks like an IRI" when the triple store carries no
 #: ``obj_is_iri`` column: an RFC 3986 scheme prefix.  The extraction
@@ -97,9 +97,7 @@ def shacl_validate(triples: DataFrame, shapes: list[dict]) -> DataFrame:
                  .select(F.col("subj").alias("focus")).distinct())
         for prop in shape.get("properties", []):
             path = prop["path"]
-            shape_cols = [c for c in ("obj_is_iri", "obj_lang",
-                                      "obj_datatype")
-                          if c in triples.columns]
+            shape_cols = obj_shape_cols(triples)
             # dedup on the full RDF-term identity: two rows with equal
             # lexical form but different lang/datatype/kind are DISTINCT
             # terms ("hello"@en vs "hello"@fr; "5"^^xsd:integer vs
@@ -111,7 +109,7 @@ def shacl_validate(triples: DataFrame, shapes: list[dict]) -> DataFrame:
             vals = (triples.filter(F.col("pred") == path)
                     .select(F.col("subj").alias("focus"), "obj",
                             *shape_cols)
-                    .dropDuplicates(["focus", "obj", *shape_cols])
+                    .dropDuplicates()
                     .join(focus, "focus"))
 
             def report(df, constraint, value_col="obj"):

@@ -19,7 +19,8 @@ misparses — outside it):
   COUNT(*) / COUNT(DISTINCT) / SUM / AVG / MIN / MAX / SAMPLE /
   GROUP_CONCAT(?v; SEPARATOR="..."), ``GROUP BY`` / ``HAVING``,
   ``ORDER BY [ASC|DESC]`` / ``LIMIT`` / ``OFFSET``.
-* WHERE groups: triple blocks with ``;`` / ``,`` lists, ``OPTIONAL``,
+* WHERE groups: triple blocks with ``;`` / ``,`` lists (a fully
+  constant pattern is an existence test), ``OPTIONAL``,
   ``FILTER (expr)``, ``FILTER [NOT] EXISTS {..}``, ``MINUS {..}``,
   ``VALUES`` (incl. UNDEF), ``BIND (expr AS ?v)``, a top-level
   ``{..} UNION {..}`` chain, and ``{ SELECT ... }`` subqueries
@@ -2125,9 +2126,9 @@ def _exists_inject(triples: DataFrame, sols: DataFrame, body: dict,
     companions (subquery-projected binding, NULL-injected filter-only
     column) gets NULL companions = unknown shape, so the builtin
     returns NULL and the row filters rather than misclassifies.  The
-    bucket then semi/anti-joins against the distinct witness
-    projection of the injected solve: the substituted bindings plus
-    the seed's companions, matched null-safely, so outer terms that
+    bucket then semi/anti-joins (``graphops.term_join``) against the
+    injected solve on the substituted bindings plus the seed's
+    companions, matched null-safely, so outer terms that
     differ only in shape ("x"@en / "x"@es) keep separate answers.
 
     Scale shape: the seed is a distinct-bindings dim (capped at
@@ -2180,14 +2181,8 @@ def _exists_inject(triples: DataFrame, sols: DataFrame, body: dict,
                 # terms sharing one lexical form but not one shape
                 # ("hello"@en / "hello"@es) are distinct bindings,
                 # and a NULL companion (no tag) matches null-safely
-                keys = bound + comp
-                wit = (_solve_group(triples, body2)
-                       .select(*[F.col(c).alias(f"__wit{i}")
-                                 for i, c in enumerate(keys)])
-                       .dropDuplicates())
-                part = bucket.join(
-                    wit, [F.col(c).eqNullSafe(F.col(f"__wit{i}"))
-                          for i, c in enumerate(keys)], how)
+                part = G.term_join(bucket, _solve_group(triples, body2),
+                                   how, bound + comp)
         else:
             # nothing substitutes in this bucket: free pattern
             # variables match freely (plain solve); filter-only
@@ -2205,10 +2200,7 @@ def _exists_inject(triples: DataFrame, sols: DataFrame, body: dict,
                 bsols = _solve_group(triples, body2)
             else:
                 bsols = _solve_group(triples, body)
-            flag = bsols.limit(1).select(F.lit(1).alias("_k"))
-            part = (bucket.withColumn("_k", F.lit(1))
-                    .join(F.broadcast(flag), "_k", how)
-                    .drop("_k"))
+            part = G.keyless_exists(bucket, bsols, how)
         out = part if out is None else out.unionByName(part)
     return out
 
@@ -2277,6 +2269,12 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
         if sols is None:
             return other
         if not G.shared_vars(sols, other):
+            # a block of ground patterns binds nothing: it only tests
+            # whether its triples exist
+            if not other.columns:
+                return G.keyless_exists(sols, other, "left_semi")
+            if not sols.columns:
+                return G.keyless_exists(other, sols, "left_semi")
             if init is not None:
                 # injected EXISTS solve: a body operand disconnected
                 # from the seed is a REQUIRED product under §8.1.1
@@ -2577,8 +2575,7 @@ def _apply_dataset(triples: DataFrame, q: dict) -> DataFrame:
         # instead of being standardized apart — lake stores carry
         # skolemized or doc-scoped labels (see skolemize/rdfdocs), so
         # cross-graph label collisions are already impossible upstream.
-        default = default.dropDuplicates(
-            _TRIPLE_KEY + G.obj_shape_cols(triples))
+        default = default.dropDuplicates(G.term_key(default))
     return default.unionByName(triples.filter(gcol.isin(named)))
 
 
@@ -2775,7 +2772,8 @@ def execute(triples: DataFrame, q: dict, *, union_default: bool = True,
                       + (", obj_is_iri boolean, obj_lang string, "
                          "obj_datatype string" if shaped else ""))
             return G.local_frame(triples.sparkSession, [], schema)
-        return G.construct_solutions(sols, template, obj_shapes=shapes)
+        return G.construct_solutions(sols, template,
+                                     obj_shapes=shapes).dropDuplicates()
 
     return _solve_select(triples, q)
 
@@ -2942,9 +2940,6 @@ def _solve_select(triples: DataFrame, q: dict) -> DataFrame:
 # ------------------------------------------------------------------ #
 # SPARQL 1.1 UPDATE
 # ------------------------------------------------------------------ #
-
-_TRIPLE_KEY = ["subj", "pred", "obj"]
-
 
 def _unwrap_pred(path, what: str) -> str:
     """A pattern's predicate as a plain string — rejects property-path
@@ -3288,24 +3283,31 @@ def update(triples: DataFrame, text: str) -> DataFrame:
     frame a quad store: NULL is the default graph, GRAPH blocks in
     DATA, ``WITH``, and the management verbs address named graphs.
 
-    Scale shapes, per operation kind:
+    Every set operation is ``graphops.term_join`` on the quad key
+    (``graphops.term_key(..., quad=True)``).  Scale shapes, per
+    operation kind:
 
     * ``INSERT DATA`` / ``DELETE DATA``: the ground delta is a
       ``graphops.local_frame``, a ``LocalTableScan`` whose scan starts
-      no Python worker, so the set semantics cost is ONE broadcast
-      anti-join over the big side — no shuffle of the graph at all
-      (plan-guarded in tests/test_plans.py).
+      no Python worker, and the graph is never shuffled (plan-guarded
+      in tests/test_plans.py).  DELETE DATA is one anti join, which
+      the planner broadcasts by the delta's size.  INSERT DATA finds
+      the keys the graph already holds with a broadcast semi join,
+      deduplicates them (its one exchange, over the matched rows
+      only) and anti-joins the delta against them.
     * ``CLEAR`` / ``DROP``: a filter — no join, no shuffle.
     * ``ADD/COPY/MOVE``: filter + graph-relabel; only ADD joins, and
       both join inputs are single-graph slices (the graph predicate
       prunes the scan), never the whole store.
-    * ``DELETE .. WHERE``: derived deletions apply as a left_anti join
-      on the triple key (AQE picks broadcast when the delta is small);
-      ``WITH`` scopes the match to one graph's slice scan-side.
-    * ``INSERT .. WHERE``: derived insertions union in, then one
-      distinct on the triple key restores the set invariant — the only
-      full-graph shuffle in the grammar, and exactly the compaction
-      shuffle an append+merge-on-read lake pays instead.
+    * ``DELETE .. WHERE``: the deletion set, one row per solution and
+      template entry, goes to one anti join as it is (AQE broadcasts
+      it when small); duplicates in it cannot change the answer, so
+      it is not deduplicated.  ``WITH`` scopes the match to one
+      graph's slice scan-side.
+    * ``INSERT .. WHERE``: the derived rows are deduplicated, and
+      only those the graph lacks (an anti join against the graph,
+      the grammar's one corpus shuffle) union in; rows already
+      present pass through untouched.
 
     Column contract (rdflib preserves term identity; the lake twin):
     every non-key column — the literal-shape triple
@@ -3320,7 +3322,7 @@ def update(triples: DataFrame, text: str) -> DataFrame:
     matcher's hidden companions).  Provenance columns are NULL on
     inserted rows.
     """
-    for col in _TRIPLE_KEY:
+    for col in G.TERM_COLS[:3]:
         if col not in triples.columns:
             raise SparqlError(f"update needs a triple frame with "
                               f"'{col}' (got {triples.columns})")
@@ -3329,11 +3331,6 @@ def update(triples: DataFrame, text: str) -> DataFrame:
     for op in parse_update(text):
         df = _apply_update(df, op, quads)
     return df
-
-
-# literal-shape columns: part of a term's identity when present, so
-# they join into every UPDATE set-operation key
-_SHAPE_COLS = ("obj_is_iri", "obj_lang", "obj_datatype")
 
 
 def _in_graph(gcol, target):
@@ -3349,43 +3346,6 @@ def _not_in_graph(gcol, target):
     return gcol.isNull() | (gcol != target)
 
 
-def _term_key(df: DataFrame, delta: DataFrame) -> list[str]:
-    """The set-operation key: the lexical triple, plus the graph term
-    and the literal-shape columns when both sides carry them."""
-    return [c for c in (*_TRIPLE_KEY, "graph", *_SHAPE_COLS)
-            if c in df.columns and c in delta.columns]
-
-
-def _null_safe_on(left: str, right: str, key: list[str]):
-    """Join condition: every ``key`` column equal null-safely between
-    the frames aliased ``left`` and ``right`` — one SQL expression
-    rather than a Column per key (each costs driver->JVM round
-    trips)."""
-    from pyspark.sql import functions as F
-
-    return F.expr(" AND ".join(f"{left}.{c} <=> {right}.{c}"
-                               for c in key))
-
-
-def _quad_minus(df: DataFrame, delta: DataFrame,
-                broadcast_delta: bool = False) -> DataFrame:
-    """``df`` minus ``delta`` on the term key (lexical triple + graph
-    + literal shape where present), NULL cells matching themselves —
-    ``eqNullSafe`` equi-conditions keep the plan a (broadcastable)
-    hash join, no sentinel columns needed."""
-    from pyspark.sql import functions as F
-
-    key = _term_key(df, delta)
-    left = df.alias("_upd_l")
-    # no dropDuplicates on the right: anti-join semantics are immune to
-    # right-side duplicates, and the dedup would cost a shuffle
-    right = delta.select(*key).alias("_upd_r")
-    if broadcast_delta:
-        right = F.broadcast(right)
-    return left.join(right, _null_safe_on("_upd_l", "_upd_r", key),
-                     "left_anti")
-
-
 def _set_insert(df: DataFrame, delta: DataFrame) -> DataFrame:
     """Insert ``delta`` with RDF set semantics: re-adding an existing
     triple is a NO-OP (rdflib semantics) — existing rows pass through
@@ -3396,11 +3356,8 @@ def _set_insert(df: DataFrame, delta: DataFrame) -> DataFrame:
     anti-join the delta itself."""
     from pyspark.sql import functions as F
 
-    key = _term_key(df, delta)
-    matched = (df.alias("_ins_l")
-               .join(F.broadcast(delta.select(*key).alias("_ins_r")),
-                     _null_safe_on("_ins_l", "_ins_r", key),
-                     "left_semi")
+    key = G.term_key(df, delta, quad=True)
+    matched = (G.term_join(df, F.broadcast(delta), "left_semi", key)
                # dedup BEFORE broadcasting: a store carrying
                # per-document provenance duplicates of one term key
                # would otherwise broadcast one row per document —
@@ -3408,9 +3365,7 @@ def _set_insert(df: DataFrame, delta: DataFrame) -> DataFrame:
                # its exchange shuffles only the matched rows, never
                # the corpus (plan-guarded)
                .select(*key).dropDuplicates())
-    fresh = delta.alias("_ins_d").join(
-        F.broadcast(matched.alias("_ins_m")),
-        _null_safe_on("_ins_d", "_ins_m", key), "left_anti")
+    fresh = G.term_join(delta, F.broadcast(matched), "left_anti", key)
     return df.unionByName(fresh, allowMissingColumns=True)
 
 
@@ -3553,8 +3508,7 @@ def _apply_update(df: DataFrame, op: dict, quads: bool) -> DataFrame:
             raise
         if delta_quads and not quads:
             need_quads(f"LOAD of a quad format ({op['src']!r})")
-        shape = [c for c in _SHAPE_COLS if c in df.columns]
-        if not shape:
+        if not G.obj_shape_cols(df):
             # the DATA discipline: a tag a shapeless frame can't store
             # must not silently become its plain lexical twin
             tagged = (delta.filter(F.col("obj_lang").isNotNull()
@@ -3574,7 +3528,7 @@ def _apply_update(df: DataFrame, op: dict, quads: bool) -> DataFrame:
                      else delta)
         elif delta_quads:  # unreachable (need_quads above); belt
             delta = delta.drop("graph")
-        keep = (_TRIPLE_KEY + (["graph"] if quads else []) + shape)
+        keep = G.term_key(df, delta, quad=True)
         # dedup AFTER the projection, like DATA: without shape columns
         # an IRI <x> and a literal "x" collapse onto one lexical row
         return _set_insert(df, delta.select(*keep).dropDuplicates())
@@ -3602,7 +3556,8 @@ def _apply_update(df: DataFrame, op: dict, quads: bool) -> DataFrame:
             # dst ∪= src: both sides of the anti-join are single
             # graphs, so the join input is two pruned slices, not the
             # whole store
-            fresh = _quad_minus(moved, df.filter(_in_graph(gcol, dst)))
+            fresh = G.term_join(moved, df.filter(_in_graph(gcol, dst)),
+                                "left_anti", G.term_key(df, quad=True))
             return df.unionByName(fresh)
         base = df.filter(_not_in_graph(gcol, dst))
         if kind == "move":
@@ -3610,7 +3565,7 @@ def _apply_update(df: DataFrame, op: dict, quads: bool) -> DataFrame:
         return base.unionByName(moved)
 
     if op["op"] in ("insert_data", "delete_data"):
-        shape = [c for c in _SHAPE_COLS if c in df.columns]
+        shape = G.obj_shape_cols(df)
         if not shape and any(_tagged(r[2]) for r in op["quads"]):
             # an explicit @lang/^^dt on a shapeless frame would
             # silently insert/delete the PLAIN lexical twin — refuse,
@@ -3642,11 +3597,10 @@ def _apply_update(df: DataFrame, op: dict, quads: bool) -> DataFrame:
                   + (", graph string" if quads else "")
                   + (", obj_is_iri boolean, obj_lang string, "
                      "obj_datatype string" if shape else ""))
-        delta = (G.local_frame(df.sparkSession, data, schema)
-                 .select(*_TRIPLE_KEY, *(("graph",) if quads else ()),
-                         *shape))
+        delta = G.local_frame(df.sparkSession, data, schema)
         if op["op"] == "delete_data":
-            return _quad_minus(df, delta, broadcast_delta=True)
+            return G.term_join(df, delta, "left_anti",
+                               G.term_key(df, delta, quad=True))
         return _set_insert(df, delta)
 
     # modify
@@ -3679,9 +3633,9 @@ def _apply_update(df: DataFrame, op: dict, quads: bool) -> DataFrame:
     using = op.get("using") or []
     using_named = op.get("using_named") or []
     # literal-shape columns stay visible to the WHERE match (the
-    # term-shape builtins read them); the triple key for the RDF-merge
-    # dedup is shape-exact, same as the graphops TRIPLE_KEY
-    keep = _TRIPLE_KEY + [c for c in _SHAPE_COLS if c in df.columns]
+    # term-shape builtins read them), and the RDF-merge dedup over
+    # them is shape-exact
+    keep = G.term_key(df)
     if using or using_named:
         need_quads("USING")
         # default graph of the match = merge of the USING graphs
@@ -3723,7 +3677,7 @@ def _apply_update(df: DataFrame, op: dict, quads: bool) -> DataFrame:
     # pattern join (lazy: materializes at first use).
     sols = _solve_group(scope, g)
 
-    shape = [c for c in _SHAPE_COLS if c in df.columns]
+    shape = G.obj_shape_cols(df)
 
     def is_var(t) -> bool:
         return str(t).startswith("?")
@@ -3776,7 +3730,9 @@ def _apply_update(df: DataFrame, op: dict, quads: bool) -> DataFrame:
         # <x>, and a variable object deletes exactly the shape(s) its
         # binding matched — one solution row per matching shape
         # (bag), same as rdflib's term-exact Graph.update
-        out = _quad_minus(out, derived(deletes, bool(shape), sols))
+        dels = derived(deletes, bool(shape), sols)
+        out = G.term_join(out, dels, "left_anti",
+                          G.term_key(out, dels, quad=True))
     if inserts:
         # set semantics via fresh-only insert: rows already present
         # pass through UNTOUCHED (provenance survives — the old
@@ -3784,7 +3740,10 @@ def _apply_update(df: DataFrame, op: dict, quads: bool) -> DataFrame:
         # existing row and the NULL-provenance derived twin).  Same
         # cost class: one join keyed on the term key instead of the
         # full-store distinct — still the grammar's one corpus shuffle.
-        ins = derived(inserts, bool(shape), ins_sols, minted)
-        out = out.unionByName(_quad_minus(ins, out),
-                              allowMissingColumns=True)
+        ins = derived(inserts, bool(shape), ins_sols,
+                      minted).dropDuplicates()
+        out = out.unionByName(
+            G.term_join(ins, out, "left_anti",
+                        G.term_key(ins, out, quad=True)),
+            allowMissingColumns=True)
     return out

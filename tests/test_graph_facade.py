@@ -518,3 +518,54 @@ def test_serialize_emits_the_set(spark):
          ("a", "p", "x", "g2")], ["subj", "pred", "obj", "graph"]))
     assert sorted(r[0] for r in ds.serialize("nquads").collect()) == [
         '<a> <p> "x" <g1> .', '<a> <p> "x" <g2> .']
+
+
+def test_set_operation_key_families_on_quad_frame(spark):
+    """Two key families over one quad-carrying, literal-shaped frame.
+    The graph algebra (``-``, ``*``, ``^``) and ``graph_diff`` compare
+    triples: the graph column does not join their key.  UPDATE (``DELETE
+    DATA``, ``ADD``) compares quads.  Both are shape-exact: a literal
+    ``"x"`` never matches the IRI ``<x>``."""
+    from pyrdfa3_spark.operators.graphops import graph_diff
+    from pyrdfa3_spark.operators.sparql import update
+
+    cols = ["subj", "pred", "obj", "graph", "obj_is_iri", "obj_lang",
+            "obj_datatype"]
+    schema = ("subj string, pred string, obj string, graph string, "
+              "obj_is_iri boolean, obj_lang string, obj_datatype string")
+
+    def frame(rows):
+        return spark.createDataFrame(rows, schema)
+
+    def quads(df):
+        return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+    lit_g1 = ("s", "p", "x", "g1", False, None, None)
+    lit_g2 = ("s", "p", "x", "g2", False, None, None)
+    iri_g1 = ("s", "p", "x", "g1", True, None, None)
+    other = ("s", "p", "y", "g3", True, None, None)
+    left = SparkGraph(frame([lit_g1, iri_g1, other]))
+    right = SparkGraph(frame([lit_g2]))
+
+    # triple-keyed: lit_g2 removes / keeps / cancels lit_g1 whatever
+    # its graph, and never touches the IRI <x>
+    assert quads((left - right).df) == sorted([iri_g1, other])
+    assert quads((left * right).df) == [lit_g1]
+    assert quads((left ^ right).df) == sorted([iri_g1, other])
+    diff = graph_diff(left.df, right.df)
+    assert sorted(tuple(r) for r in diff.select("op", "obj", "obj_is_iri")
+                  .collect()) == [("removed", "x", True),
+                                  ("removed", "y", True)]
+
+    # quad-keyed: DELETE DATA in g2 misses the g1 row; in g1 it
+    # removes the literal and keeps the IRI
+    base = left.df
+    assert quads(update(base, 'DELETE DATA { GRAPH <g2> { <s> <p> "x" } }')) \
+        == quads(base)
+    assert quads(update(base, 'DELETE DATA { GRAPH <g1> { <s> <p> "x" } }')) \
+        == sorted([iri_g1, other])
+    # ADD g1 to g2: the literal already in g2 is not added twice, the
+    # IRI is added as an IRI
+    added = update(frame([lit_g1, iri_g1, lit_g2]), "ADD <g1> TO <g2>")
+    assert quads(added) == sorted(
+        [lit_g1, iri_g1, lit_g2, ("s", "p", "x", "g2", True, None, None)])

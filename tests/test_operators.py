@@ -956,8 +956,11 @@ def test_bgp_match_repeated_variable_and_errors(spark, kg_triples):
     with pytest.raises(ValueError, match="disjoint"):
         bgp_match(kg_triples, [("?x", "p:knows", "?y"),
                                ("?a", "p:name", "?b")]).collect()
-    with pytest.raises(ValueError, match="binds no variables"):
-        bgp_match(kg_triples, [("a", "p:knows", "b")])
+    # a ground pattern binds nothing: one empty solution when the
+    # triple exists, none when it does not
+    hit = bgp_match(kg_triples, [("a", "p:knows", "b")])
+    assert hit.columns == [] and hit.count() == 1
+    assert bgp_match(kg_triples, [("a", "p:knows", "c")]).count() == 0
 
 
 def test_property_table_pivot(spark, kg_triples):

@@ -716,3 +716,62 @@ def test_inline_frames_plan_local_scans(spark):
         plan = _plan(df)
         assert "LocalTableScan" in plan, (what, plan)
         assert "ExistingRDD" not in plan, (what, plan)
+
+
+def _build_sides(df) -> list:
+    """The build-side subtrees (JVM ``SparkPlan``s) of every LeftSemi
+    and LeftAnti join in ``df``'s executed plan, query stages
+    included; ``df`` must have run, so AQE's plan is final."""
+    def kids(p):
+        name = p.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return [p.executedPlan()]
+        if name.endswith("QueryStageExec"):
+            return [p.plan()]
+        seq = p.children()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def walk(p):
+        yield p
+        for k in kids(p):
+            yield from walk(k)
+
+    out = []
+    for p in walk(df._jdf.queryExecution().executedPlan()):
+        if ("Join" in p.nodeName()
+                and p.joinType().toString() in ("LeftSemi", "LeftAnti")):
+            right = p.buildSide().toString() == "BuildRight"
+            out.append(list(walk(p.right() if right else p.left())))
+    return out
+
+
+def test_semi_anti_build_sides_not_shuffled(spark):
+    """The EXISTS, NOT EXISTS, MINUS and DELETE WHERE shapes hand their
+    build side to the semi or anti join as it is: no shuffle exchange
+    (a dedup's) sits under the build side of any LeftSemi/LeftAnti
+    join, whose answer does not depend on duplicates there."""
+    from pyrdfa3_spark.operators.sparql import sparql, update
+
+    rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+    base = spark.range(60).selectExpr(
+        "concat('x', id DIV 2) AS subj",
+        f"CASE WHEN id % 2 = 0 THEN 's:name' ELSE '{rdf_type}' END"
+        " AS pred",
+        "CASE WHEN id % 2 = 0 THEN concat('n', id)"
+        " ELSE concat('T', id % 3) END AS obj")
+    cases = {
+        "exists": sparql(base, "SELECT ?x ?n WHERE { ?x s:name ?n "
+                               "FILTER EXISTS { ?x a <T1> } }"),
+        "not_exists": sparql(base, "SELECT ?x ?n WHERE { ?x s:name ?n "
+                                   "FILTER NOT EXISTS { ?x a ?t } }"),
+        "minus": sparql(base, "SELECT ?x ?n WHERE { ?x s:name ?n "
+                              "MINUS { ?x a <T1> } }"),
+        "delete_where": update(base, "DELETE WHERE { <x4> ?p ?o }"),
+    }
+    for what, df in cases.items():
+        df.collect()
+        sides = _build_sides(df)
+        assert sides, (what, _plan(df, mode="simple"))
+        for side in sides:
+            names = [p.getClass().getSimpleName() for p in side]
+            assert not [n for n in names if "Shuffle" in n], (what, names)

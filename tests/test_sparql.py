@@ -3334,9 +3334,15 @@ def test_path_walk_matches_filtered_closure(spark, tmp_path):
     the constant; its answers equal the free-end closure filtered to
     that constant, on seeded graphs with cycles, self-loops, literal
     objects and blank nodes — for single predicates, a sequence under
-    ``+``, and a constant start inside GRAPH <g>.  Path answers are
-    distinct, so the walk's rows compare as a sorted list."""
+    ``+``, both ends constant, and a constant start inside GRAPH <g>.
+    A ``*`` path from a constant also relates it to itself, whether or
+    not it is a graph term (SPARQL 1.1 §18.4), where the free-end
+    closure's zero-length pairs range over graph terms.  Path answers
+    are distinct, so the walk's rows compare as a sorted list."""
     from pyrdfa3_spark.operators import graphops as G
+
+    def from_const(pairs, path, c):
+        return pairs | {(c, c)} if path.endswith("*") else pairs
 
     for seed in (1, 2):
         quads = _walk_graph(seed)
@@ -3346,8 +3352,9 @@ def test_path_walk_matches_filtered_closure(spark, tmp_path):
         # n0: on a self-loop; n1: on a cycle; n99: in no triple
         consts = ["n0", "n1", "n99"]
         for path in ("<p:a>+", "<p:a>*", "(<p:a>/<p:b>)+"):
-            pairs = _closure_pairs(kg, path)
+            free = _closure_pairs(kg, path)
             for c in consts:
+                pairs = from_const(free, path, c)
                 got = sorted(_rows(sparql(
                     kg, f"SELECT ?y WHERE {{ <{c}> {path} ?y }}")))
                 assert got == sorted((y,) for x, y in pairs if x == c), \
@@ -3356,26 +3363,29 @@ def test_path_walk_matches_filtered_closure(spark, tmp_path):
                     kg, f"SELECT ?x WHERE {{ ?x {path} <{c}> }}")))
                 assert got == sorted((x,) for x, y in pairs if y == c), \
                     (seed, path, c)
+            pairs = from_const(free, path, "L0")
             # a literal as the constant object
             got = sorted(_rows(sparql(
                 kg, f'SELECT ?x WHERE {{ ?x {path} "L0" }}')))
             assert got == sorted((x,) for x, y in pairs if y == "L0"), \
                 (seed, path)
-        # both ends constant: a ground pattern binds no variable, so
-        # this case runs the operator the front end calls (walking
-        # from the subject; the matcher then filters the object)
+        # both ends constant: the walk from the subject is distinct,
+        # and the ground path pattern asks whether it reached the object
         pairs = _closure_pairs(kg, "<p:a>+")
         for s in consts:
             reached = [r.obj for r in G.path_walk(
                 kg, "p:a", s, "\x00path1").collect()]
             assert len(reached) == len(set(reached)), (seed, s)
             for o in consts + ["L0"]:
-                assert (o in reached) == ((s, o) in pairs), (seed, s, o)
+                obj = '"L0"' if o == "L0" else f"<{o}>"
+                got = _rows(sparql(kg, f"ASK {{ <{s}> <p:a>+ {obj} }}"))
+                assert got == [((s, o) in pairs,)], (seed, s, o)
         # a constant start inside GRAPH <g1>: only g1's edges count
         g1 = qs.filter("graph = 'g1'").drop("graph")
         for path in ("<p:a>+", "<p:a>*"):
-            pairs = _closure_pairs(g1, path)
+            free = _closure_pairs(g1, path)
             for c in consts:
+                pairs = from_const(free, path, c)
                 got = sorted(_rows(sparql(
                     qs, f"SELECT ?y WHERE {{ GRAPH <g1> "
                         f"{{ <{c}> {path} ?y }} }}")))
@@ -3454,4 +3464,93 @@ def test_path_walk_runs_one_job_per_hop(spark, tmp_path):
     assert sorted(out) == [("n1",), ("n2",), ("n3",), ("n4",)]
     jobs = tracker.getJobIdsForGroup(group)
     assert len(jobs) <= ecc + 2, (len(jobs), ecc)
+    kg.unpersist()
+
+
+def test_ground_patterns_evaluate(spark, kg):
+    """A fully constant triple pattern is an existence test: a group of
+    ground patterns gives one empty solution when every triple exists
+    and none otherwise; beside variable patterns, or as a GRAPH block
+    beside them, it keeps or drops all their solutions; a path with
+    both ends constant is one too."""
+    def ask(text):
+        return _rows(sparql(kg, text)) == [(True,)]
+
+    assert ask("ASK { <a> p:knows <b> }")
+    assert not ask("ASK { <a> p:knows <c> }")
+    assert ask('ASK { <a> p:knows <b> . <b> p:name "Bob" }')
+    assert not ask('ASK { <a> p:knows <b> . <b> p:name "Ada" }')
+    q = "SELECT ?x ?n WHERE { ?x p:name ?n . <a> p:knows %s }"
+    assert sorted(_rows(sparql(kg, q % "<b>"))) == [
+        ("a", "Ada"), ("b", "Bob"), ("b", "Bobby")]
+    assert _rows(sparql(kg, q % "<c>")) == []
+    assert ask("ASK { <a> p:knows+ <c> }")
+    assert not ask("ASK { <c> p:knows+ <a> }")
+    quads = spark.createDataFrame(
+        [("a", "p:knows", "b", "g1"), ("a", "p:name", "Ada", None)],
+        "subj string, pred string, obj string, graph string")
+    q = "SELECT ?n WHERE { ?x p:name ?n . GRAPH <g1> { <a> p:knows %s } }"
+    assert _rows(sparql(quads, q % "<b>")) == [("Ada",)]
+    assert _rows(sparql(quads, q % "<c>")) == []
+
+
+def test_zero_length_path_from_constant_returns_it(kg, monkeypatch):
+    """``<c> p* ?x`` binds ``?x`` to ``c`` itself, once, even when ``c``
+    is no term of the graph (SPARQL 1.1 §18.4), forward and reversed,
+    and also when the walk falls back to the closure."""
+    from pyrdfa3_spark.operators import graphops as G
+
+    assert _rows(sparql(kg, "SELECT ?b WHERE { <urn:zz> p:knows* ?b }")) \
+        == [("urn:zz",)]
+    assert _rows(sparql(kg, "SELECT ?a WHERE { ?a p:knows* <urn:zz> }")) \
+        == [("urn:zz",)]
+    assert sorted(_rows(sparql(kg, "SELECT ?b WHERE { <a> p:knows* ?b }"))) \
+        == [("a",), ("b",), ("c",)]
+    # node budget 0: every start that reaches a node falls back; c is
+    # on a self-loop, so the closure holds (c, c) as well
+    monkeypatch.setattr(G, "_WALK_MAX_NODES", 0)
+    assert sorted(_rows(sparql(kg, "SELECT ?b WHERE { <b> p:knows* ?b }"))) \
+        == [("b",), ("c",)]
+    assert _rows(sparql(kg, "SELECT ?b WHERE { <c> p:knows* ?b }")) \
+        == [("c",)]
+    assert sorted(_rows(sparql(kg, "SELECT ?a WHERE { ?a p:knows* <c> }"))) \
+        == [("a",), ("b",), ("c",)]
+
+
+def test_semi_anti_join_shapes_job_count(spark, tmp_path):
+    """EXISTS, NOT EXISTS and MINUS run one job for the broadcast of
+    the join's build side and one for the answer; DELETE WHERE plus a
+    count of the result runs three.  A dedup of the build side would
+    add a shuffle stage, one more job each.  The cached frame names
+    200 subjects, a third of them typed <T1> and a third <T2>."""
+    from pyrdfa3_spark.operators.sparql import update
+
+    rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+    rows = [(f"x{i}", "s:name", f"n{i}") for i in range(200)]
+    rows += [(f"x{i}", rdf_type, f"T{i % 3 + 1}") for i in range(200)
+             if i % 3 < 2]
+    kg = _cached(spark, tmp_path / "kg", rows, ["subj", "pred", "obj"])
+
+    shapes = {  # name: (query or update text, rows, jobs)
+        "exists": ("SELECT ?x ?n WHERE { ?x s:name ?n "
+                   "FILTER EXISTS { ?x a <T1> } }", 67, 2),
+        "not_exists": ("SELECT ?x ?n WHERE { ?x s:name ?n "
+                       "FILTER NOT EXISTS { ?x a ?t } }", 66, 2),
+        "minus": ("SELECT ?x ?n WHERE { ?x s:name ?n "
+                  "MINUS { ?x a <T1> } }", 133, 2),
+        "delete_where": ("DELETE WHERE { <x3> ?p ?o }", 332, 3),
+    }
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for name, (text, n_rows, n_jobs) in shapes.items():
+        group = f"semi-anti-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            got = (update(kg, text).count() if name == "delete_where"
+                   else len(sparql(kg, text).collect()))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert got == n_rows, (name, got)
+        jobs = tracker.getJobIdsForGroup(group)
+        assert len(jobs) <= n_jobs, (name, len(jobs))
     kg.unpersist()
