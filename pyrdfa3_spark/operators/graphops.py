@@ -1035,6 +1035,10 @@ def _match(frame, positions, patterns, optional, filters,
         # and leftjoin_filter evaluates it over the merge
         gvars = {term[1:] for pat in grp["patterns"] for term in pat
                  if isinstance(term, str) and term.startswith("?")}
+        if not gvars:
+            # a ground group evaluates to {μ0} or {}: LeftJoin with
+            # either keeps every outer solution unchanged (§18.5)
+            continue
         inner_f, outer_f = [], []
         for e in grp.get("filters") or []:
             (outer_f if filter_reads(e, bound - gvars)
@@ -1783,7 +1787,10 @@ def solution_agg(sols: DataFrame, group_by: list[str],
         else:
             raise ValueError(f"unknown aggregate kind {kind!r}")
         exprs.append(e.alias(name))
-    out = sols.groupBy(*group_by).agg(*exprs)
+    # GROUP BY without an aggregate is a distinct projection of the
+    # group keys (§18.2.4.1)
+    out = (sols.groupBy(*group_by).agg(*exprs) if exprs
+           else sols.select(*group_by).dropDuplicates())
     if having:
         out = out.filter(having)
     return out

@@ -2449,6 +2449,10 @@ def _solve_group(triples: DataFrame, g: dict) -> DataFrame:
                             filters=inner_f or None,
                             shape_vars=sv)
             if not G.shared_vars(sols, opt):
+                if all(c.startswith(G.SHAPE_PREFIX) for c in opt.columns):
+                    # a ground body evaluates to {μ0} or {}: LeftJoin
+                    # with either keeps every outer solution (§18.5)
+                    continue
                 raise SparqlUnsupported(
                     "OPTIONAL shares no variables with its group")
             # §6.1 leftjoin under §18.5 compatibility; the optional

@@ -34,7 +34,7 @@ from collections.abc import Iterator
 from typing import Optional
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType, IntegerType, StringType, StructField, StructType,
@@ -265,19 +265,44 @@ def extract_triples(transcripts: DataFrame) -> DataFrame:
     return triples
 
 
+def conv_bucket(buckets: int) -> Column:
+    """The one ``bucket(conv_id)`` transform of every bucketed layout:
+    ``pmod(hash(conv_id), buckets)``.  The batch sink, the streaming
+    sink and the resumable bucket runner all call it, so a row lands in
+    the same bucket whichever of them wrote it."""
+    return F.pmod(F.hash("conv_id"), F.lit(buckets))
+
+
+def distribute_by_bucket(df: DataFrame, buckets: int) -> DataFrame:
+    """``df`` plus its ``conv_bucket`` column, hash-distributed by that
+    column through one AQE rebalance — Iceberg's
+    ``write.distribution-mode=hash``.  A bucket goes to one writer
+    task, so a partitioned write lands one file per bucket, unless it
+    is larger than ``spark.sql.adaptive.advisoryPartitionSizeInBytes``:
+    AQE splits such a bucket across several tasks, and coalesces small
+    buckets into shared ones."""
+    return (df.withColumn("conv_bucket", conv_bucket(buckets))
+            .hint("rebalance", "conv_bucket"))
+
+
 def write_triples(triples: DataFrame, path: str, buckets: int = 16) -> None:
     """Partitioned sink (S6).  Iceberg is the production target
     (``writeTo(...).partitionedBy(bucket(conv_id))``); this sandbox has no
     catalog, so we land parquet partitioned by an explicit conv bucket
     column — the same physical layout an Iceberg bucket transform yields.
 
+    Rows are hash-distributed by bucket before the write
+    (:func:`distribute_by_bucket`), so each write lands one file per
+    ``conv_bucket=B`` directory, unless a bucket exceeds AQE's advisory
+    partition size, which splits it into several files of about that
+    size.
+
     Files are zstd-compressed and sorted by (subj, pred) within each
     partition: subject-sorted row groups give parquet min/max statistics
     that prune subject-lookup scans, and run-length/dictionary encoding
     compresses the repeated IRIs far better than unsorted rows — both
     matter at the 100 TB graph-table size."""
-    (triples
-     .withColumn("conv_bucket", F.pmod(F.hash("conv_id"), F.lit(buckets)))
+    (distribute_by_bucket(triples, buckets)
      .sortWithinPartitions("conv_bucket", "subj", "pred")
      .write.mode("overwrite")
      .option("compression", "zstd")

@@ -27,6 +27,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyrdfa3_spark.plans.extract import conv_bucket
+
 
 def _manifest_dir(out_path: str) -> str:
     return os.path.join(out_path, "_lineage")
@@ -75,8 +77,7 @@ def stale_buckets(transcripts: DataFrame, out_path: str) -> set[int]:
         current = {
             r["b"]: (r["n"], int(r["fp"] or 0))
             for r in (transcripts
-                      .groupBy(F.pmod(F.hash("conv_id"), F.lit(n_buckets))
-                               .alias("b"))
+                      .groupBy(conv_bucket(n_buckets).alias("b"))
                       .agg(F.count("*").alias("n"),
                            F.sum(F.hash("conv_id", "turn_idx")).alias("fp"))
                       .collect())
@@ -102,8 +103,8 @@ def run_bucketed(transcripts: DataFrame, out_path: str,
     extract = extract or extract_triples
     os.makedirs(_manifest_dir(out_path), exist_ok=True)
     done = completed_buckets(out_path)
-    bucket_col = F.pmod(F.hash("conv_id"), F.lit(n_buckets))
-    with_bucket = transcripts.withColumn("conv_bucket", bucket_col)
+    with_bucket = transcripts.withColumn("conv_bucket",
+                                         conv_bucket(n_buckets))
 
     processed, rows_total = [], 0
     for b in range(n_buckets):

@@ -91,7 +91,9 @@ def run_bucketed_materialize(stream_df: DataFrame, out_dir: str,
     partitions instead of appending duplicates — exactly-once table
     contents on top of Structured Streaming's at-least-once foreachBatch
     contract.  (In production the body is one Iceberg ``append`` whose
-    snapshot log already gives idempotent commit-by-batch-id.)
+    snapshot log already gives idempotent commit-by-batch-id.)  Rows
+    are hash-distributed by bucket as in the batch sink, so each batch
+    lands one file per bucket.
 
     ``entity_hll_col``: also land a per-batch HyperLogLog register
     sidecar over that column under ``<out_dir>/_entity_hll`` — the
@@ -101,11 +103,12 @@ def run_bucketed_materialize(stream_df: DataFrame, out_dir: str,
     :func:`distinct_entity_estimate` folds every sidecar WITHOUT
     rescanning the table — per-commit telemetry the manifest pattern
     of ``streaming/checkpoint.py`` wants at 10^12 turns."""
+    from pyrdfa3_spark.plans.extract import distribute_by_bucket
+
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df
-         .withColumn("batch_id", F.lit(batch_id))
-         .withColumn("conv_bucket",
-                     F.pmod(F.hash("conv_id"), F.lit(buckets)))
+        (distribute_by_bucket(batch_df.withColumn("batch_id",
+                                                  F.lit(batch_id)),
+                              buckets)
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("batch_id", "conv_bucket")

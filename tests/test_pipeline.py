@@ -10,6 +10,7 @@ golden graphs.
 from __future__ import annotations
 
 import functools
+import os
 import random
 from collections import Counter
 
@@ -287,3 +288,79 @@ def test_prefilter_keep_set_matches_old_patterns(spark, prefilter_corpus,
     new_rows = extract_tagged(prefilter_corpus, **opts).collect()
     assert Counter(map(tuple, new_rows)) == Counter(map(tuple, old_rows))
     assert any(r["kind"] == "t" for r in new_rows)
+
+
+def _sink_input(spark):
+    """4000 triple rows of 37 conversations in 4 input partitions;
+    every partition holds rows of every bucket."""
+    ids = spark.range(0, 4000, numPartitions=4)
+    return ids.select(
+        F.concat(F.lit("conv-"), (F.col("id") % 37).cast("string"))
+        .alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        F.concat(F.lit("http://ex.org/s"),
+                 (F.col("id") * 7919 % 1000).cast("string")).alias("subj"),
+        F.concat(F.lit("http://ex.org/p"),
+                 (F.col("id") % 5).cast("string")).alias("pred"),
+        F.sha2(F.col("id").cast("string"), 256).alias("obj"),
+        F.lit(False).alias("obj_is_iri"),
+        F.lit(None).cast("string").alias("obj_lang"),
+        F.lit(None).cast("string").alias("obj_datatype"))
+
+
+def _bucket_files(path) -> dict[int, list[str]]:
+    return {int(d.split("=", 1)[1]): sorted(
+                os.path.join(path, d, f)
+                for f in os.listdir(os.path.join(path, d))
+                if f.endswith(".parquet"))
+            for d in os.listdir(path) if d.startswith("conv_bucket=")}
+
+
+def test_write_triples_one_file_per_bucket(spark, tmp_path):
+    """The sink hash-distributes rows by bucket: each ``conv_bucket=B``
+    directory holds one file, every row sits in its own bucket's
+    directory, nothing is lost or duplicated, and each file is sorted
+    by (subj, pred)."""
+    import pyarrow.parquet as pq
+
+    from pyrdfa3_spark.plans.extract import conv_bucket, write_triples
+
+    df = _sink_input(spark)
+    assert df.rdd.getNumPartitions() >= 4
+    out = str(tmp_path / "graph")
+    write_triples(df, out, buckets=3)
+
+    files = _bucket_files(out)
+    assert sorted(files) == [0, 1, 2]
+    assert all(len(fs) == 1 for fs in files.values()), files
+
+    back = spark.read.parquet(out)
+    assert (Counter(tuple(r) for r in back.select(*df.columns).collect())
+            == Counter(tuple(r) for r in df.collect()))
+    assert back.filter(conv_bucket(3) != F.col("conv_bucket")).count() == 0
+
+    for fs in files.values():
+        t = pq.read_table(fs[0], columns=["subj", "pred"])
+        keys = list(zip(t["subj"].to_pylist(), t["pred"].to_pylist()))
+        assert keys == sorted(keys)
+
+
+def test_write_triples_splits_bucket_over_advisory_size(spark, tmp_path):
+    """A bucket bigger than AQE's advisory partition size is split over
+    several writer tasks, so one bucket never means one writer."""
+    from pyrdfa3_spark.plans.extract import write_triples
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "16k")
+    try:
+        out = str(tmp_path / "graph")
+        write_triples(_sink_input(spark), out, buckets=3)
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    files = _bucket_files(out)
+    assert max(len(fs) for fs in files.values()) > 1, files
+    assert spark.read.parquet(out).count() == 4000

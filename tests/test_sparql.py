@@ -3554,3 +3554,33 @@ def test_semi_anti_join_shapes_job_count(spark, tmp_path):
         jobs = tracker.getJobIdsForGroup(group)
         assert len(jobs) <= n_jobs, (name, len(jobs))
     kg.unpersist()
+
+
+def test_ground_optional_keeps_every_outer_solution(spark):
+    """A ground OPTIONAL group evaluates to the one empty solution when
+    its triple exists and to no solution when it does not; LeftJoin
+    with either keeps every outer solution unchanged (§18.5).  Both the
+    pattern form and the full-group form answer."""
+    kg = spark.createDataFrame(
+        [("x1", "p:a", "1"), ("x2", "p:a", "2"), ("x2", "p:a", "2b"),
+         ("a", "p:c", "b")], ["subj", "pred", "obj"])
+    want = [("x1", "1"), ("x2", "2"), ("x2", "2b")]
+    for ground in ("<a> <p:c> <b>", "<a> <p:c> <zz>"):
+        for body in (ground, "{ " + ground + " }"):
+            got = _rows(sparql(
+                kg, f"SELECT ?x ?v {{ ?x <p:a> ?v OPTIONAL {{ {body} }} }}"))
+            assert sorted(got) == want, body
+
+
+def test_group_by_without_aggregate_is_distinct_keys(kg):
+    """GROUP BY with no aggregate projects one row per group key
+    (§18.2.4.1): the rows SELECT DISTINCT gives."""
+    got = sorted(_rows(sparql(kg, "SELECT ?v { ?x ?p ?v } GROUP BY ?v")))
+    assert got == sorted(_rows(sparql(
+        kg, "SELECT DISTINCT ?v { ?x ?p ?v }")))
+    assert got == [("Ada",), ("Bob",), ("Bobby",), ("Person",), ("b",),
+                   ("c",)]
+    # a HAVING over the keys filters the groups
+    assert sorted(_rows(sparql(kg, """
+        SELECT ?x { ?x p:name ?n } GROUP BY ?x HAVING (?x != "a")"""))) \
+        == [("b",)]

@@ -96,7 +96,9 @@ def test_stream_bucketed_materialize(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     t = synth_transcripts(spark, n_conv=20, turns_per_conv=10,
                           skew_factor=2).cache()
-    t.coalesce(1).write.mode("append").parquet(in_dir)
+    # three input files, so the micro-batch has three partitions and
+    # each of them holds rows of every bucket
+    t.repartition(3).write.mode("append").parquet(in_dir)
     run_bucketed_materialize(
         extract_stream(stream_transcripts(spark, in_dir)),
         out_dir, ckpt, buckets=4)
@@ -105,6 +107,13 @@ def test_stream_bucketed_materialize(spark, tmp_path):
     parts = [d for d in os.listdir(os.path.join(out_dir, batches[0]))
              if d.startswith("conv_bucket=")]
     assert 1 <= len(parts) <= 4
+    # the sink distributes rows by bucket: one file per bucket per batch
+    for b in batches:
+        for d in os.listdir(os.path.join(out_dir, b)):
+            if d.startswith("conv_bucket="):
+                files = [f for f in os.listdir(os.path.join(out_dir, b, d))
+                         if f.endswith(".parquet")]
+                assert len(files) == 1, (b, d, files)
     streamed = spark.read.parquet(out_dir)
 
     from pyrdfa3_spark.plans.extract import extract_triples
