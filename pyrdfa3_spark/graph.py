@@ -339,24 +339,24 @@ class SparkGraph:
 
     def items(self, head: str, max_length: int = 100) -> DataFrame:
         """rdflib ``Graph.items`` twin: the members of the rdf:List
-        rooted at ``head`` as an ordered ``(pos, item)`` frame.  The
-        rest-chain walks one BFS layer per element (cons cells chain
-        linearly), so ``max_length`` bounds the rounds — RDF
-        collections are in-document structures, typically tens of
-        elements; the row-oriented sink direction at scale is
+        rooted at ``head`` as an ordered ``(pos, item)`` frame: a
+        ``graphops.bfs_distances`` over the rdf:rest edges (one job
+        when their slice fits on the driver; ``max_length`` bounds the
+        list), then one ``IN``-list job for the rdf:first values.  At
+        scale, the row-oriented sink direction is
         ``graphops.rdf_list_chain``."""
         from pyrdfa3_spark.functions.constants import RDF
 
-        rest = (self.df.filter(F.col("pred") == RDF + "rest")
-                .select(F.col("subj").alias("src"),
-                        F.col("obj").alias("dst")))
-        cells = G.bfs_distances(rest, [head], max_hops=max_length)
-        firsts = (self.df.filter(F.col("pred") == RDF + "first")
-                  .select(F.col("subj").alias("node"),
-                          F.col("obj").alias("item")))
-        return (cells.join(firsts, "node")
-                .select(F.col("dist").alias("pos"), "item")
-                .orderBy("pos"))
+        cells = dict(G.bfs_distances(self._pred_edges(RDF + "rest"),
+                                     [head], max_hops=max_length)
+                     .collect())
+        firsts = self.df.filter(
+            f"pred = {G.sql_str(RDF + 'first')} AND subj IN "
+            f"({', '.join(map(G.sql_str, cells))})"
+        ).select("subj", "obj").collect()
+        return G.local_frame(self.df.sparkSession,
+                             sorted((cells[s], o) for s, o in firsts),
+                             "pos bigint, item string")
 
     def _pred_edges(self, predicate: str, reverse: bool = False):
         src, dst = ("obj", "subj") if reverse else ("subj", "obj")
@@ -369,9 +369,11 @@ class SparkGraph:
         """rdflib ``transitive_objects`` twin: the subject plus every
         node reachable over ``predicate``+, as a ``(node)`` frame
         (seed included at depth 0, like rdflib yielding the subject
-        first).  A SEEDED BFS over the predicate-pruned edge set —
-        only the queried reachable set is walked and depth-checked,
-        never the whole predicate's all-pairs closure."""
+        first).  A SEEDED BFS over the predicate's edges
+        (``graphops.bfs_distances``): only the queried reachable set
+        is searched and depth-checked, never the whole predicate's
+        all-pairs closure; a predicate slice that fits on the driver
+        is collected once and searched there, one job in all."""
         return G.bfs_distances(self._pred_edges(predicate),
                                [subject],
                                max_hops=max_hops).select("node")

@@ -10,6 +10,8 @@ noted).
 from __future__ import annotations
 
 import functools
+import itertools
+import math
 import re
 
 from pyspark.errors import AnalysisException
@@ -304,47 +306,14 @@ def _schema_maps(vocab_rows):
     from != to: subPropertyOf/subClassOf closed transitively,
     equivalentProperty/equivalentClass expanded to connected-component
     pairs (the fixpoint of the reference's symmetric rules,
-    process.py:228-249)."""
-    def transitive(pairs):
-        succ: dict = {}
-        for a, b in pairs:
-            succ.setdefault(a, set()).add(b)
-        changed = True
-        while changed:
-            changed = False
-            for a in list(succ):
-                new = set()
-                for b in succ[a]:
-                    new |= succ.get(b, set())
-                if not new <= succ[a]:
-                    succ[a] |= new
-                    changed = True
-        return {(a, b) for a, bs in succ.items() for b in bs if a != b}
-
-    def components(pairs):
-        parent: dict = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-        groups: dict = {}
-        for x in parent:
-            groups.setdefault(find(x), set()).add(x)
-        out = set()
-        for members in groups.values():
-            for a in members:
-                for b in members:
-                    if a != b:
-                        out.add((a, b))
-        return out
+    process.py:228-249).  Both are :func:`_bfs` from every node, the
+    components over the pairs taken in both directions."""
+    def closed(pairs, symmetric=False):
+        if symmetric:
+            pairs = pairs + [(b, a) for a, b in pairs]
+        successors = _successors(pairs)
+        return {(a, b) for a in {a for a, _ in pairs}
+                for b in _bfs(successors, [a], plus=True) if a != b}
 
     sub_p, eq_p, sub_c, eq_c = [], [], [], []
     for s, p, o in vocab_rows:
@@ -356,8 +325,8 @@ def _schema_maps(vocab_rows):
             sub_c.append((s, o))
         elif p == OWL_EQCLASS:
             eq_c.append((s, o))
-    prop_map = transitive(sub_p) | components(eq_p)
-    class_map = transitive(sub_c) | components(eq_c)
+    prop_map = closed(sub_p) | closed(eq_p, symmetric=True)
+    class_map = closed(sub_c) | closed(eq_c, symmetric=True)
     return sorted(prop_map), sorted(class_map)
 
 
@@ -1461,73 +1430,130 @@ def path_zero_or_more(triples: DataFrame, pred: str,
     return plus.unionByName(zero).dropDuplicates()
 
 
-#: :func:`path_walk`'s budgets: past ``_WALK_ROUNDS`` rounds (the
-#: closure's own default round budget), or once it has reached more
-#: than ``_WALK_MAX_NODES`` nodes, the walk hands over to the doubling
-#: closure filtered to its start.  A round's ``IN`` list of 1,000 keys
-#: costs ~90 ms, of 10,000 keys ~400 ms (local[2])
-_WALK_ROUNDS = 20
+#: The budgets of :func:`_reach`: an edge slice of at most
+#: ``_SLICE_ROWS`` rows is collected once and searched on the driver;
+#: a larger one is walked one ``IN``-list job per hop while at most
+#: ``_WALK_MAX_NODES`` nodes have been reached (a hop's ``IN`` list of
+#: 1,000 keys costs ~90 ms, of 10,000 keys ~400 ms, local[2]).
+_SLICE_ROWS = 100_000
 _WALK_MAX_NODES = 1_000
+
+
+def _successors(pairs):
+    """The successor function of driver-side ``(src, dst)`` pairs: a
+    frontier's set of nodes one edge away."""
+    adj: dict = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+    return lambda frontier: {b for a in frontier for b in adj.get(a, ())}
+
+
+_TOO_DEEP = "reachability frontier still expanding after {} hops; " \
+    "raise max_hops"
+
+
+def _bfs(successors, seeds, plus: bool, max_hops: float = math.inf,
+         budget: float = math.inf) -> dict | None:
+    """Breadth-first search on the driver: ``{node: dist}``, the fewest
+    hops from any of ``seeds``; ``successors(frontier)`` gives the
+    nodes one edge away from a set of nodes.  With ``plus`` a path has
+    an edge (SPARQL ``p+``), so a seed is in the answer only when a
+    cycle leads back to it; else every seed is at distance 0 (``p*``).
+    Raises when a node lies more than ``max_hops`` hops away (a
+    truncated answer would drop exactly the boundary asked for);
+    returns None once more than ``budget`` nodes are reached."""
+    dist = {} if plus else dict.fromkeys(seeds, 0)
+    frontier, hop = set(seeds), 0
+    while frontier := {n for n in successors(frontier) if n not in dist}:
+        hop += 1
+        if hop > max_hops:
+            raise RuntimeError(_TOO_DEEP.format(max_hops))
+        dist.update(dict.fromkeys(frontier, hop))
+        if len(dist) > budget:
+            return None
+    return dist
+
+
+def _reach(edges: DataFrame, seeds, plus: bool,
+           max_hops: float = math.inf) -> DataFrame:
+    """The one reachability evaluator: ``(node, dist)`` for every node
+    a path over the ``(src, dst)`` edges leads to from ``seeds``, with
+    its fewest hops (``plus``, ``max_hops`` as in :func:`_bfs`).  Only
+    what the seeds reach is searched (magic sets, Bancilhon et al.,
+    PODS 1986), in one of three regimes: (1) one Arrow collect of at
+    most ``_SLICE_ROWS + 1`` edges; a slice that fits is searched on
+    the driver, one job in all; (2) a larger slice is walked from the
+    seeds, one ``IN``-list job per hop (a hash set in the scan; no
+    shuffle), while at most ``_WALK_MAX_NODES`` nodes are reached;
+    (3) past that, :func:`_reach_frames` restarts from the seeds, the
+    one regime that holds no reached set on the driver.  Regimes 1
+    and 2 answer with a :func:`local_frame`."""
+    e = edges.selectExpr("src", "dst").filter("dst IS NOT NULL")
+    seeds = sorted(set(seeds))
+    # one job: an Arrow collect runs the limit's shuffle to one
+    # partition inside its job; collect() scans partitions in rounds
+    s = e.limit(_SLICE_ROWS + 1).toArrow()
+    if s.num_rows <= _SLICE_ROWS:
+        dist = _bfs(_successors(zip(s.column(0).to_pylist(),
+                                    s.column(1).to_pylist())),
+                    seeds, plus, max_hops)
+    else:
+        def walk(frontier):
+            keys = ", ".join(map(sql_str, sorted(frontier)))
+            return {r[0] for r in e.filter(f"src IN ({keys})")
+                    .select("dst").collect()}
+        dist = _bfs(walk, seeds, plus, max_hops, budget=_WALK_MAX_NODES)
+        if dist is None:
+            return _reach_frames(e, seeds, plus, max_hops)
+    return local_frame(e.sparkSession, sorted(dist.items()),
+                       "node string, dist bigint")
+
+
+def _reach_frames(e: DataFrame, seeds: list[str], plus: bool,
+                  max_hops: float) -> DataFrame:
+    """:func:`_bfs` as frames: one join, dedup and anti-join against
+    the reached set per hop, so a node is expanded once (first reach
+    IS the fewest hops, by layer order); frontier and answer are
+    lineage-truncated per hop."""
+    spark = e.sparkSession
+    frontier = local_frame(spark, [(n,) for n in seeds], "node string")
+    out = (local_frame(spark, [], "node string, dist bigint") if plus
+           else frontier.selectExpr("node", "CAST(0 AS bigint) AS dist"))
+    for hop in itertools.count(1):
+        nxt = (e.join(frontier.selectExpr("node AS src"), "src")
+               .selectExpr("dst AS node")
+               .dropDuplicates()
+               .join(out.select("node"), "node", "left_anti")
+               .localCheckpoint(eager=True))
+        if nxt.isEmpty():
+            return out
+        if hop > max_hops:
+            raise RuntimeError(_TOO_DEEP.format(max_hops))
+        out = out.unionByName(nxt.selectExpr(
+            "node", f"CAST({hop} AS bigint) AS dist"
+        )).localCheckpoint(eager=True)
+        frontier = nxt
 
 
 def path_walk(triples: DataFrame, pred: str, start: str, out_pred: str,
               reverse: bool = False, zero_length: bool = False
               ) -> DataFrame:
     """SPARQL ``<start> pred+ ?x`` (with ``reverse``: ``?x pred+
-    <start>``) walked from the constant end — the magic-sets rewrite
-    (Bancilhon et al., PODS 1986) of :func:`path_closure` filtered to
-    ``start``: only nodes reachable from ``start`` are ever touched,
-    where the closure computes every pair the predicate connects.
-    Returns the same ``(subj, pred, obj)`` edges under ``out_pred`` as
-    that filtered closure — ``(start, out_pred, x)`` for every ``x``
-    one or more hops away (reversed: ``(x, out_pred, start)``) — as a
-    :func:`local_frame`.  With ``zero_length`` it is ``pred*``, whose
-    answer also holds the zero-length pair ``(start, start)``, whether
-    or not ``start`` is a graph term (SPARQL 1.1 §18.4, ALP with a
-    bound start).
-
-    Scale shape: each round filters the predicate's edge slice to the
-    frontier — an ``IN`` list, which the scan evaluates as a hash set
-    — and collects the next nodes: one job per round, no shuffle; a
-    seed whose farthest reachable node is ``e`` hops away takes
-    ``e + 1`` rounds.  (A broadcast join against a frontier frame
-    would cost a second job per round, the broadcast's own.)  The
-    reached set is held on the driver, so the walk is for answers of
-    at most ``_WALK_MAX_NODES`` nodes, the posture of
-    :func:`describe`: past that many, or when the frontier still grows
-    after ``_WALK_ROUNDS`` rounds, the walk falls back to the doubling
-    closure filtered to ``start``, so wide fan-out and deep chains
-    keep working.  The round that crosses the node budget has
-    already collected one hop's fan-out of at most ``_WALK_MAX_NODES``
-    frontier nodes."""
+    <start>``) searched from the constant end by :func:`_reach`.
+    Returns the ``(subj, pred, obj)`` edges of :func:`path_closure`
+    filtered to ``start``, under ``out_pred``: ``(start, out_pred,
+    x)`` for every ``x`` one or more hops away (reversed: ``(x,
+    out_pred, start)``), so ``start`` only when a cycle leads back to
+    it.  With ``zero_length`` it is ``pred*``, whose answer also holds
+    ``(start, start)``, whether or not ``start`` is a graph term
+    (SPARQL 1.1 §18.4, ALP with a bound start)."""
     src, dst = ("obj", "subj") if reverse else ("subj", "obj")
-    edges = triples.filter(f"pred = {sql_str(pred)}")
-    reached: set[str] = set()
-    frontier = {start}
-    for _ in range(_WALK_ROUNDS):
-        keys = ", ".join(sql_str(n) for n in sorted(frontier))
-        nxt = {r[0] for r in edges.filter(f"{src} IN ({keys})")
-               .selectExpr(dst).collect()}
-        frontier = nxt - reached - {None}
-        reached |= frontier
-        if not frontier or len(reached) > _WALK_MAX_NODES:
-            break
-    ddl = "subj string, pred string, obj string"
-    if frontier:
-        whole = path_closure(triples, pred, out_pred=out_pred,
-                             strategy="doubling").filter(
-            f"{src} = {sql_str(start)}")
-        if not zero_length:
-            return whole
-        return whole.filter(f"{dst} <> {sql_str(start)}").unionByName(
-            local_frame(triples.sparkSession,
-                        [(start, out_pred, start)], ddl))
-    if zero_length:
-        reached.add(start)
-    return local_frame(
-        triples.sparkSession,
-        [(n, out_pred, start) if reverse else (start, out_pred, n)
-         for n in sorted(reached)], ddl)
+    edges = triples.filter(f"pred = {sql_str(pred)}").selectExpr(
+        f"{src} AS src", f"{dst} AS dst")
+    ends = ("node", sql_str(start)) if reverse else (sql_str(start), "node")
+    return _reach(edges, [start], plus=not zero_length).selectExpr(
+        f"{ends[0]} AS subj", f"{sql_str(out_pred)} AS pred",
+        f"{ends[1]} AS obj")
 
 
 def bgp_values(triples: DataFrame,
@@ -1930,41 +1956,13 @@ def bfs_distances(edges: DataFrame, sources: list[str],
     scope subgraphs around seed entities.  Output: ``(node, dist)``
     with sources at distance 0.
 
-    Scale shape: one equi-join shuffle per BFS layer; the frontier is
-    anti-joined against the visited set so a node is expanded exactly
-    once (first reach IS the minimum distance, by layer order), and
-    both frontier and accumulator are lineage-truncated per hop.  Seed
-    neighborhoods are usually small, so Catalyst/AQE broadcast the
-    frontier side.  Raises when the frontier is still non-empty after
-    ``max_hops`` — a silently truncated neighborhood would drop
-    exactly the boundary the query asked for.
+    Scale shape: :func:`_reach` — one job when the edge slice fits
+    on the driver, else one per hop.  Raises when a node lies more
+    than ``max_hops`` hops away.
     """
     if not sources:
         raise ValueError("bfs_distances needs at least one source")
-    e = edges.select("src", "dst").dropDuplicates()
-    frontier = local_frame(edges.sparkSession,
-                           [(n,) for n in sorted(set(sources))],
-                           "node string")
-    out = frontier.select("node", F.lit(0).cast("bigint").alias("dist"))
-    for hop in range(1, max_hops + 1):
-        nxt = (e.join(frontier.withColumnRenamed("node", "src"), "src")
-               .select(F.col("dst").alias("node"))
-               .dropDuplicates()
-               .join(out.select("node"), "node", "left_anti")
-               .localCheckpoint(eager=True))
-        if nxt.isEmpty():
-            return out
-        out = out.unionByName(
-            nxt.select("node", F.lit(hop).cast("bigint").alias("dist"))
-        ).localCheckpoint(eager=True)
-        frontier = nxt
-    if not (e.join(frontier.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"))
-            .join(out.select("node"), "node", "left_anti").isEmpty()):
-        raise RuntimeError(
-            f"bfs_distances frontier still expanding after {max_hops} "
-            f"hops; raise max_hops")
-    return out
+    return _reach(edges, sources, plus=False, max_hops=max_hops)
 
 
 def triangles(edges: DataFrame) -> DataFrame:

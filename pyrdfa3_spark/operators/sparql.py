@@ -36,8 +36,9 @@ misparses — outside it):
   ``^(p*)``, closure over alternatives, ...) — each operator compiles
   to the matching ``path_*`` virtual-predicate operator, nested
   operands materializing bottom-up into the working frame; a
-  top-level ``+``/``*`` with a constant subject or object walks from
-  that constant (``path_walk``); path operators on a variable
+  top-level ``+``/``*`` with a constant subject or object is searched
+  from that constant (``path_walk``: one collect of a small predicate
+  slice, then a BFS on the driver); path operators on a variable
   predicate raise.
 * ``ASK``, ``CONSTRUCT {template} WHERE {..}``, ``DESCRIBE <iri>...``.
 * Dataset clauses ``FROM <g>`` / ``FROM NAMED <g>`` on every query
@@ -1794,8 +1795,8 @@ def _expand_paths(triples: DataFrame, groups: list[dict],
     ``(p1/p2)+`` or ``^(p*)``) materialize bottom-up: each inner
     operand becomes a virtual edge set in the working frame before
     the outer operator closes over it.  A top-level ``+``/``*`` with
-    a constant endpoint walks from that constant instead
-    (``graphops.path_walk``)."""
+    a constant endpoint is searched from that constant instead
+    (``graphops.path_walk``, the reachability evaluator's BFS)."""
     counter = [0]
     # the frame passes through untouched unless a path materializes:
     # the matcher projects only the bound variables anyway
@@ -1835,17 +1836,13 @@ def _expand_paths(triples: DataFrame, groups: list[dict],
         else:
             inner = path[1] if isinstance(path[1], str) \
                 else materialize(path[1])
-            # a closure with a constant endpoint walks from it: one
-            # job per hop, touching only the nodes it reaches.  A
-            # closure with both ends free, or nested in another
-            # path, uses the doubling strategy: the query author
-            # can't pick per-call knobs here, and doubling's
-            # log2-depth rounds (2^20-deep graphs inside the default
-            # iteration budget) are the safe default for
-            # unknown-depth data (the walk falls back to it, filtered
-            # to its constant, past 20 hops or 1,000 reached nodes);
-            # operator-level callers who know their graph is shallow
-            # keep semi-naive's smaller joins
+            # a closure with a constant endpoint is a BFS from it
+            # (graphops._reach), at any depth.  A closure with both
+            # ends free, or nested in another path, uses the doubling
+            # strategy: the query author can't pick per-call knobs
+            # here, and doubling's log2-depth rounds (2^20-deep
+            # graphs inside the default iteration budget) are the
+            # safe default for unknown-depth data
             if start is not None and kind in ("plus", "star"):
                 edges = G.path_walk(work[0], inner, start[0], name,
                                     reverse=start[1],

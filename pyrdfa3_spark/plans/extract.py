@@ -295,19 +295,24 @@ def write_triples(triples: DataFrame, path: str, buckets: int = 16) -> None:
     (:func:`distribute_by_bucket`), so each write lands one file per
     ``conv_bucket=B`` directory, unless a bucket exceeds AQE's advisory
     partition size, which splits it into several files of about that
-    size.
+    size.  The files are in :func:`write_triple_files`' format."""
+    write_triple_files(distribute_by_bucket(triples, buckets), path,
+                       "conv_bucket")
 
-    Files are zstd-compressed and sorted by (subj, pred) within each
-    partition: subject-sorted row groups give parquet min/max statistics
-    that prune subject-lookup scans, and run-length/dictionary encoding
-    compresses the repeated IRIs far better than unsorted rows — both
-    matter at the 100 TB graph-table size."""
-    (distribute_by_bucket(triples, buckets)
-     .sortWithinPartitions("conv_bucket", "subj", "pred")
-     .write.mode("overwrite")
-     .option("compression", "zstd")
-     .partitionBy("conv_bucket")
-     .parquet(path))
+
+def write_triple_files(df: DataFrame, path: str,
+                       partition_col: str | None = None) -> None:
+    """The one writer of a bucketed triple table's file format, for
+    :func:`write_triples`, ``run_bucketed`` and
+    :func:`compact_triples_planned`: zstd parquet sorted by (subj,
+    pred) within each file.  Subject-sorted row groups give min/max
+    statistics that prune subject lookups, and run-length/dictionary
+    encoding compresses the repeated IRIs far better than unsorted
+    rows.  ``partition_col`` leads the sort and partitions the write."""
+    lead = [partition_col] if partition_col else []
+    w = (df.sortWithinPartitions(*lead, "subj", "pred")
+         .write.mode("overwrite").option("compression", "zstd"))
+    (w.partitionBy(partition_col) if partition_col else w).parquet(path)
 
 
 def _finish_compaction_swap(staging: str) -> bool:
@@ -419,11 +424,7 @@ def compact_triples_planned(spark, path: str,
         n_before = df.count()
         staging = os.path.join(
             path, f"{part}.bin{bin_}.{uuid.uuid4().hex[:8]}.compacting")
-        (df.coalesce(1)
-         .sortWithinPartitions("subj", "pred")
-         .write.mode("overwrite")
-         .option("compression", "zstd")
-         .parquet(staging))
+        write_triple_files(df.coalesce(1), staging)
         staged = [f for f in os.listdir(staging)
                   if f.endswith(".parquet") and not f.startswith(".")]
         n_after = spark.read.parquet(staging).count()

@@ -27,7 +27,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyrdfa3_spark.plans.extract import conv_bucket
+from pyrdfa3_spark.plans.extract import conv_bucket, write_triple_files
 
 
 def _manifest_dir(out_path: str) -> str:
@@ -121,7 +121,7 @@ def run_bucketed(transcripts: DataFrame, out_path: str,
             F.sum(F.hash("conv_id", "turn_idx")).alias("fp")).first()
         out = extract(slice_df)
         target = os.path.join(out_path, f"conv_bucket={b}")
-        out.write.mode("overwrite").parquet(target)
+        write_triple_files(out, target)
         n = transcripts.sparkSession.read.parquet(target).count()
         elapsed = round(time.time() - t0, 3)
         manifest = {

@@ -294,16 +294,50 @@ def test_items_and_connected(spark):
     assert not SparkGraph.empty(spark).connected()
 
 
-def test_transitive_objects_subjects(spark):
+def test_items_long_list_job_count(spark, tmp_path, reach_regimes):
+    """``items`` over a 30-cell rdf:List of a parquet-backed graph: the
+    members in order in every regime of the reachability evaluator,
+    and in 2 jobs when the rest slice fits on the driver (its collect,
+    then the rdf:first lookup), where a frame loop runs several jobs
+    per cell."""
+    rdf = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+    n = 30
+    rows = [(f"_:l{i}", rdf + "first", f"item{i % 7}") for i in range(n)]
+    rows += [(f"_:l{i}", rdf + "rest",
+              f"_:l{i + 1}" if i < n - 1 else rdf + "nil")
+             for i in range(n)]
+    spark.createDataFrame(rows + [("urn:s", "urn:p", "_:l0")],
+                          "subj string, pred string, obj string") \
+        .repartition(4).write.parquet(str(tmp_path / "list"))
+    g = SparkGraph(spark.read.parquet(str(tmp_path / "list")).cache())
+    g.df.count()
+    want = [(i, f"item{i % 7}") for i in range(n)]
+    sc = spark.sparkContext
+    for regime in reach_regimes():
+        group = f"items-{regime}"
+        sc.setJobGroup(group, "items job count")
+        try:
+            got = [(r["pos"], r["item"]) for r in g.items("_:l0").collect()]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert got == want, regime
+        if regime == "slice":
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert len(jobs) <= 2, len(jobs)
+    g.df.unpersist()
+
+
+def test_transitive_objects_subjects(spark, reach_regimes):
     g = SparkGraph(spark.createDataFrame(
         [("a", "up", "b"), ("b", "up", "c"), ("c", "up", "d"),
          ("x", "other", "a")], ["subj", "pred", "obj"]))
-    assert sorted(r["node"] for r in
-                  g.transitive_objects("b", "up").collect()) \
-        == ["b", "c", "d"]
-    assert sorted(r["node"] for r in
-                  g.transitive_subjects("up", "c").collect()) \
-        == ["a", "b", "c"]
+    for regime in reach_regimes():
+        assert sorted(r["node"] for r in
+                      g.transitive_objects("b", "up").collect()) \
+            == ["b", "c", "d"], regime
+        assert sorted(r["node"] for r in
+                      g.transitive_subjects("up", "c").collect()) \
+            == ["a", "b", "c"], regime
 
 
 def test_namespaces_survive_functional_ops(spark):

@@ -351,6 +351,38 @@ def test_checkpoint_resume(spark, tmp_path):
     assert m2["processed_buckets"] == [] and m2["skipped_buckets"] == [0, 1]
 
 
+def test_checkpoint_writes_triple_file_format(spark, tmp_path):
+    """``run_bucketed`` writes each ``conv_bucket=b`` directory in the
+    format ``write_triples`` and compaction write into that layout:
+    zstd-compressed parquet, rows sorted by (subj, pred) in each
+    file, as the file footers record."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from pyrdfa3_spark.sources.transcripts import synth_transcripts
+    from pyrdfa3_spark.streaming.checkpoint import run_bucketed
+
+    t = synth_transcripts(spark, n_conv=10, turns_per_conv=10,
+                          skew_factor=2)
+    out = str(tmp_path / "ckpt")
+    run_bucketed(t, out, n_buckets=2)
+    files = glob.glob(f"{out}/conv_bucket=*/*.parquet")
+    rows = 0
+    for f in files:
+        pf = pq.ParquetFile(f)
+        meta = pf.metadata
+        assert {meta.row_group(g).column(c).compression
+                for g in range(meta.num_row_groups)
+                for c in range(meta.num_columns)} == {"ZSTD"}, f
+        tab = pf.read(columns=["subj", "pred"])
+        keys = list(zip(tab.column("subj").to_pylist(),
+                        tab.column("pred").to_pylist()))
+        assert keys == sorted(keys), f
+        rows += len(keys)
+    assert rows > 0
+
+
 def test_checkpoint_stale_detection(spark, tmp_path):
     from pyrdfa3_spark.sources.transcripts import synth_transcripts
     from pyrdfa3_spark.streaming.checkpoint import run_bucketed, stale_buckets
@@ -1406,27 +1438,31 @@ def test_chunk_documents_reconstructs(spark):
         chunk_documents(docs, chunk_chars=10, overlap=10)
 
 
-def test_bfs_distances_deep_chain_and_convergence(spark):
+def test_bfs_distances_deep_chain_and_convergence(spark, reach_regimes):
+    """The same answers, and the same ``max_hops`` raise, in every
+    regime of the reachability evaluator."""
     from pyrdfa3_spark.operators.graphops import bfs_distances
 
     chain = [(f"a{i}", f"a{i + 1}") for i in range(30)]
     e = spark.createDataFrame(chain, ["src", "dst"])
-    out = {r["node"]: r["dist"]
-           for r in bfs_distances(e, ["a0"], max_hops=35).collect()}
-    assert out == {f"a{i}": i for i in range(31)}
+    for regime in reach_regimes():
+        out = {r["node"]: r["dist"]
+               for r in bfs_distances(e, ["a0"], max_hops=35).collect()}
+        assert out == {f"a{i}": i for i in range(31)}, regime
 
-    with pytest.raises(RuntimeError, match="max_hops"):
-        bfs_distances(e, ["a0"], max_hops=5)
+        with pytest.raises(RuntimeError, match="max_hops"):
+            bfs_distances(e, ["a0"], max_hops=5)
 
-    # multi-source: first reach wins = minimum distance over sources
-    out = {r["node"]: r["dist"]
-           for r in bfs_distances(e, ["a0", "a28"], max_hops=35).collect()}
-    assert out["a29"] == 1 and out["a30"] == 2 and out["a10"] == 10
+        # multi-source: first reach wins = minimum distance over sources
+        out = {r["node"]: r["dist"] for r in bfs_distances(
+            e, ["a0", "a28"], max_hops=35).collect()}
+        assert out["a29"] == 1 and out["a30"] == 2 and out["a10"] == 10, \
+            regime
 
-    # max_hops exactly reaching the last node must NOT raise
-    out = {r["node"]: r["dist"]
-           for r in bfs_distances(e, ["a27"], max_hops=3).collect()}
-    assert out == {"a27": 0, "a28": 1, "a29": 2, "a30": 3}
+        # max_hops exactly reaching the last node must NOT raise
+        out = {r["node"]: r["dist"]
+               for r in bfs_distances(e, ["a27"], max_hops=3).collect()}
+        assert out == {"a27": 0, "a28": 1, "a29": 2, "a30": 3}, regime
 
 
 def test_lm_perplexity_matches_python(spark):

@@ -153,7 +153,7 @@ def test_curation_mix_plans_scale_shape(spark):
     assert "Exchange" not in simple, simple
 
 
-def test_span_dsir_semdedup_plans_scale_shape(spark):
+def test_span_dsir_semdedup_plans_scale_shape(spark, monkeypatch):
     """duplicate_spans: in-row window hashing — exactly one Generate
     (the cross-document explode), partial aggregation, no window, no
     join.  dsir_weights: the bucket dims broadcast onto the corpus
@@ -206,13 +206,20 @@ def test_span_dsir_semdedup_plans_scale_shape(spark):
     assert "Exchange" not in simple, simple   # chunking never shuffles
     assert simple.count("Generate") == 1, simple
 
+    from pyrdfa3_spark.operators import graphops as G
     from pyrdfa3_spark.operators.graphops import bfs_distances
 
+    # no edge slice and no node fits on the driver, and the sources
+    # reach nodes: the plan is the frame loop's, not a LocalTableScan
+    # of a driver-side answer
+    monkeypatch.setattr(G, "_SLICE_ROWS", 0)
+    monkeypatch.setattr(G, "_WALK_MAX_NODES", 0)
     e = docs.selectExpr("CAST(doc_id AS string) AS src",
                         "CAST(doc_id % 7 AS string) AS dst")
-    simple = _plan(bfs_distances(e, ["1", "2"], max_hops=4),
+    simple = _plan(bfs_distances(e, ["8", "9"], max_hops=4),
                    mode="simple")
     assert "CartesianProduct" not in simple and "Window" not in simple
+    assert "LocalTableScan" not in simple, simple
 
 
 def test_ntriples_reader_plan_scan_side(spark, tmp_path):

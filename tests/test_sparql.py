@@ -3329,141 +3329,186 @@ def _cached(spark, path, rows, cols):
     return df
 
 
-def test_path_walk_matches_filtered_closure(spark, tmp_path):
-    """A ``+``/``*`` path with a constant subject or object walks from
-    the constant; its answers equal the free-end closure filtered to
-    that constant, on seeded graphs with cycles, self-loops, literal
-    objects and blank nodes — for single predicates, a sequence under
-    ``+``, both ends constant, and a constant start inside GRAPH <g>.
-    A ``*`` path from a constant also relates it to itself, whether or
-    not it is a graph term (SPARQL 1.1 §18.4), where the free-end
-    closure's zero-length pairs range over graph terms.  Path answers
-    are distinct, so the walk's rows compare as a sorted list."""
+def test_path_walk_matches_filtered_closure(spark, tmp_path,
+                                           reach_regimes):
+    """A ``+``/``*`` path with a constant subject or object is searched
+    from the constant; its answers equal the free-end closure filtered
+    to that constant, in every regime of the reachability evaluator,
+    on seeded graphs with cycles, self-loops, literal objects and
+    blank nodes — for single predicates, a sequence under ``+``, both
+    ends constant, a constant end inside GRAPH <g>, and a chain deeper
+    than 20 hops.  A ``*`` path from a constant also relates it to
+    itself, whether or not it is a graph term (SPARQL 1.1 §18.4),
+    where the free-end closure's zero-length pairs range over graph
+    terms.  Path answers are distinct, so the walk's rows compare as a
+    sorted list."""
     from pyrdfa3_spark.operators import graphops as G
 
     def from_const(pairs, path, c):
         return pairs | {(c, c)} if path.endswith("*") else pairs
 
+    def check_both_ways(frame, path, pairs, c, wrap="{}"):
+        """``<c> path ?y`` and ``?x path <c>``, each in ``wrap``."""
+        got = sorted(_rows(sparql(frame, "SELECT ?y WHERE { %s }" % (
+            wrap.format(f"<{c}> {path} ?y"),))))
+        assert got == sorted((y,) for x, y in pairs if x == c), (path, c)
+        got = sorted(_rows(sparql(frame, "SELECT ?x WHERE { %s }" % (
+            wrap.format(f"?x {path} <{c}>"),))))
+        assert got == sorted((x,) for x, y in pairs if y == c), (path, c)
+
+    graphs, chain = [], 25
     for seed in (1, 2):
-        quads = _walk_graph(seed)
-        qs = _cached(spark, tmp_path / f"q{seed}", quads,
+        qs = _cached(spark, tmp_path / f"q{seed}", _walk_graph(seed),
                      ["subj", "pred", "obj", "graph"])
         kg = qs.drop("graph")
-        # n0: on a self-loop; n1: on a cycle; n99: in no triple
-        consts = ["n0", "n1", "n99"]
-        for path in ("<p:a>+", "<p:a>*", "(<p:a>/<p:b>)+"):
-            free = _closure_pairs(kg, path)
-            for c in consts:
-                pairs = from_const(free, path, c)
-                got = sorted(_rows(sparql(
-                    kg, f"SELECT ?y WHERE {{ <{c}> {path} ?y }}")))
-                assert got == sorted((y,) for x, y in pairs if x == c), \
-                    (seed, path, c)
-                got = sorted(_rows(sparql(
-                    kg, f"SELECT ?x WHERE {{ ?x {path} <{c}> }}")))
-                assert got == sorted((x,) for x, y in pairs if y == c), \
-                    (seed, path, c)
-            pairs = from_const(free, path, "L0")
-            # a literal as the constant object
-            got = sorted(_rows(sparql(
-                kg, f'SELECT ?x WHERE {{ ?x {path} "L0" }}')))
-            assert got == sorted((x,) for x, y in pairs if y == "L0"), \
-                (seed, path)
-        # both ends constant: the walk from the subject is distinct,
-        # and the ground path pattern asks whether it reached the object
-        pairs = _closure_pairs(kg, "<p:a>+")
-        for s in consts:
-            reached = [r.obj for r in G.path_walk(
-                kg, "p:a", s, "\x00path1").collect()]
-            assert len(reached) == len(set(reached)), (seed, s)
-            for o in consts + ["L0"]:
-                obj = '"L0"' if o == "L0" else f"<{o}>"
-                got = _rows(sparql(kg, f"ASK {{ <{s}> <p:a>+ {obj} }}"))
-                assert got == [((s, o) in pairs,)], (seed, s, o)
-        # a constant start inside GRAPH <g1>: only g1's edges count
         g1 = qs.filter("graph = 'g1'").drop("graph")
-        for path in ("<p:a>+", "<p:a>*"):
-            free = _closure_pairs(g1, path)
-            for c in consts:
-                pairs = from_const(free, path, c)
+        # the free-end closures no constant steers, computed once
+        free = {path: _closure_pairs(kg, path)
+                for path in ("<p:a>+", "<p:a>*", "(<p:a>/<p:b>)+")}
+        free_g1 = {path: _closure_pairs(g1, path)
+                   for path in ("<p:a>+", "<p:a>*")}
+        graphs.append((seed, qs, kg, free, free_g1))
+    deep = _cached(spark, tmp_path / "deep",
+                   [(f"c{i}", "p:a", f"c{i + 1}") for i in range(chain)],
+                   ["subj", "pred", "obj"])
+    deep_free = {path: _closure_pairs(deep, path)
+                 for path in ("<p:a>+", "<p:a>*")}
+    # n0: on a self-loop; n1: on a cycle; n99: in no triple
+    consts = ["n0", "n1", "n99"]
+    for regime in reach_regimes():
+        for seed, qs, kg, free, free_g1 in graphs:
+            for path, closed in free.items():
+                for c in consts:
+                    check_both_ways(kg, path, from_const(closed, path, c),
+                                    c)
+                pairs = from_const(closed, path, "L0")
+                # a literal as the constant object
                 got = sorted(_rows(sparql(
-                    qs, f"SELECT ?y WHERE {{ GRAPH <g1> "
-                        f"{{ <{c}> {path} ?y }} }}")))
-                assert got == sorted((y,) for x, y in pairs if x == c), \
-                    (seed, path, c)
+                    kg, f'SELECT ?x WHERE {{ ?x {path} "L0" }}')))
+                assert got == sorted(
+                    (x,) for x, y in pairs if y == "L0"), (regime, seed)
+            # both ends constant: the walk from the subject is
+            # distinct, and the ground path pattern asks whether it
+            # reached the object
+            pairs = free["<p:a>+"]
+            for s in consts:
+                reached = [r.obj for r in G.path_walk(
+                    kg, "p:a", s, "\x00path1").collect()]
+                assert len(reached) == len(set(reached)), (regime, s)
+                for o in consts + ["L0"]:
+                    obj = '"L0"' if o == "L0" else f"<{o}>"
+                    got = _rows(sparql(kg, f"ASK {{ <{s}> <p:a>+ {obj} }}"))
+                    assert got == [((s, o) in pairs,)], (regime, s, o)
+            # a constant end inside GRAPH <g1>: only g1's edges count
+            for path, closed in free_g1.items():
+                for c in consts:
+                    check_both_ways(qs, path, from_const(closed, path, c),
+                                    c, wrap="GRAPH <g1> {{ {} }}")
+        # a chain deeper than 20 hops, from each end and the middle
+        for path, closed in deep_free.items():
+            for c in ("c0", "c12", f"c{chain}", "n99"):
+                check_both_ways(deep, path, from_const(closed, path, c), c)
+    for _, qs, *_ in graphs:
         qs.unpersist()
+    deep.unpersist()
 
 
-def test_path_walk_deep_chain_falls_back(spark, tmp_path):
-    """A constant start on a chain deeper than the walk's 20 rounds
-    falls back to the doubling closure filtered to the start and
-    still answers every hop."""
+def test_path_walk_deep_chain_falls_back(spark, tmp_path, monkeypatch):
+    """A chain too large for the driver-side slice is walked one job
+    per hop with no round budget, and never by the frame loop.  Once
+    the walk has reached more than ``_WALK_MAX_NODES`` nodes it falls
+    back to the frame loop, restarted from the start, and still
+    answers every hop."""
+    from pyrdfa3_spark.operators import graphops as G
+
     n = 60
     t = _cached(spark, tmp_path / "chain",
                 [(f"n{i}", "p:next", f"n{i+1}") for i in range(n - 1)],
                 ["subj", "pred", "obj"])
+    frames = []
+    real = G._reach_frames
+    monkeypatch.setattr(G, "_reach_frames", lambda *a: (
+        frames.append(a[1]), real(*a))[1])
+    monkeypatch.setattr(G, "_SLICE_ROWS", 0)
+    edges = t.selectExpr("subj AS src", "obj AS dst")
+    sc = spark.sparkContext
+    sc.setJobGroup("deep-walk", "walk job count")
+    try:
+        dist = {r.node: r.dist for r in G._reach(edges, ["n0"], True)
+                .collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert dist == {f"n{i}": i for i in range(1, n)}
+    # the slice probe, one job per hop (n - 1), one for the empty
+    # last hop
+    jobs = sc.statusTracker().getJobIdsForGroup("deep-walk")
+    assert len(jobs) <= n + 1, len(jobs)
+    assert frames == []
+    monkeypatch.setattr(G, "_WALK_MAX_NODES", 30)
     out = _rows(sparql(t, "SELECT ?o WHERE { <n0> p:next+ ?o }"))
     assert sorted(out) == sorted((f"n{i}",) for i in range(1, n))
     back = _rows(sparql(t, f"SELECT ?s WHERE {{ ?s p:next* <n{n-1}> }}"))
     assert len(back) == n
+    assert frames == [["n0"], [f"n{n-1}"]]
     t.unpersist()
 
 
 def test_path_walk_wide_fan_out_falls_back(spark, tmp_path, monkeypatch):
-    """A constant start that reaches more nodes than the walk's node
-    budget falls back to the closure filtered to the start, walking
-    forward or backward, and still answers every node; a start that
-    reaches fewer stays a walk."""
+    """A constant start whose edge slice does not fit on the driver and
+    that reaches more nodes than the walk's node budget falls back to
+    the frame loop, walking forward or backward, and still answers
+    every node; a start that reaches fewer stays a walk, and with the
+    slice budget back every start is searched on the driver."""
     from pyrdfa3_spark.operators import graphops as G
 
+    frames = []
+    real = G._reach_frames
+    monkeypatch.setattr(G, "_reach_frames", lambda *a: (
+        frames.append(a[1]), real(*a))[1])
+    monkeypatch.setattr(G, "_SLICE_ROWS", 0)
     monkeypatch.setattr(G, "_WALK_MAX_NODES", 5)
-    closures = []
-    closure = G.path_closure
-    monkeypatch.setattr(G, "path_closure", lambda *a, **k: (
-        closures.append(a[1]), closure(*a, **k))[1])
     fan = [f"n{i}" for i in range(10)]
     t = _cached(spark, tmp_path / "fan",
                 [("hub", "p:k", n) for n in fan]
                 + [(n, "p:k", "sink") for n in fan],
                 ["subj", "pred", "obj"])
-    out = _rows(sparql(t, "SELECT ?b WHERE { <hub> p:k+ ?b }"))
-    assert sorted(out) == sorted((n,) for n in fan + ["sink"])
+    want = sorted((n,) for n in fan + ["sink"])
+    assert sorted(_rows(sparql(t, "SELECT ?b WHERE { <hub> p:k+ ?b }"))) \
+        == want
     back = _rows(sparql(t, "SELECT ?a WHERE { ?a p:k* <sink> }"))
     assert sorted(back) == sorted((n,) for n in fan + ["hub", "sink"])
-    assert closures == ["p:k", "p:k"]
+    assert frames == [["hub"], ["sink"]]
     assert _rows(sparql(t, "SELECT ?b WHERE { <n0> p:k+ ?b }")) \
         == [("sink",)]
-    assert closures == ["p:k", "p:k"]
+    assert len(frames) == 2
+    monkeypatch.setattr(G, "_SLICE_ROWS", 100)
+    assert sorted(_rows(sparql(t, "SELECT ?b WHERE { <hub> p:k+ ?b }"))) \
+        == want
+    assert len(frames) == 2
     t.unpersist()
 
 
-def test_path_walk_runs_one_job_per_hop(spark, tmp_path):
-    """A bound ``+`` runs one job per hop of the walk plus one for the
-    answer — at most (eccentricity of the seed + 2) jobs, where the
-    whole-predicate closure runs several per doubling round."""
-    edges = [("s", "n1"), ("n1", "n2"), ("n2", "n3"), ("n3", "n1"),
-             ("n2", "n4"), ("x", "y"), ("y", "x")]
+def test_bound_path_deep_chain_job_count(spark, tmp_path):
+    """A bound ``+`` over a 200-hop chain collects the predicate's
+    slice once and searches it on the driver: at most 3 jobs with the
+    answer, where a walk or a closure runs one or more per hop (the
+    walk's one job per hop is gated in
+    ``test_path_walk_deep_chain_falls_back``)."""
+    n = 200
     kg = _cached(spark, tmp_path / "kg",
-                 [(a, "p:k", b) for a, b in edges] + [("s", "p:name", "S")],
+                 [(f"c{i}", "p:k", f"c{i + 1}") for i in range(n)]
+                 + [(f"c{i}", "p:name", f"C{i}") for i in range(n)],
                  ["subj", "pred", "obj"])
-    # hops from s to its farthest reachable node (here 3, to n4)
-    dist, layer, d = {}, {"s"}, 0
-    while layer:
-        d += 1
-        layer = {b for a, b in edges if a in layer} - set(dist)
-        dist.update({b: d for b in layer})
-    ecc = max(dist.values())
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group = "path-walk-jobs"
+    group = "deep-chain-jobs"
     sc.setJobGroup(group, "bound path job count")
     try:
-        out = _rows(sparql(kg, "SELECT ?b WHERE { <s> p:k+ ?b }"))
+        out = _rows(sparql(kg, "SELECT ?b WHERE { <c0> p:k+ ?b }"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sorted(out) == [("n1",), ("n2",), ("n3",), ("n4",)]
-    jobs = tracker.getJobIdsForGroup(group)
-    assert len(jobs) <= ecc + 2, (len(jobs), ecc)
+    assert sorted(out) == sorted((f"c{i}",) for i in range(1, n + 1))
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 3, len(jobs)
     kg.unpersist()
 
 
@@ -3497,7 +3542,7 @@ def test_ground_patterns_evaluate(spark, kg):
 def test_zero_length_path_from_constant_returns_it(kg, monkeypatch):
     """``<c> p* ?x`` binds ``?x`` to ``c`` itself, once, even when ``c``
     is no term of the graph (SPARQL 1.1 §18.4), forward and reversed,
-    and also when the walk falls back to the closure."""
+    and also when the search falls back to the frame loop."""
     from pyrdfa3_spark.operators import graphops as G
 
     assert _rows(sparql(kg, "SELECT ?b WHERE { <urn:zz> p:knows* ?b }")) \
@@ -3506,8 +3551,9 @@ def test_zero_length_path_from_constant_returns_it(kg, monkeypatch):
         == [("urn:zz",)]
     assert sorted(_rows(sparql(kg, "SELECT ?b WHERE { <a> p:knows* ?b }"))) \
         == [("a",), ("b",), ("c",)]
-    # node budget 0: every start that reaches a node falls back; c is
-    # on a self-loop, so the closure holds (c, c) as well
+    # no slice and no node fits: every start that reaches a node is
+    # searched by the frame loop; c is on a self-loop
+    monkeypatch.setattr(G, "_SLICE_ROWS", 0)
     monkeypatch.setattr(G, "_WALK_MAX_NODES", 0)
     assert sorted(_rows(sparql(kg, "SELECT ?b WHERE { <b> p:knows* ?b }"))) \
         == [("b",), ("c",)]
